@@ -63,10 +63,10 @@ object Verify {
     // default matches the verification driver's local[32]: outputs that
     // are parallelism-sensitive (sketch estimates, partial-agg merge
     // order) must fail HERE, in the builder's loop, not at the driver
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.core.Cpus.fromEnv(32)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -122,8 +122,8 @@ object Layout {
     * 8-bit lanes (vs uniform's 16) keep the when-tree small — 256
     * equi-depth buckets discriminate better on skew than 65536
     * uniform ones. Strings keep their hash lane. Layout choice never
-    * changes results; ZRankProbe + SCALE_SLOPE measure the pruning
-    * delta. */
+    * changes results; SCALE_SLOPE.md "Round 10 — equi-depth Z-order
+    * buckets" measures the pruning delta. */
   def zValueForRanked(df: DataFrame, zcols: Seq[String],
       bits: Int = 8): Column = {
     import org.apache.spark.sql.types.StringType
@@ -166,8 +166,8 @@ object Layout {
     * is measurably skewed — interquartile span coverage below
     * `rankedBelow` — in which case equi-depth buckets take over
     * (uniform buckets on such a column collapse the dense region into
-    * one bucket; ZRankProbe measured 62/64 vs 24/64 files read). The
-    * 0.05 default keeps bell-shaped data (~0.2) on the cheaper
+    * one bucket; SCALE_SLOPE r10 measured 62/64 vs 24/64 files
+    * read). The 0.05 default keeps bell-shaped data (~0.2) on the cheaper
     * uniform path and flags only genuine heavy tails. Returns the
     * choice so callers and specs can assert WHICH layout was
     * written. */
@@ -248,21 +248,12 @@ object Layout {
     }
   }
 
-  /** One footer open per file, [min,max] extracted for EVERY column in
-    * `columns` that the footer has integer-comparable stats for — the
-    * commit-time stats pass of [[TxnTable]] (stats computed once when a
-    * file is written, then carried in the manifest; columns without
-    * usable footer stats are simply absent from the map). */
-  def multiStatsForFiles(spark: org.apache.spark.sql.SparkSession,
-      paths: Seq[String], columns: Seq[String])
-      : Seq[(String, Map[String, (Long, Long)])] =
-    multiStatsWithRows(spark, paths, columns)
-      .map { case (p, _, st) => (p, st) }
-
   /** One footer read per file yields BOTH the per-column [min,max]
-    * stats and the exact ROW COUNT (the footer carries it for free) —
-    * rows ride the manifest so `COUNT(*)`-grade questions become a
-    * manifest read, never a scan. */
+    * stats (columns without integer-comparable footer stats are absent
+    * from the map) and the exact ROW COUNT (the footer carries it for
+    * free) — the commit-time stats pass of [[TxnTable]]: both ride the
+    * manifest, so `COUNT(*)`-grade questions become a manifest read,
+    * never a scan. */
   def multiStatsWithRows(spark: org.apache.spark.sql.SparkSession,
       paths: Seq[String], columns: Seq[String])
       : Seq[(String, Long, Map[String, (Long, Long)])] = {

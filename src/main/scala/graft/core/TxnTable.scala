@@ -84,7 +84,7 @@ object TxnTable {
 
   private def fileOf(dir: String, name: String) = new java.io.File(dir, name)
 
-  // ---- I/O-shape seams (tools/DeltaManifestProbe counts these): on an
+  // ---- I/O-shape seams (SCALE_SLOPE r14/r15 count these): on an
   // object store a directory LIST is paged (10+ round trips at 10⁴
   // keys) while an exists() probe / header GET is one — the metadata
   // read path is designed so the hot paths pay probes, never LISTs,
@@ -1487,7 +1487,7 @@ object TxnTable {
     val (a, r) =
       if (schemaCarrier.schema.map(_.dataType.defaultSize).sum
           < DigestDiffMinRowBytes) (add, rem)
-      else digestPrune(schemaCarrier, add, rem)
+      else digestPrune(add, rem)
     a.exceptAll(r).withColumn("_change_type", lit("insert"))
       .unionByName(r.exceptAll(a).withColumn("_change_type",
         lit("delete")))
@@ -1515,25 +1515,27 @@ object TxnTable {
     * — at 2⁻⁹⁶ per pair that is beyond any non-adversarial corpus
     * (the dd11/pp01 md5-digest discipline); collisions among the KEPT
     * digests merely add rows to the exact residual pass and cannot
-    * change the result. */
-  private def digestPrune(carrier: DataFrame, add: DataFrame,
+    * change the result. The two digest columns take a prefix no data
+    * column starts with, so a user column named `_rd1` cannot collide. */
+  private def digestPrune(add: DataFrame,
       rem: DataFrame): (DataFrame, DataFrame) = {
-    val dataCols = carrier.schema.map(f => col(f.name))
+    val dataCols = add.columns.toSeq.map(col)
+    val pfx = Iterator.iterate("_rd")("_" + _).find(p =>
+      !add.columns.exists(_.toLowerCase.startsWith(p))).get
+    val digs = Seq(pfx + "1", pfx + "2")
     def withDig(df: DataFrame): DataFrame = df.select(dataCols
-      :+ xxhash64(dataCols: _*).as("_rd1")
-      :+ hash(dataCols: _*).as("_rd2"): _*)
+      :+ xxhash64(dataCols: _*).as(digs(0))
+      :+ hash(dataCols: _*).as(digs(1)): _*)
     def digCounts(df: DataFrame, as: String): DataFrame =
-      withDig(df).groupBy("_rd1", "_rd2")
-        .agg(count(lit(1)).as(as))
+      withDig(df).groupBy(digs.map(col): _*).agg(count(lit(1)).as(as))
     val hot = digCounts(add, "_ca")
-      .join(digCounts(rem, "_cr"), Seq("_rd1", "_rd2"), "full_outer")
+      .join(digCounts(rem, "_cr"), digs, "full_outer")
       .filter(coalesce(col("_ca"), lit(0L))
         =!= coalesce(col("_cr"), lit(0L)))
-      .select("_rd1", "_rd2")
+      .select(digs.map(col): _*)
     // the hot set is O(net change): broadcast it into both side scans
     def keep(df: DataFrame): DataFrame = withDig(df)
-      .join(broadcast(hot), Seq("_rd1", "_rd2"), "left_semi")
-      .select(dataCols: _*)
+      .join(broadcast(hot), digs, "left_semi").select(dataCols: _*)
     (keep(add), keep(rem))
   }
 

@@ -75,10 +75,10 @@ object KeyShip {
   }
 
   /** The Bloom sizing/decline decision, PURE (unit-tested in
-    * PlanShapeSpec; measured against the real crossover by
-    * tools/BloomCross → SCALE_SLOPE r11). Inputs: `n` distinct keys,
-    * and — when the caller has one (a manifest row count, a CostModel
-    * estimate) — the fact-side row count the probe would run over.
+    * PlanShapeSpec; measured against the real crossover in
+    * SCALE_SLOPE r11). Inputs: `n` distinct keys, and — when the
+    * caller has one (a manifest row count, a CostModel estimate) — the
+    * fact-side row count the probe would run over.
     *
     *  - BITSET SIZE `m`: n·bitsPerKey bits, floored at 240. The CAP
     *    scales with the fact: pruning an F-row scan is worth a bitset
@@ -106,10 +106,10 @@ object KeyShip {
     *    every fact row a probe and saves almost nothing downstream.
     *  - DECLINE on 8·n > F·(1−fpp): building the bitset costs a
     *    distributed pass + grouped aggregate over n keys, which the
-    *    tools/BloomCross sweep measured at ~8× the per-row cost of
+    *    SCALE_SLOPE r11 sweep measured at ~8× the per-row cost of
     *    the fact shuffle it saves (local[32]): forced bloom LOSES at
     *    F/n = 5 (F=50M, n=10M: 0.83×) and F/n = 2 (F=5M, n=2.5M:
-    *    0.46×) even at fpp 5%, and WINS at F/n = 25 (r10 BloomProf,
+    *    0.46×) even at fpp 5%, and WINS at F/n = 25 (SCALE_SLOPE r10,
     *    1.14-1.32×) — so the carrier needs the savings to outrun the
     *    build by that margin, not merely exceed it. On a
     *    network-shuffle cluster the saved bytes are real I/O and the

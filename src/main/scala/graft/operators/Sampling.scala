@@ -378,7 +378,7 @@ object Sampling {
   /** sp12 — bucket-aware curation (the decision step CCNet bolts onto
     * its head/middle/tail split, Wenzek et al. 2020: keep the head,
     * sample the middle, drop most of the tail): tx17's per-doc quality
-    * buckets ([[TextOps.qualityBucketedFrom]]) join a 3-row broadcast
+    * buckets ([[TextOps.qualityBucketedScored]]) join a 3-row broadcast
     * rate table (head 100% / middle 50% / tail 10%), each doc draws
     * its deterministic salted-md5 uniform (sp02's replayable-draw
     * discipline — same doc, same verdict, on any cluster and in any

@@ -835,7 +835,7 @@ object Similarity {
     * the map-side-combining top-k aggregate. nprobe=k degenerates to
     * exact flat search; nprobe=1 is the fastest/lowest-recall point.
     * The measured trade curve at 8M vectors is recorded in
-    * SCALE_SLOPE (tools/IvfRecallProbe). */
+    * SCALE_SLOPE round 12, "ANN serve-quality curve". */
   private[graft] def ivfServe(s: SparkSession, layout: String,
       queryIds: Seq[Long], nprobe: Int, topK: Int): DataFrame = {
     require(queryIds.nonEmpty, "at least one query vec_id required")
@@ -2283,13 +2283,6 @@ object Similarity {
   private[graft] def dbgAssignHier(v: DataFrame, k: Int): DataFrame = {
     val cents = seedCents(v, k)
     v.select(col("vec_id"), hierCidCol(cents, col("embedding")).as("cid"))
-  }
-
-  /** Flat twin of [[dbgAssignHier]]: the exact full-argmin assignment
-    * projection (O(n·k·dim)), for ScaleSlope's production-k probe. */
-  private[graft] def dbgAssignFlat(v: DataFrame, k: Int): DataFrame = {
-    val cents = seedCents(v, k)
-    v.select(col("vec_id"), nearestCidCol(cents, col("embedding")).as("cid"))
   }
 
   /** Seed centers: the first-k vectors (sim06's flat-quantizer

@@ -413,9 +413,9 @@ object TextOps {
     * only, a vocab-bounded state re-aggregate, and the map-only
     * corpus rewrite — every corpus-sized pass shrinks with the hit
     * fraction as training proceeds, which is exactly the measured
-    * slope (tools/BpeProbe, SCALE_SLOPE). The piece count needs no
-    * corpus aggregate either: each document's pair count is its piece
-    * count minus one, so Σ(delta) IS the round's piece-count change.
+    * slope (SCALE_SLOPE r13). The piece count needs no corpus
+    * aggregate either: each document's pair count is its piece count
+    * minus one, so Σ(delta) IS the round's piece-count change.
     * Output is row-for-row identical to the reference loop
     * (TextOpsSpec parity). `onRound` is the probe hook (round,
     * hit-doc share is implicit in the timing it records). */
@@ -618,7 +618,7 @@ object TextOps {
     * disk holds ≤1 corpus copy plus the one being written.
     *
     * CADENCE, TWO-TIER: a state commit used to be dominated by the
-    * corpus rewrite (~1.25 s measured at sf0.1, BpeProbe) against
+    * corpus rewrite (~1.25 s at sf0.1, SCALE_SLOPE r15) against
     * ~0.8-1.0 s steady rounds — and at a 100 TB corpus every such
     * commit is a full-corpus write. Checkpoints are now LIGHT by
     * default (counts + merge list, O(pair vocabulary) — the corpus
@@ -628,7 +628,7 @@ object TextOps {
     * anchor always exists) bounding the replay to corpusEvery ×
     * checkpointEvery × m merges. Defaults: every 32 rounds, corpus
     * every 4th checkpoint — the common-case commit drops from
-    * O(corpus) to O(vocab), measured in BpeProbe / SCALE_SLOPE. */
+    * O(corpus) to O(vocab), measured in SCALE_SLOPE r16. */
   private[graft] def bpeMergesBatched(s: SparkSession, d: String,
       k: Int, m: Int, onRound: (Int, Int) => Unit = (_, _) => (),
       stateDir: Option[String] = None, checkpointEvery: Int = 32,
@@ -1123,7 +1123,12 @@ object TextOps {
       .orderBy("lang", "bucket")
 
   /** Per-doc quality-bucket frame (doc_id, lang, fluency, bucket) —
-    * tx17's rollup input, reused by sp12's bucket-aware curation.
+    * tx17's rollup input, reused by sp12's bucket-aware curation —
+    * over an already-scored (doc_id, lang, fluency) frame. Session
+    * entry points pass the memoized [[fluencyLang]] frame so the
+    * double reference (bounds aggregate + bucketing join) reads ONE
+    * cached intermediate instead of re-running the bigram pipeline
+    * twice.
     *
     * `boundsExact = true` (the oracle path) computes the quartile
     * boundaries with the exact `percentile` — a per-language sort,
@@ -1137,17 +1142,6 @@ object TextOps {
     * (PipelineOpsSpec pins the A/B agreement). Everything downstream —
     * the broadcast bounds join, the CASE, sp12's curation — is
     * byte-identical between the two paths. */
-  private[operators] def qualityBucketedFrom(docs: DataFrame,
-      boundsExact: Boolean = true): DataFrame =
-    qualityBucketedScored(txBigramFluencyFrom(docs)
-      .join(docs.select("doc_id", "lang"), "doc_id")
-      .select("doc_id", "lang", "fluency"), boundsExact)
-
-  /** The bucketing tail over an already-scored (doc_id, lang, fluency)
-    * frame — session entry points pass the memoized [[fluencyLang]]
-    * frame so the double reference (bounds aggregate + bucketing join)
-    * reads ONE cached intermediate instead of re-running the bigram
-    * pipeline twice. */
   private[operators] def qualityBucketedScored(scored: DataFrame,
       boundsExact: Boolean): DataFrame = {
     val qs = array(lit(0.25), lit(0.75))

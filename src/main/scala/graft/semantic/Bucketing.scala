@@ -109,10 +109,5 @@ object Bucketing {
           }
         }
       }
-
-    /** Resolve + select in one step: the cube revision the request
-      * should run against. */
-    def cubeFor(cube: String, params: BucketParams): Either[String, graft.semantic.model.CubeDef] =
-      select(cube, params).flatMap(s => registry.cube(cube, Some(s.revision)))
   }
 }

@@ -64,12 +64,8 @@ object model {
     def format: String
     /** One grain step. */
     def step: java.time.Duration
-    private lazy val fmt =
-      java.time.format.DateTimeFormatter.ofPattern(format)
     /** Parse a request filter bound at this grain's precision. */
     def parseLocal(s: String): java.time.LocalDateTime
-    /** Render an instant back at this grain (inverse of parseLocal). */
-    def renderLocal(t: java.time.LocalDateTime): String = fmt.format(t)
     /** The next instant at this grain (exclusive upper bound of a
       * Between whose `to` is `t`). */
     def next(t: java.time.LocalDateTime): java.time.LocalDateTime = t.plus(step)
@@ -111,7 +107,6 @@ object model {
         * column side. Declare via [[StaticMapping.int]]. */
       numericKeys: Boolean = false) {
     lazy val toStorage: Map[String, String] = toDisplay.map(_.swap)
-    def isUnique: Boolean = toStorage.size == toDisplay.size
     /** Storage key as the literal value to compare the physical column
       * against: Long for int-keyed mappings, String otherwise. */
     def storageLit(s: String): Any = if (numericKeys) s.toLong else s

@@ -95,10 +95,10 @@ object CorpusFuzz {
     val seeds =
       if (args.length > 1) args.drop(1).map(_.toInt).toSeq
       else (1 to 20)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = graft.core.Cpus.fromEnv(8)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -56,10 +56,10 @@ object GenSkew {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("data/sf1skew")
     val src = "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    val cpus = graft.core.Cpus.fromEnv(16)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -6,17 +6,19 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 /** Per-query job/stage/task accounting (dev tool): run named queries
   * (cold, caches dropped like Bench's timed passes) under a listener
   * that counts jobs, stages and tasks and sums executor task time —
-  * wall seconds far above summed-task-seconds/32 means the query is
+  * wall seconds far above summed-task-seconds/cores means the query is
   * FIXED-OVERHEAD bound (job submit/commit round-trips, planning,
   * driver-side work), not compute bound; a high task count with tiny
   * per-task time means partition-count overhead.
   *
-  * Usage: runMain graft.tools.JobProf <query> [query ...]
+  * Usage: runMain graft.tools.JobProf <query> [query ...] (cores:
+  * SPARK_GRAFT_CPUS, default 32; data: QT_DIR)
   */
 object JobProf {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cpus = graft.core.Cpus.fromEnv(32)
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.local.dir",
         graft.core.TempDirs.scratchShared("spark-local"))
       .config("spark.ui.enabled", "false").getOrCreate()

@@ -15,10 +15,9 @@ object PlanDump {
     val outDir = args.headOption.getOrElse(
       sys.error("usage: PlanDump <outDir> <tag> [query ...]"))
     val tag = args.lift(1).getOrElse("before")
-    val spark = SparkSession.builder().master(
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val cpus = graft.core.Cpus.fromEnv(32)
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val d = sys.env.getOrElse("QT_DIR", "/root/testdata/sf0.1")

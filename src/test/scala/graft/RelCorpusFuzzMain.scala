@@ -16,7 +16,7 @@ import graft.tools.RelCorpusGen
 object RelCorpusFuzzMain {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(40)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    val cpus = graft.core.Cpus.fromEnv(16)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", "8")

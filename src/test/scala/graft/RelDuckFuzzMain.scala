@@ -159,7 +159,7 @@ object RelDuckFuzzMain {
     val outRoot = args.headOption.getOrElse("target/relduck")
     val seeds =
       if (args.length > 1) args.drop(1).map(_.toInt).toSeq else (1 to 12)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = graft.core.Cpus.fromEnv(8)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", "8")

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.TxnTable
 
@@ -411,6 +411,91 @@ class TxnTableSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(!nplan.contains("xxhash64"),
       s"narrow schema must stay on the direct exceptAll path:\n$nplan")
+  }
+
+  /** The multiset difference `a − b` of two collected snapshots: what
+    * the direct exceptAll path computes, done on the driver. */
+  private def minus(a: Seq[Row], b: Seq[Row]): Map[Row, Int] = {
+    val nb = b.groupBy(identity).map { case (r, rs) => r -> rs.size }
+    a.groupBy(identity).map { case (r, rs) =>
+      r -> (rs.size - nb.getOrElse(r, 0)) }.filter(_._2 > 0)
+  }
+
+  /** `changes(fromV = 1)`, executed, against the snapshot multiset
+    * difference. */
+  private def assertChangesMatchSnapshots(dir: String): DataFrame = {
+    val ch = TxnTable.changes(spark, dir, fromV = 1)
+    val byType = ch.collect().toSeq.groupBy(_.getAs[String]("_change_type"))
+    val v1 = TxnTable.read(spark, dir, v = 1).collect().toSeq
+    val vn = TxnTable.read(spark, dir).collect().toSeq
+    def side(t: String) = byType.getOrElse(t, Nil)
+      .map(r => Row.fromSeq(r.toSeq.init))
+      .groupBy(identity).map { case (r, rs) => r -> rs.size }
+    assert(side("insert") == minus(vn, v1), "inserts != snapshot diff")
+    assert(side("delete") == minus(v1, vn), "deletes != snapshot diff")
+    ch
+  }
+
+  /** 4000 rows of 8 longs + a string (≈ 84 estimated bytes/row, over
+    * the digest gate) plus `extra` columns; v2 deletes 2 keys, v3
+    * upserts `upserted` keys with new payloads. */
+  private def wideTable(tag: String, upserted: Seq[Long],
+      extra: Seq[Column] = Nil): String = {
+    import spark.implicits._
+    def cols(k: Column, p: Int => Column, t: Column) =
+      (k.as("k") +: (1 to 7).map(i => p(i).as(s"p$i")) :+ t.as("tag")) ++
+        extra
+    val dir = graft.core.TempDirs.scratchShared(tag)
+    TxnTable.init(spark, dir, (0L until 4000L).toDF("k")
+      .select(cols(col("k"), col("k") * _,
+        concat(lit("row-"), col("k"))): _*)
+      .repartitionByRange(8, col("k")).sortWithinPartitions("k"),
+      numFiles = 0, statsCols = Seq("k"))
+    TxnTable.deleteKeys(spark, dir, "k", Seq(1500L, 1501L))
+    TxnTable.upsert(spark, dir, "k", upserted.toDF("k")
+      .select(cols(col("k"), i => lit(-i.toLong), lit("upserted")): _*))
+    dir
+  }
+
+  test("changes() digest pre-pass broadcasts the hot set of a small " +
+      "change: no full-width exchange on the data side of the semi-join") {
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      SortMergeJoinExec}
+    object H extends AdaptiveSparkPlanHelper
+    val dir = wideTable("txndigestbcast", Seq(200L, 77777L))
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.get(key)
+    // at the default threshold, and at one below the planner's estimate
+    // of the hot set (≈ the digest aggregates of the rewritten files, so
+    // a large rewrite with a small net change looks like this)
+    for (threshold <- Seq(prior, "1024")) {
+      spark.conf.set(key, threshold)
+      try {
+        val plan = assertChangesMatchSnapshots(dir).queryExecution.executedPlan
+        val semis = H.collect(plan) {
+          case j: BroadcastHashJoinExec if j.joinType == LeftSemi => j }
+        assert(semis.nonEmpty, s"hot set not broadcast at $threshold:\n$plan")
+        assert(H.collect(plan) {
+            case j: SortMergeJoinExec if j.joinType == LeftSemi => j }.isEmpty,
+          s"digest semi-join sort-merged at $threshold:\n$plan")
+        semis.foreach(j => assert(
+          H.collect(j.left) { case e: ShuffleExchangeLike => e }.isEmpty,
+          s"data side shuffled before the semi-join at $threshold:\n$plan"))
+      } finally spark.conf.set(key, prior)
+    }
+  }
+
+  test("changes() digest pre-pass on a wide table with user columns " +
+      "named _rd1 and _RD2 equals the snapshot multiset difference") {
+    val dir = wideTable("txndigestrd", Seq(200L, 77777L),
+      Seq((col("k") % 5).as("_rd1"), lit("x").as("_RD2")))
+    val plan = assertChangesMatchSnapshots(dir)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("xxhash64"),
+      s"digest pre-pass did not engage past the _rd1 column:\n$plan")
   }
 
   test("CDC deltas maintain a rollup exactly equal to a full recompute") {
