@@ -1,28 +1,32 @@
 package graft.core
 
 /** The exclusive put-if-absent file publish shared by every metadata
-  * channel that is NOT the manifest log itself (constraint/colmap
-  * epochs, IVF generation pointers): write the full body to a temp
-  * file, then claim the target with a HARD LINK — the target appears
-  * complete or not at all, and a second publisher of the same name
-  * fails rather than silently replacing the winner. On link-less
-  * filesystems the fallback uses the same lock-file protocol as
-  * `TxnTable.publishWithoutLinks`: claim a transient side lock
-  * (O_CREAT|O_EXCL — a true test-and-set), exists-check the target
-  * INSIDE the lock, then atomic-move the COMPLETE temp file into
+  * channel (manifests and IVF generation pointers through
+  * [[VersionLog.publish]], constraint/colmap epochs directly): write
+  * the full body to a temp file, then claim the target with a HARD
+  * LINK — the target appears complete or not at all, and a second
+  * publisher of the same name fails rather than silently replacing
+  * the winner. On link-less filesystems (overlayfs, some FUSE mounts,
+  * FAT) the fallback claims a transient side lock `.<name>.lock`
+  * (O_CREAT|O_EXCL — a true test-and-set), exists-checks the target
+  * INSIDE the lock, then atomic-moves the COMPLETE temp file into
   * place — the target name only ever appears fully written, so a
   * concurrent reader can never observe an empty/torn file under the
-  * published name. Only a crash between claim and move leaves a
-  * stale `.<name>.lock` behind (microseconds, no Spark work inside);
-  * the collision error a later publisher raises names it.
-  * `TxnTable.writeManifest` keeps its own specialized variant (with
-  * re-plan semantics that TxnTableSpec pins under an 8-racer thread
-  * storm). */
+  * published name, and an exists-then-move pair's TOCTOU window (two
+  * writers both "succeed", one commit silently replaced) is closed.
+  * The lock is released after the move — safe because the
+  * exists-check runs inside it. Only a crash between claim and move
+  * leaves a stale lock behind (microseconds, no Spark work inside);
+  * the collision error a later publisher raises names it, and
+  * [[VersionLog.drop]] sweeps it with its entry. */
 object AtomicFiles {
 
   /** Test seam: pretend the filesystem has no hard links, so specs
     * can pin the fallback protocol's no-torn-read guarantee. */
   @volatile private[graft] var disableLinksForTest: Boolean = false
+
+  /** The link-less fallback's transient claim token for `targetName`. */
+  def lockName(targetName: String): String = s".$targetName.lock"
 
   /** Publish `body` at `dir/targetName` exactly once; invokes `lost`
     * (which must throw) when the name is already claimed. */
@@ -41,16 +45,11 @@ object AtomicFiles {
       catch {
         case _: java.nio.file.FileAlreadyExistsException => lost
         case _: UnsupportedOperationException =>
-          val lock = java.nio.file.Paths.get(dir, s".$targetName.lock")
+          val lock = java.nio.file.Paths.get(dir, lockName(targetName))
           // a lock collision is NOT `lost` (the target may not exist
           // yet): name the lock so the recovery guidance is right — a
           // caller's lost-message says "re-read and re-publish", which
-          // loops forever against a crash-orphaned lock. (This stays a
-          // hand-rolled sibling of TxnTable.publishWithoutLinks rather
-          // than one shared helper: the manifest channel's lock name
-          // `manifest-v$v.lock` is swept by vacuum and pinned by specs,
-          // and its lost() carries re-plan semantics this generic
-          // channel must not imply.)
+          // loops forever against a crash-orphaned lock
           try java.nio.file.Files.createFile(lock)
           catch { case _: java.nio.file.FileAlreadyExistsException =>
             throw new java.util.ConcurrentModificationException(

@@ -83,7 +83,7 @@ object Lease {
 
   /** The lock body's fields — ONE parser for acquire / reap / status
     * (two judgments disagreeing on the same bytes is the drift class
-    * AdvisoryHint exists to prevent). */
+    * VersionLog exists to prevent). */
   private def lockFields(body: String)
       : (String, Option[Long], Option[Long]) = {
     def fld(name: String): Option[String] =

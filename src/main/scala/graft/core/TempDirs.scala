@@ -6,6 +6,15 @@ package graft.core
   * any scratch root that parquet gets written under leaks forever;
   * every temp-dir user (st05's rollup target, spec corpora) shares
   * this one recursive shutdown-hook delete instead of re-deriving it.
+  *
+  * Shared roots left behind by a killed JVM are reaped by the next
+  * one once they are stale AND their owner is dead, judged by the
+  * `owner.pid` stamp (pid plus process start instant). A pid is only
+  * unique inside one pid namespace: when `/dev/shm` (or
+  * SPARK_GRAFT_SCRATCH) is shared across pid namespaces — containers
+  * on one host — another namespace's live owner can read as dead
+  * here, or a dead one as alive; give each namespace its own scratch
+  * base.
   */
 object TempDirs {
 
@@ -41,18 +50,28 @@ object TempDirs {
     * repeated calls (per-query scratch or checkpoint dirs in a
     * long-running service) do not accumulate JVM shutdown hooks the
     * way per-call [[scratch]] would. Defaults to [[fastBase]]. */
-  /** Name of the owner-liveness marker each shared root carries. */
+  /** Name of the owner-liveness marker each shared root carries:
+    * `<pid> <start instant>` of the JVM that created the root. */
   private val PidFile = "owner.pid"
 
-  /** Is the JVM that stamped `root` still alive? No marker (a pre-r21
-    * root, or a crash between mkdir and stamp) reads as dead — those
-    * roots still age out on the 6 h mtime cutoff alone. */
+  /** Is the JVM that stamped `root` still alive? The pid alone is not
+    * enough: pids are reused, so a live process must also have the
+    * stamped start instant (a bare-pid stamp, written before the
+    * instant was recorded, keeps the pid-only rule; a process whose
+    * start instant the platform cannot tell counts as the owner). No
+    * marker (a pre-r21 root, or a crash between mkdir and stamp)
+    * reads as dead — those roots still age out on the 6 h mtime
+    * cutoff alone. */
   private[core] def ownerAlive(root: java.io.File): Boolean =
     try {
       val f = new java.io.File(root, PidFile)
       f.isFile && {
-        val pid = java.nio.file.Files.readString(f.toPath).trim.toLong
-        ProcessHandle.of(pid).map[Boolean](_.isAlive).orElse(false)
+        val fields = java.nio.file.Files.readString(f.toPath).trim
+          .split("\\s+")
+        val started = fields.lift(1).map(java.time.Instant.parse)
+        ProcessHandle.of(fields(0).toLong).map[Boolean](p => p.isAlive &&
+          started.forall(s => p.info().startInstant()
+            .map[Boolean](_ == s).orElse(true))).orElse(false)
       }
     } catch { case scala.util.control.NonFatal(_) => false }
 
@@ -75,9 +94,10 @@ object TempDirs {
       } catch { case scala.util.control.NonFatal(_) => () }
       val d = java.nio.file.Files
         .createTempDirectory(java.nio.file.Paths.get(b), "graft-shared").toFile
-      try java.nio.file.Files.writeString(
-        new java.io.File(d, PidFile).toPath,
-        ProcessHandle.current().pid().toString)
+      val me = ProcessHandle.current()
+      try java.nio.file.Files.writeString(new java.io.File(d, PidFile).toPath,
+        me.pid().toString + me.info().startInstant()
+          .map[String](" " + _).orElse(""))
       catch { case scala.util.control.NonFatal(_) => () }
       sys.addShutdownHook(rmTree(d))
       d

@@ -84,88 +84,24 @@ object TxnTable {
 
   private def fileOf(dir: String, name: String) = new java.io.File(dir, name)
 
-  // ---- I/O-shape seams (SCALE_SLOPE r14/r15 count these): on an
-  // object store a directory LIST is paged (10+ round trips at 10⁴
-  // keys) while an exists() probe / header GET is one — the metadata
-  // read path is designed so the hot paths pay probes, never LISTs,
-  // and the probe rows in SCALE_SLOPE are measured through these.
-  private[graft] val rootLists = new java.util.concurrent.atomic.AtomicLong()
-  private[graft] val headProbes = new java.util.concurrent.atomic.AtomicLong()
+  /** The manifest chain (`manifest-v<N>.json`): publish, head,
+    * committed range, commit instants, as-of and retention all live
+    * in [[VersionLog]]; this object keeps the body format. Any
+    * existing manifest counts as committed — a damaged one fails
+    * loudly when parsed. Its `lists`/`probes` counters are the
+    * table's I/O-shape seams. */
+  private[graft] val manifestLog = new VersionLog("manifest-v", "head",
+    (dir, v) => fileOf(dir, s"manifest-v$v.json").exists(),
+    (dir, v) => manifestMeta(dir, v).ts)
+
   private[graft] def resetIoCountersForTest(): Unit = {
-    rootLists.set(0); headProbes.set(0)
-  }
-
-  /** The LIST fallback (and vacuum's ground truth): every committed
-    * manifest under `dir`, ascending. Hot paths resolve the head via
-    * [[headOpt]] instead — a paged LIST per read/OCC attempt is the
-    * read-side twin of the per-commit O(live files) render the delta
-    * manifests killed. */
-  private def manifests(dir: String): Seq[(Int, java.io.File)] = {
-    rootLists.incrementAndGet()
-    val pat = """manifest-v(\d+)\.json""".r
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty).toSeq
-      .flatMap(f => f.getName match {
-        case pat(v) => Some((v.toInt, f))
-        case _ => None
-      }).sortBy(_._1)
-  }
-
-  // ---- HEAD HINT (Delta's `_last_checkpoint` idea, applied to head
-  // resolution): a best-effort advisory file recording the latest
-  // committed version, written after each publish. Readers resolve
-  // the head by reading the hint and exists()-PROBING FORWARD
-  // (manifest-v(h+1), h+2, …) until a miss — O(tail since the hint)
-  // GETs and ZERO directory LISTs. The hint is ADVISORY: OCC's
-  // exclusive-create stays the only source of truth, and any
-  // missing / corrupt / stale hint degrades to the listing (then
-  // self-primes), never to a wrong answer:
-  //  - hint BEHIND the head (a crash between publish and hint-write,
-  //    or a slower writer's hint landing after a faster one's): the
-  //    forward probe walks to the true head — versions are
-  //    CONSECUTIVE (every commit publishes at planned+1; vacuum drops
-  //    only a prefix), so no committed version can hide past a gap;
-  //  - hint below the vacuum horizon or past the head (external
-  //    damage): the existence check on the hinted version itself
-  //    fails → LIST fallback → re-prime.
-  // hint write/read mechanics are shared with the index's generation
-  // log ([[AdvisoryHint]] — one implementation, no drift)
-  private def writeHeadHint(dir: String, v: Int): Unit =
-    AdvisoryHint.write(dir, "head", v)
-
-  private def readHeadHint(dir: String): Option[Int] =
-    AdvisoryHint.read(dir, "head")
-
-  private def manifestExists(dir: String, v: Int): Boolean = {
-    headProbes.incrementAndGet()
-    fileOf(dir, s"manifest-v$v.json").exists()
-  }
-
-  /** LIST-free head resolution: hint + forward probe, LIST fallback
-    * (which self-primes the hint so a legacy table pays the listing
-    * once). None = not a table (no manifest at all). */
-  private def headOpt(dir: String): Option[Int] = {
-    val hinted = readHeadHint(dir)
-      .filter(h => h >= 1 && manifestExists(dir, h))
-    val base = hinted.orElse {
-      val listed = manifests(dir).lastOption.map(_._1)
-      listed.foreach(writeHeadHint(dir, _))
-      listed
-    }
-    base.map { b =>
-      var v = b
-      while (manifestExists(dir, v + 1)) v += 1
-      // a hint left far behind (crashed writers' hint-writes are
-      // best-effort) would tax every read with the same forward walk
-      // — refresh it once the walk is long enough to matter
-      if (v - b >= CheckpointInterval) writeHeadHint(dir, v)
-      v
-    }
+    manifestLog.lists.set(0); manifestLog.probes.set(0)
   }
 
   /** Latest committed version — O(1 + tail) existence probes via the
     * head hint, zero directory LISTs on the steady path. */
   def version(dir: String): Int =
-    headOpt(dir).getOrElse(sys.error(s"no manifest under $dir"))
+    manifestLog.head(dir).getOrElse(sys.error(s"no manifest under $dir"))
 
   private val entryPat =
     """\{"path":"([^"]+)","bytes":(-?\d+)(?:,"rows":(-?\d+))?,"stats":\{(.*)\}\}""".r
@@ -231,7 +167,7 @@ object TxnTable {
     val key = (dir, v)
     val hit = metaCache.get(key)
     if (hit != null) return hit
-    val f = fileOf(dir, s"manifest-v$v.json")
+    val f = manifestLog.file(dir, v)
     // absence is NOT cached: an in-flight version's manifest may
     // appear a moment later
     if (!f.exists()) return ManifestMeta(None, None)
@@ -320,19 +256,22 @@ object TxnTable {
     * entries; unrecognized lines are a loud error. */
   private def parseManifestBody(dir: String, v: Int)
       : Either[Seq[FileEntry], (Seq[FileEntry], Set[String])] = {
-    val f = fileOf(dir, s"manifest-v$v.json")
+    val f = manifestLog.file(dir, v)
     if (!f.exists()) sys.error(s"no manifest v$v under $dir")
     val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-    // TORN-TAIL GUARD: every array-rendered manifest closes with `]`.
-    // A truncation that happens to cut at a LINE boundary would
-    // otherwise parse as a valid, silently SHORTER live set — the one
-    // torn shape the per-line parse below cannot catch (mid-line tears
-    // die loudly as unparseable lines). The publish seam itself cannot
-    // tear (tmp is fully written before the link/move), so this is
-    // external-damage detection, and loud is the contract.
-    if (txt.startsWith("[") && !txt.trim.endsWith("]")) sys.error(
-      s"torn manifest ${f.getPath} (unterminated body) — restore it " +
-        "to recover")
+    // TORN-TAIL GUARD: every manifest is rendered as an array, `[` …
+    // `]`. A truncation that happens to cut at a LINE boundary — or
+    // at zero bytes — would otherwise parse as a valid, silently
+    // SHORTER live set (an empty delta drops its predecessor chain: a
+    // zero-byte v2 resolves v3 to v3's own adds) — the torn shapes the
+    // per-line parse below cannot catch (mid-line tears die loudly as
+    // unparseable lines). The publish seam itself cannot tear (tmp is
+    // fully written before the link/move), so this is external-damage
+    // detection, and loud is the contract.
+    val body = txt.trim
+    if (!body.startsWith("[") || !body.endsWith("]")) sys.error(
+      s"torn manifest ${f.getPath} (empty or unterminated body) — " +
+        "restore it to recover")
     var isDelta = false
     val adds = Seq.newBuilder[FileEntry]
     val removes = Set.newBuilder[String]
@@ -442,26 +381,13 @@ object TxnTable {
     if (es.exists(_.rows < 0)) None else Some(es.map(_.rows).sum)
   }
 
-  /** Commit `v` atomically — and EXCLUSIVELY: the publish step is a
-    * hard-link creation, which (unlike rename, whose POSIX semantics
-    * silently replace) fails if the target exists. Two writers racing
-    * to publish the same version therefore cannot both land: exactly
-    * one wins, the other gets ConcurrentModificationException and must
-    * re-plan against the winner's manifest. This is optimistic
-    * concurrency control, the protocol every manifest-log table format
-    * uses; on an object store the same contract comes from a
-    * put-if-absent on the manifest key. On filesystems without
-    * hard-link support (overlayfs, some FUSE mounts, FAT) the publish
-    * falls back to claiming the version with `Files.createFile` on a
-    * `manifest-v$v.lock` — createFile is O_CREAT|O_EXCL, a true
-    * test-and-set — and only the claim winner moves its manifest into
-    * place, so the fallback keeps atomic-claim semantics (an
-    * exists-then-move pair would be a TOCTOU window in which two
-    * writers both "succeed" and one commit's file list is silently
-    * replaced). The lock is TRANSIENT — released after the move
-    * (safe because the exists-check runs inside the lock; see
-    * [[publishWithoutLinks]]); only a crash between claim and move
-    * leaves one behind, and vacuum sweeps those crash leftovers. */
+  /** Commit `v` atomically — and EXCLUSIVELY ([[VersionLog.publish]]):
+    * two writers racing to publish the same version cannot both land;
+    * exactly one wins, the other gets ConcurrentModificationException
+    * and must re-plan against the winner's manifest. This is
+    * optimistic concurrency control, the protocol every manifest-log
+    * table format uses; on an object store the same contract comes
+    * from a put-if-absent on the manifest key. */
   private[graft] def writeManifest(dir: String, v: Int,
       entries: Seq[FileEntry],
       schema: Option[org.apache.spark.sql.types.StructType] = None,
@@ -534,28 +460,17 @@ object TxnTable {
       header: Seq[String], entries: Seq[FileEntry]): Unit =
     publishLines(dir, v, header ++ entries.map(entryLine))
 
-  private def publishLines(dir: String, v: Int,
-      lines: Seq[String]): Unit = {
-    val body = lines.mkString("[\n", ",\n", "\n]")
-    val tmp = java.nio.file.Files.createTempFile(
-      java.nio.file.Paths.get(dir), s".manifest-v$v", ".tmp")
-    java.nio.file.Files.write(tmp, body.getBytes("UTF-8"))
-    val target = fileOf(dir, s"manifest-v$v.json").toPath
-    def lost() = throw new java.util.ConcurrentModificationException(
-      s"manifest v$v already committed under $dir — a concurrent " +
-        "writer won; re-read the latest version and re-plan")
-    try java.nio.file.Files.createLink(target, tmp)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException => lost()
-      case _: UnsupportedOperationException =>
-        publishWithoutLinks(dir, v, tmp)
-    } finally { java.nio.file.Files.deleteIfExists(tmp); () }
-    // the committed version is the new head — record it for LIST-free
-    // resolution. AFTER the publish and best-effort: a crash in
-    // between leaves a hint one behind, which the forward probe heals
-    // at the next read (costs probes, never correctness).
-    writeHeadHint(dir, v)
-  }
+  private def publishLines(dir: String, v: Int, lines: Seq[String]): Unit =
+    publishManifest(dir, v,
+      lines.mkString("[\n", ",\n", "\n]").getBytes("UTF-8"))
+
+  /** The one manifest publish every commit goes through. */
+  private[graft] def publishManifest(dir: String, v: Int,
+      body: Array[Byte]): Unit =
+    manifestLog.publish(dir, v, body)(
+      throw new java.util.ConcurrentModificationException(
+        s"manifest v$v already committed under $dir — a concurrent " +
+          "writer won; re-read the latest version and re-plan"))
 
   /** A delta tail longer than this gets a checkpoint: resolution
     * reads O(checkpoint + tail), so the interval bounds every
@@ -574,7 +489,7 @@ object TxnTable {
     val cv = if (v < 0) version(dir) else v
     // a nonexistent target is a CLIENT error (400 over the wire),
     // never the internal manifest-missing failure liveEntries raises
-    if (!manifestExists(dir, cv))
+    if (!manifestLog.exists(dir, cv))
       throw new IllegalArgumentException(
         s"cannot checkpoint $dir at v$cv: no such committed version")
     val es = liveEntries(dir, cv)
@@ -638,39 +553,6 @@ object TxnTable {
           manifestMeta(dir, k).delta) { tail += 1; k -= 1 }
       if (tail >= CheckpointInterval) { checkpoint(dir, v); () }
     } catch { case scala.util.control.NonFatal(_) => () }
-
-  /** The no-hard-link publish path: a TRANSIENT `manifest-v$v.lock`
-    * (O_CREAT|O_EXCL — a true put-if-absent) serializes the
-    * exists-check + move critical section, so the move can never
-    * replace a concurrent winner's committed manifest. The lock is
-    * RELEASED after the move: holding it forever would be a
-    * wedged-table hazard (a writer that dies between claim and move
-    * would block version v for good), and releasing it is safe
-    * precisely because the exists-check runs INSIDE the lock — a late
-    * racer that acquires the freed lock sees the committed manifest
-    * and loses loudly. The only wedge window left is a crash between
-    * claim and move (microseconds, no Spark work inside); the CME
-    * message names the stale lock so an operator can clear it. */
-  private[graft] def publishWithoutLinks(dir: String, v: Int,
-      tmp: java.nio.file.Path): Unit = {
-    val target = fileOf(dir, s"manifest-v$v.json").toPath
-    val lock = fileOf(dir, s"manifest-v$v.lock").toPath
-    def lost(why: String) =
-      throw new java.util.ConcurrentModificationException(
-        s"manifest v$v $why under $dir — a concurrent writer won (or " +
-          s"crashed mid-publish leaving $lock; delete it to recover); " +
-          "re-read the latest version and re-plan")
-    try java.nio.file.Files.createFile(lock)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        lost("already claimed")
-    }
-    try {
-      if (java.nio.file.Files.exists(target)) lost("already committed")
-      java.nio.file.Files.move(tmp, target,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } finally { java.nio.file.Files.deleteIfExists(lock); () }
-  }
 
   /** Test hook: runs after a mutation has planned + rewritten but
     * BEFORE it publishes its manifest — the window in which a
@@ -935,7 +817,7 @@ object TxnTable {
     val hit = epochCache.get(key)
     if (hit != null) return hit
     val stamp = epochStamp.get()
-    val maxCommitted = headOpt(dir).getOrElse(0)
+    val maxCommitted = manifestLog.head(dir).getOrElse(0)
     // ANCHOR CHANNEL: the highest committed manifest <= v names the
     // epoch in force — activation rides the committed manifest, so an
     // orphaned epoch file can never be resolved. An in-flight v
@@ -948,7 +830,7 @@ object TxnTable {
     // what vacuum drops) and the legacy scan takes over.
     val anchored = {
       val mv = math.min(v, maxCommitted)
-      if (mv >= 1 && manifestExists(dir, mv))
+      if (mv >= 1 && manifestLog.exists(dir, mv))
         Some(manifestMeta(dir, mv).epochs)
       else None
     }
@@ -1030,7 +912,7 @@ object TxnTable {
       case None =>
         // the once-per-lifetime LIST (seam-counted like every other):
         // manifest range and epoch files off ONE listing
-        rootLists.incrementAndGet()
+        manifestLog.lists.incrementAndGet()
         val names = Option(new java.io.File(dir).listFiles())
           .getOrElse(Array.empty[java.io.File]).map(_.getName).toSeq
         val mPat = """manifest-v(\d+)\.json""".r
@@ -2004,35 +1886,11 @@ object TxnTable {
     * DESCRIBE HISTORY actually shows an operator. */
   def historyWithTs(dir: String)
       : Seq[(Int, Int, Long, Option[Long], Long)] =
-    committedRange(dir).map { case (v, f) =>
+    manifestLog.range(dir).map { v =>
       val es = liveEntries(dir, v)
       (v, es.size, es.map(e => math.max(e.bytes, 0L)).sum,
         if (es.exists(_.rows < 0)) None else Some(es.map(_.rows).sum),
-        commitTs(dir, v, f))
-    }
-
-  /** Every surviving committed version, ascending — resolved WITHOUT
-    * a directory LIST: versions are consecutive from the oldest
-    * survivor to the head ([[headOpt]]'s invariant), so the set is
-    * [oldest, head] with the oldest found by an O(log head) binary
-    * search over existence probes (monotone: present above the
-    * vacuum horizon, absent below). */
-  private def committedRange(dir: String): IndexedSeq[(Int, java.io.File)] =
-    headOpt(dir) match {
-      case None => IndexedSeq.empty
-      case Some(h) =>
-        val lo =
-          if (manifestExists(dir, 1)) 1
-          else {
-            // invariant: exists(hi), !exists(lo)
-            var lo0 = 1; var hi = h
-            while (hi - lo0 > 1) {
-              val mid = (lo0 + hi) >>> 1
-              if (manifestExists(dir, mid)) hi = mid else lo0 = mid
-            }
-            hi
-          }
-        (lo to h).map(v => (v, fileOf(dir, s"manifest-v$v.json")))
+        manifestLog.commitTs(dir, v))
     }
 
   /** RESTORE the table to the state of committed version `toV` — as a
@@ -2071,7 +1929,7 @@ object TxnTable {
         s"cannot restore $dir to v$toV (latest is v$planned)")
       // a vacuumed target is a CLIENT error (400 over the wire), not
       // the internal manifest-missing failure liveEntries raises
-      if (!manifestExists(dir, toV))
+      if (!manifestLog.exists(dir, toV))
         throw new IllegalArgumentException(
           s"cannot restore $dir to v$toV: its manifest was vacuumed")
       val entries = liveEntries(dir, toV)
@@ -2167,72 +2025,27 @@ object TxnTable {
     }
     }
 
-  /** The commit instant of version `v`: the timestamp RECORDED in
-    * its manifest header at publish; legacy manifests (predating the
-    * ts channel) fall back to file mtime. Recorded beats mtime
-    * because mtime is not durable metadata — an rsync, a backup
-    * restore, or an object-store migration rewrites it, which would
-    * silently shift TIMESTAMP AS OF answers and vacuum retention
-    * decisions. */
+  /** The commit instant of version `v` ([[VersionLog.commitTs]]):
+    * the timestamp RECORDED in its manifest header at publish; legacy
+    * manifests (predating the ts channel) fall back to the mtime of
+    * `f`, version `v`'s manifest file. */
   def commitTs(dir: String, v: Int, f: java.io.File): Long =
-    manifestMeta(dir, v).ts.getOrElse(f.lastModified())
+    manifestLog.commitTs(dir, v)
 
-  /** Resolve the latest version COMMITTED at or before `tsMillis`
-    * (per the manifest-recorded commit timestamp; mtime for legacy
-    * manifests) — timestamp time travel (`TIMESTAMP AS OF`). Loud
-    * when the timestamp predates the oldest surviving manifest:
-    * answering with a LATER state than asked for would be silently
-    * wrong, and the earlier state is vacuumed.
-    *
-    * BINARY SEARCH over the version list: commit timestamps are
-    * non-decreasing in version order (the OCC publish serializes
-    * commits through one log; each records its instant at render —
-    * the same monotonicity Delta's timestamp resolution leans on), so
-    * the boundary is found in O(log versions) manifest-header reads
-    * instead of one per version — on an object store a 10⁴-commit
-    * streaming history answers in ~14 GETs, not 10⁴. */
-  def versionAsOf(dir: String, tsMillis: Long): Int = {
-    // [oldest, head] via hint + O(log) probes — the binary search
-    // below gets its bounds without a directory LIST
-    val ms = committedRange(dir)
-    if (ms.isEmpty) throw new IllegalArgumentException(
-      s"no manifest under $dir — not a table")
-    val tsMemo = scala.collection.mutable.Map.empty[Int, Long]
-    def tsAt(i: Int): Long =
-      tsMemo.getOrElseUpdate(i, commitTs(dir, ms(i)._1, ms(i)._2))
-    // INVERSION FALLBACK: the search assumes non-decreasing commit
-    // instants; an mtime rewrite of LEGACY manifests (no recorded ts
-    // — exactly the migration scenario the ts channel exists for)
-    // can break that. Every inversion among the O(log n) points the
-    // search actually samples falls back to the exact linear scan —
-    // the old semantics at the old cost, paid only by a provably
-    // pathological table (undetected inversions between unsampled
-    // points resolve per the monotonic interpretation, the same
-    // adjustment Delta applies).
-    def linear(): Int =
-      ms.indices.filter(i => tsAt(i) <= tsMillis).lastOption
-        .map(ms(_)._1)
-        .getOrElse(throw new IllegalArgumentException(
-          s"no version of $dir existed at $tsMillis (oldest surviving " +
-            s"manifest v${ms.head._1} committed at ${tsAt(0)})"))
-    // ts(0) > t means either "before the table existed" (the loud
-    // error) or a HEAD INVERSION (a legacy oldest manifest whose
-    // mtime was rewritten forward) — only a scan can tell them
-    // apart, and both are off the hot path (an early-t query is a
-    // user error; an inverted table is the pathology)
-    if (tsAt(0) > tsMillis) return linear()
-    // invariant: ts(lo) <= tsMillis < ts(hi) (hi = ms.length is +inf)
-    var lo = 0
-    var hi = ms.length
-    while (hi - lo > 1) {
-      val mid = (lo + hi) >>> 1
-      if (tsAt(mid) <= tsMillis) lo = mid else hi = mid
-    }
-    val sampled = tsMemo.keys.toSeq.sorted
-    val monotone = sampled.zip(sampled.tail)
-      .forall { case (a, b) => tsAt(a) <= tsAt(b) }
-    if (monotone) ms(lo)._1 else linear()
-  }
+  /** Resolve the latest version COMMITTED at or before `tsMillis` —
+    * timestamp time travel (`TIMESTAMP AS OF`), an O(log versions)
+    * search over the recorded commit instants with zero directory
+    * LISTs ([[VersionLog.asOf]]). Loud when the timestamp predates
+    * the oldest surviving manifest: answering with a LATER state than
+    * asked for would be silently wrong, and the earlier state is
+    * vacuumed. */
+  def versionAsOf(dir: String, tsMillis: Long): Int =
+    manifestLog.asOf(dir, tsMillis) { (oldest, oldestTs) =>
+      throw new IllegalArgumentException(
+        s"no version of $dir existed at $tsMillis (oldest surviving " +
+          s"manifest v$oldest committed at $oldestTs)")
+    }.getOrElse(throw new IllegalArgumentException(
+      s"no manifest under $dir — not a table"))
 
   /** Snapshot read as of a wall-clock instant. */
   def readAsOf(s: SparkSession, dir: String, tsMillis: Long): DataFrame =
@@ -2285,23 +2098,16 @@ object TxnTable {
     // its remaining deletes REFUSED (not merely survived by the
     // downstream guards) — the fencing close of the TTL-stall residue.
     Lease.withLeaseHandle(dir, "vacuum") { lease =>
-    val ms = manifests(dir)
-    val (drop, keep) = ms.partition(_._1 < keepSince)
+    val ms = manifestLog.list(dir)
+    val (drop, keep) = ms.partition(_ < keepSince)
     require(keep.nonEmpty, s"vacuum would drop every manifest in $dir")
-    val headV = ms.last._1
+    val headV = ms.last
     if (!force && drop.nonEmpty) {
-      val now = System.currentTimeMillis()
-      val byV = ms.map { case (v, f) => v -> f }.toMap
-      // supersession instant = the successor's RECORDED commit ts
-      // (mtime for legacy manifests): a reader can pin a version only
-      // until its successor commits
-      val young = drop.filter { case (v, _) =>
-        byV.get(v + 1).exists(f =>
-          now - commitTs(dir, v + 1, f) < retainMillis) }
+      val young = manifestLog.young(dir, drop, ms.toSet, retainMillis)
       if (young.nonEmpty)
         throw new java.util.ConcurrentModificationException(
           s"vacuum refused under $dir: version(s) " +
-            young.map(_._1).mkString(", ") +
+            young.mkString(", ") +
             s" were superseded less than ${retainMillis} ms ago and a " +
             "reader pinned on them may still be scanning — wait out the " +
             "retention window, raise keepSince selectivity, or pass " +
@@ -2312,13 +2118,13 @@ object TxnTable {
     // strand every kept version's resolution. Written while the
     // ancestry still exists.
     if (drop.nonEmpty) {
-      val oldestKept = keep.head._1
+      val oldestKept = keep.head
       if (manifestMeta(dir, oldestKept).delta &&
           !fileOf(dir, s"checkpoint-v$oldestKept.json").exists()) {
         checkpoint(dir, oldestKept); ()
       }
     }
-    val referenced = keep.flatMap { case (v, _) => liveFiles(dir, v) }.toSet
+    val referenced = keep.flatMap(v => liveFiles(dir, v)).toSet
     onBeforeVacuumDelete()
     // a RESTORE that committed after the listing re-references files
     // this snapshot judged unreferenced — deleting them would gut the
@@ -2358,12 +2164,10 @@ object TxnTable {
     // manifests are the table's recovery surface — their drop is one
     // fence-atomic batch too
     if (drop.nonEmpty) lease.fencedSection {
-      drop.foreach { case (v, f) =>
-        f.delete()
-        // a stale fallback-publish claim token (crash between claim and
-        // move) goes with its expired manifest slot, as does any
-        // checkpoint sidecar below the horizon
-        fileOf(dir, s"manifest-v$v.lock").delete()
+      drop.foreach { v =>
+        // the manifest goes with any stale fallback-publish lock, as
+        // does any checkpoint sidecar below the horizon
+        manifestLog.drop(dir, v)
         fileOf(dir, s"checkpoint-v$v.json").delete()
         ()
       }

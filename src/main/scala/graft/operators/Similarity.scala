@@ -1159,11 +1159,15 @@ object Similarity {
     * set and serve a deleted vector again. New files carry their id
     * count in a `#n=` header ([[writeIdFile]]); count-less files
     * predate the guard and stay readable (a mid-number tear still
-    * dies loudly on toLong). */
+    * dies loudly on toLong). [[writeIdFile]] never writes a file
+    * without ids, so an empty one is a tear too — read as "no ids",
+    * it would serve every vector it took down again. */
   private def parseIdFile(f: java.io.File): Seq[Long] = {
     val lines = new String(
       java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
       .split('\n').filter(_.nonEmpty)
+    if (lines.isEmpty) sys.error(
+      s"torn takedown file ${f.getPath} (empty) — restore it to recover")
     lines.headOption.filter(_.startsWith("#n=")) match {
       case Some(h) =>
         val n = h.stripPrefix("#n=").toInt
@@ -1213,7 +1217,7 @@ object Similarity {
   }
 
   /** Serve-path LIST counter for the tombstone channel (probe/spec
-    * seam, like [[ivfRootLists]]). */
+    * seam, like `ivfLog.lists`). */
   private[graft] val ivfTombstoneLists =
     new java.util.concurrent.atomic.AtomicLong()
 
@@ -1333,10 +1337,10 @@ object Similarity {
     val body = (s"""{"gen":$gen,"path":${jq(layoutPath)},"k":$k""" +
       s""","ts":${System.currentTimeMillis()}$rb}""")
       .getBytes("UTF-8")
-    // exclusive tmp+link publish (core.AtomicFiles — the shared
-    // put-if-absent discipline): the pointer file appears COMPLETE or
-    // not at all, and a racing publisher of the same generation loses
-    // loudly instead of last-wins-overwriting the index. A ZERO-LENGTH
+    // exclusive publish ([[graft.core.VersionLog.publish]]), then the
+    // head hint: the pointer file appears COMPLETE or not at all, and
+    // a racing publisher of the same generation loses loudly instead
+    // of last-wins-overwriting the index. A ZERO-LENGTH
     // claim under the target name is provably a crash leftover of the
     // pre-lock fallback (the lock protocol only ever moves complete
     // files; ivfHistory skips it as not-published) — without healing
@@ -1347,12 +1351,11 @@ object Similarity {
     var done = false
     while (!done) {
       try {
-        graft.core.AtomicFiles.publishExclusive(root, s"gen-$gen.json",
-          body)(throw new SlotTaken)
+        ivfLog.publish(root, gen, body)(throw new SlotTaken)
         done = true
       } catch {
         case _: SlotTaken =>
-          val f = new java.io.File(root, s"gen-$gen.json")
+          val f = ivfLog.file(root, gen)
           if (attempts == 0 && f.exists() && f.length() == 0) {
             attempts = 1
             java.nio.file.Files.deleteIfExists(f.toPath)
@@ -1362,40 +1365,30 @@ object Similarity {
               "re-read the current pointer and re-publish")
       }
     }
-    // the committed generation is the new head — record it for
-    // LIST-free serve-path resolution (best-effort, after the claim:
-    // a crash in between leaves a hint one behind, healed by the
-    // forward probe)
-    writeIvfHeadHint(root, gen)
   }
 
-  // ---- LIST-FREE SERVE-PATH RESOLUTION (the table log's head-hint
-  // discipline, applied to the generation pointer): [[ivfCurrent]]
-  // used to LIST the root and read EVERY gen-N.json body per serve
-  // request — O(generations) GETs per search on an object store. Now:
-  //  - published pointer bodies are IMMUTABLE (exclusive create;
-  //    vacuum deletes whole files; only zero-length crash husks are
-  //    ever replaced, and husks are never cached) → parse ONCE per
-  //    file ([[genPtr]]), the ivfTombstonesCached discipline;
-  //  - `_head.json` under the root records the newest generation,
-  //    written best-effort after each publish; the serve path reads
-  //    the hint and probes FORWARD — O(1 + tail) GET-class calls,
-  //    zero LISTs. Advisory: any missing/corrupt/stale hint degrades
-  //    to the listing (then self-primes), never to a wrong answer —
-  //    generations are consecutive (each publish claims current+1
-  //    exclusively; vacuum drops only a prefix), so the forward probe
-  //    cannot miss a committed generation.
+  // ---- LIST-FREE SERVE-PATH RESOLUTION: the generation pointers are
+  // a [[graft.core.VersionLog]] (`gen-<N>.json`, hint key `gen`) —
+  // head, committed range, publish instants, as-of and retention come
+  // from the shared log; this object keeps the pointer body format.
+  // Published pointer bodies are IMMUTABLE (exclusive create; vacuum
+  // deletes whole files; only zero-length crash husks are ever
+  // replaced, and husks are never cached) → parse ONCE per file
+  // ([[genPtr]]), the ivfTombstonesCached discipline. A husk does not
+  // count as committed: it stops the head's forward probe exactly as
+  // an unpublished generation would.
   private final case class GenPtr(path: String, k: Int,
       ts: Option[Long], rollbackOf: Option[Int])
 
   private val genPtrCache =
     new java.util.concurrent.ConcurrentHashMap[String, GenPtr]()
-  private[graft] val ivfRootLists =
-    new java.util.concurrent.atomic.AtomicLong()
+  private[graft] val ivfLog = new graft.core.VersionLog("gen-", "gen",
+    (root, g) => genPtr(root, g).isDefined,
+    (root, g) => genPtr(root, g).flatMap(_.ts))
   private[graft] val ivfPointerReads =
     new java.util.concurrent.atomic.AtomicLong()
   private[graft] def resetIvfIoCountersForTest(): Unit = {
-    ivfRootLists.set(0); ivfPointerReads.set(0)
+    ivfLog.lists.set(0); ivfLog.probes.set(0); ivfPointerReads.set(0)
   }
   private[graft] def dropGenPtrCacheForTest(root: String): Unit = {
     genPtrCache.keySet.removeIf(_.startsWith(
@@ -1407,7 +1400,7 @@ object Similarity {
     * published; never cached, it may be healed and re-claimed). Loud
     * on a non-empty file missing its fields (external damage). */
   private def genPtr(root: String, gen: Int): Option[GenPtr] = {
-    val f = new java.io.File(root, s"gen-$gen.json")
+    val f = ivfLog.file(root, gen)
     val key = f.getAbsolutePath
     val hit = genPtrCache.get(key)
     if (hit != null) return Some(hit)
@@ -1435,14 +1428,6 @@ object Similarity {
     Some(p)
   }
 
-  // hint write/read mechanics are shared with the table log
-  // (graft.core.AdvisoryHint — one implementation, no drift)
-  private def writeIvfHeadHint(root: String, gen: Int): Unit =
-    graft.core.AdvisoryHint.write(root, "gen", gen)
-
-  private def readIvfHeadHint(root: String): Option[Int] =
-    graft.core.AdvisoryHint.read(root, "gen")
-
   /** Local publish-collision signal for [[ivfPublishAs]]'s heal loop. */
   private final class SlotTaken extends RuntimeException
 
@@ -1455,24 +1440,11 @@ object Similarity {
     * and ZERO directory LISTs at steady state; falls back to the
     * listing (and self-primes the hint) when the hint is missing,
     * corrupt, or points at a vacuumed/husk generation. */
-  private[graft] def ivfCurrent(root: String): Option[(Int, String, Int)] = {
-    val base = readIvfHeadHint(root)
-      .filter(_ >= 1)
-      .flatMap(g => genPtr(root, g).map(_ => g))
-      .orElse {
-        val listed = ivfHistory(root).lastOption.map(_._1)
-        listed.foreach(writeIvfHeadHint(root, _))
-        listed
-      }
-    base.map { b =>
-      var g = b
-      // a zero-length husk at g+1 parses as None and stops the walk —
-      // exactly the not-yet-published semantics the listing had
-      while (genPtr(root, g + 1).isDefined) g += 1
+  private[graft] def ivfCurrent(root: String): Option[(Int, String, Int)] =
+    ivfLog.head(root).map { g =>
       val p = genPtr(root, g).get
       (g, p.path, p.k)
     }
-  }
 
   /** The generation a published pointer ROLLED BACK to, if it was a
     * rollback publish — the op=history label. */
@@ -1481,36 +1453,17 @@ object Similarity {
 
   /** The publish instant of generation `gen`: the timestamp RECORDED
     * in its pointer body; mtime for legacy pointers (predating the ts
-    * field). What [[ivfVacuum]]'s retention guard and op=history key
-    * off — mirroring [[graft.core.TxnTable.commitTs]]. */
+    * field) — what [[ivfVacuum]]'s retention guard and op=history key
+    * off ([[graft.core.VersionLog.commitTs]]). */
   private[graft] def ivfCommitTs(root: String, gen: Int): Long =
-    genPtr(root, gen).flatMap(_.ts).getOrElse(
-      new java.io.File(root, s"gen-$gen.json").lastModified())
+    ivfLog.commitTs(root, gen)
 
   /** The committed generation range [oldest..head] WITHOUT a
-    * directory LIST — the index twin of the table log's hint-bounded
-    * range: head via the hint + forward probe ([[ivfCurrent]]),
-    * oldest via a binary search on pointer existence (the numbering
-    * is monotone and [[ivfVacuum]] drops a contiguous PREFIX, so
-    * existence over [1..head] is a suffix) — O(log generations)
-    * GET-class probes total. Empty when nothing is published. */
+    * directory LIST ([[graft.core.VersionLog.range]]) — O(log
+    * generations) GET-class probes total. Empty when nothing is
+    * published. */
   private[graft] def ivfCommittedGens(root: String): Seq[Int] =
-    ivfCurrent(root) match {
-      case None => Seq.empty
-      case Some((head, _, _)) =>
-        val lo =
-          if (genPtr(root, 1).isDefined) 1
-          else {
-            // invariant: exists(hi), !exists(lo)
-            var lo0 = 1; var hi = head
-            while (hi - lo0 > 1) {
-              val mid = (lo0 + hi) >>> 1
-              if (genPtr(root, mid).isDefined) hi = mid else lo0 = mid
-            }
-            hi
-          }
-        lo to head
-    }
+    ivfLog.range(root)
 
   /** `op=history`'s enumeration, HINT-BOUNDED: the range resolves via
     * [[ivfCommittedGens]] (zero LISTs) and the pointer parses are
@@ -1524,7 +1477,7 @@ object Similarity {
     ivfCommittedGens(root)
       .flatMap(g => genPtr(root, g).map(p => (g, p.path, p.k)))
 
-  /** The generation SERVING at a wall-clock instant — the index twin
+  /** The generation SERVING at a wall-clock instant — the index side
     * of the table's TIMESTAMP AS OF (`versionAsOf`), and the audit
     * question a takedown/rollback investigation actually asks ("which
     * layout answered queries at 14:02?"): the newest generation
@@ -1535,48 +1488,16 @@ object Similarity {
     * state is vacuumed — answering with a LATER generation would be
     * silently wrong).
     *
-    * BINARY SEARCH over recorded publish instants, bounds from
-    * [[ivfCommittedGens]] — O(log generations) pointer reads and ZERO
-    * LISTs for a deep history, the exact `versionAsOf` discipline.
-    * Publish instants are non-decreasing for RECORDED `ts` fields
-    * (the exclusive gen-N claim serializes publishes), but a LEGACY
-    * pointer (predating the ts field) falls back to file mtime, which
-    * an rsync/backup migration rewrites — a mixed history can be
-    * NON-MONOTONE, and a blind binary search could then name a
-    * generation that was not actually serving at that instant. Every
-    * inversion among the sampled points falls back to the exact
-    * linear scan (memoized parses: no extra I/O), exactly as
-    * `versionAsOf` treats mtime-inverted legacy manifests. */
-  private[graft] def ivfGenAsOf(root: String, tsMillis: Long): Int = {
-    val gens = ivfCommittedGens(root)
-    if (gens.isEmpty) throw new IllegalStateException(
-      s"no published index under $root")
-    val tsMemo = scala.collection.mutable.Map.empty[Int, Long]
-    def tsAt(i: Int): Long =
-      tsMemo.getOrElseUpdate(i, ivfCommitTs(root, gens(i)))
-    def linear(): Int =
-      gens.indices.filter(i => tsAt(i) <= tsMillis).lastOption
-        .map(gens(_))
-        .getOrElse(throw new IllegalArgumentException(
-          s"no generation of $root was published at $tsMillis (oldest " +
-            s"surviving generation ${gens.head} published at " +
-            s"${tsAt(0)})"))
-    // ts(0) > t is either "before the index existed" (the loud error)
-    // or a head inversion (rewritten legacy mtime) — only a scan can
-    // tell them apart, and both are off the hot path
-    if (tsAt(0) > tsMillis) return linear()
-    // invariant: ts(lo) <= tsMillis < ts(hi) (hi = gens.length = +inf)
-    var lo = 0
-    var hi = gens.length
-    while (hi - lo > 1) {
-      val mid = (lo + hi) >>> 1
-      if (tsAt(mid) <= tsMillis) lo = mid else hi = mid
-    }
-    val sampled = tsMemo.keys.toSeq.sorted
-    val monotone = sampled.zip(sampled.tail)
-      .forall { case (a, b) => tsAt(a) <= tsAt(b) }
-    if (monotone) gens(lo) else linear()
-  }
+    * O(log generations) pointer reads and ZERO LISTs for a deep
+    * history ([[graft.core.VersionLog.asOf]] — a legacy pointer's
+    * mtime inversion falls back to the exact linear scan). */
+  private[graft] def ivfGenAsOf(root: String, tsMillis: Long): Int =
+    ivfLog.asOf(root, tsMillis) { (oldest, oldestTs) =>
+      throw new IllegalArgumentException(
+        s"no generation of $root was published at $tsMillis (oldest " +
+          s"surviving generation $oldest published at $oldestTs)")
+    }.getOrElse(throw new IllegalStateException(
+      s"no published index under $root"))
 
   /** ROLLBACK the serve pointer — the TxnTable-RESTORE analogue on
     * the /index surface: a bad retrain publish is reverted by
@@ -1679,16 +1600,9 @@ object Similarity {
     * bare NoSuchElementException; zero-length crash husks read as
     * not-yet-published). The SERVE path never calls this:
     * [[ivfCurrent]] resolves LIST-free. */
-  private[graft] def ivfHistory(root: String): Seq[(Int, String, Int)] = {
-    ivfRootLists.incrementAndGet()
-    val pat = """gen-(\d+)\.json""".r
-    Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
-      .flatMap(f => f.getName match {
-        case pat(n) => Some(n.toInt)
-        case _ => None
-      }).sorted.toSeq
+  private[graft] def ivfHistory(root: String): Seq[(Int, String, Int)] =
+    ivfLog.list(root)
       .flatMap(g => genPtr(root, g).map(p => (g, p.path, p.k)))
-  }
 
   /** Sweep superseded index generations — the retention op that
     * bounds storage after repeated retrains (each publishes a FULL
@@ -1732,19 +1646,12 @@ object Similarity {
     val drop = hist.dropRight(keepGens)
     if (drop.isEmpty) return Nil
     if (!force) {
-      val now = System.currentTimeMillis()
-      // supersession instant = the successor's RECORDED publish ts
-      // (mtime for legacy pointers): a reader can pin a generation
-      // only until its successor publishes — and mtime is not durable
-      // (an rsync/migration rewrite must not silently shift retention
-      // verdicts), the TxnTable.commitTs discipline
-      def pointerAge(gen: Int): Long = now - ivfCommitTs(root, gen)
-      val young = drop.filter { case (g, _, _) =>
-        hist.find(_._1 == g + 1).exists(_ => pointerAge(g + 1) < retainMillis) }
+      val young = ivfLog.young(root, drop.map(_._1),
+        hist.map(_._1).toSet, retainMillis)
       if (young.nonEmpty)
         throw new java.util.ConcurrentModificationException(
           s"index vacuum refused under $root: generation(s) " +
-            young.map(_._1).mkString(", ") +
+            young.mkString(", ") +
             s" were superseded less than ${retainMillis} ms ago and an " +
             "in-flight query may still be scanning their layout — wait " +
             "out the retention window or pass force=true")
@@ -1815,16 +1722,12 @@ object Similarity {
           graft.core.TempDirs.rmTree(new java.io.File(path))
         }
       }
-      lease.fencedSection {
-        java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(root, s"gen-$g.json")); ()
-      }
+      lease.fencedSection { ivfLog.drop(root, g) }
       // the dropped pointer must not survive in the parse cache — a
       // later same-named publish (impossible in this log's monotone
       // numbering, but cheap to rule out structurally) or a probe of
       // the swept range must see absence
-      genPtrCache.remove(new java.io.File(root, s"gen-$g.json")
-        .getAbsolutePath)
+      genPtrCache.remove(ivfLog.file(root, g).getAbsolutePath)
       g
     }
     }

@@ -114,7 +114,7 @@ class IndexFuzzSpec extends AnyFunSuite {
           opLog += "vacuum"
         // ---- advisory-hint chaos: the serve path must self-heal ------
         case x if x < 97 =>
-          val f = new java.io.File(root, graft.core.AdvisoryHint.FileName)
+          val f = new java.io.File(root, graft.core.VersionLog.HintFile)
           if (rnd.nextBoolean())
             java.nio.file.Files.write(f.toPath, "{garbled".getBytes("UTF-8"))
           else java.nio.file.Files.deleteIfExists(f.toPath)

@@ -488,7 +488,7 @@ class SimilaritySpec extends AnyFunSuite {
     }
     (1 to 64).foreach(g => plant(g,
       s"""{"gen":$g,"path":"lay$g","k":4,"ts":${t0 + g * 1000L}}"""))
-    graft.core.AdvisoryHint.write(root, "gen", 64) // steady state
+    Similarity.ivfLog.writeHint(root, 64) // steady state
     Similarity.dropGenPtrCacheForTest(root)
     Similarity.resetIvfIoCountersForTest()
     assert(Similarity.ivfGenAsOf(root, t0 + 37 * 1000L + 500) == 37)
@@ -496,7 +496,7 @@ class SimilaritySpec extends AnyFunSuite {
       "exactly-at-publish resolves that generation")
     assert(Similarity.ivfGenAsOf(root,
       System.currentTimeMillis()) == 64)
-    assert(Similarity.ivfRootLists.get() == 0,
+    assert(Similarity.ivfLog.lists.get() == 0,
       "a hinted deep-history asOf must never LIST the root")
     assert(Similarity.ivfPointerReads.get() <= 16,
       s"cold asOf over 64 generations must stay O(log): " +
@@ -521,7 +521,14 @@ class SimilaritySpec extends AnyFunSuite {
     Similarity.resetIvfIoCountersForTest()
     assert(Similarity.ivfHistoryHintBounded(root).map(_._1) ==
       (1 to 64))
-    assert(Similarity.ivfRootLists.get() == 0)
+    assert(Similarity.ivfLog.lists.get() == 0)
+    // a hint left 8 behind the head (best-effort hint writes lost)
+    // is rewritten by ONE ivfCurrent, so later reads stop re-walking
+    Similarity.ivfLog.writeHint(root, 56)
+    assert(Similarity.ivfCurrent(root).map(_._1).contains(64))
+    val hint = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(root, graft.core.VersionLog.HintFile)), "UTF-8")
+    assert(hint.contains("\"gen\":64"), s"stale hint kept: $hint")
   }
 
   test("streamed ingest composes with retrain: exactly-once ACROSS the generation swap") {

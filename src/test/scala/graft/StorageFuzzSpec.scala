@@ -316,7 +316,7 @@ class StorageFuzzSpec extends AnyFunSuite {
             Snap(model, spelling, constraintOn, hasX)
         // ---- advisory-hint chaos: corrupt or delete, reads self-heal --
         case x if x < 93 =>
-          val f = new java.io.File(dir, graft.core.AdvisoryHint.FileName)
+          val f = new java.io.File(dir, graft.core.VersionLog.HintFile)
           if (rnd.nextBoolean())
             java.nio.file.Files.write(f.toPath,
               "{{{torn".getBytes("UTF-8"))

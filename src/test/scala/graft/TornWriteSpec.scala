@@ -125,6 +125,26 @@ class TornWriteSpec extends AnyFunSuite {
     TxnTable.dropMetaCacheForTest(dir)
     val torn = intercept[RuntimeException] { TxnTable.read(spark, dir) }
     assert(torn.getMessage.contains("torn manifest"), torn.getMessage)
+    // a ZERO-BYTE tear under a later delta: read as an empty snapshot
+    // it would resolve v3 to v3's own adds alone (and rowCount to
+    // those rows, and vacuum would delete every v1 file)
+    val dir0 = graft.core.TempDirs.scratchShared("torndelta0")
+    TxnTable.init(spark, dir0,
+      (0L until 100L).map(k => (k, k)).toDF("k", "v"),
+      numFiles = 4, statsCols = Seq("k"))                          // v1
+    TxnTable.upsert(spark, dir0, "k",
+      (0L until 10L).map(k => (k, -k)).toDF("k", "v"),
+      numFiles = 2)                                                 // v2 delta
+    TxnTable.upsert(spark, dir0, "k",
+      (90L until 95L).map(k => (k, -k)).toDF("k", "v"),
+      numFiles = 1)                                                 // v3 delta
+    write(new java.io.File(dir0, "manifest-v2.json"), Array.emptyByteArray)
+    TxnTable.dropMetaCacheForTest(dir0)
+    Seq[() => Any](() => TxnTable.read(spark, dir0),
+        () => TxnTable.rowCount(dir0)).foreach { f =>
+      val empty = intercept[RuntimeException] { f() }
+      assert(empty.getMessage.contains("torn manifest"), empty.getMessage)
+    }
   }
 
   test("torn epoch file: a line-boundary truncation that drops the " +
@@ -182,6 +202,13 @@ class TornWriteSpec extends AnyFunSuite {
     }
     assert(torn.getMessage.contains("torn takedown file"),
       torn.getMessage)
+    // a ZERO-BYTE tear must not read as an empty dead set
+    write(f, Array.emptyByteArray)
+    val empty = intercept[RuntimeException] {
+      Similarity.ivfTombstones(layout)
+    }
+    assert(empty.getMessage.contains("torn takedown file"),
+      empty.getMessage)
     // a LEGACY file (no #n= header, pre-guard) still reads
     write(f, "11\n22\n".getBytes("UTF-8"))
     assert(Similarity.ivfTombstones(layout) == Set(11L, 22L))

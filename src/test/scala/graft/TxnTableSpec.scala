@@ -678,7 +678,7 @@ class TxnTableSpec extends AnyFunSuite {
   test("no-hardlink publish fallback is a true test-and-set under a thread race") {
     // the link-less path (overlayfs/FUSE/FAT) claims the version with
     // an exclusive lock-file create before moving — N racers through
-    // publishWithoutLinks must yield exactly ONE committed manifest,
+    // the manifest publish must yield exactly ONE committed manifest,
     // with the winner's bytes intact (an exists-then-move pair would
     // let two racers both "succeed" and silently lose one commit)
     val dir = graft.core.TempDirs.scratchShared("txnlock")
@@ -686,20 +686,22 @@ class TxnTableSpec extends AnyFunSuite {
     val n = 8
     val gate = new java.util.concurrent.CountDownLatch(1)
     val results = new java.util.concurrent.ConcurrentLinkedQueue[Either[Throwable, Int]]()
-    val threads = (0 until n).map { i =>
-      val t = new Thread(() => {
-        val tmp = java.nio.file.Files.createTempFile(
-          java.nio.file.Paths.get(dir), s".race$i", ".tmp")
-        java.nio.file.Files.write(tmp, s"writer-$i".getBytes("UTF-8"))
-        gate.await()
-        try { TxnTable.publishWithoutLinks(dir, 2, tmp); results.add(Right(i)) }
-        catch { case e: Throwable => results.add(Left(e)) }
-        ()
-      })
-      t.start(); t
-    }
-    gate.countDown()
-    threads.foreach(_.join())
+    graft.core.AtomicFiles.disableLinksForTest = true
+    try {
+      val threads = (0 until n).map { i =>
+        val t = new Thread(() => {
+          gate.await()
+          try {
+            TxnTable.publishManifest(dir, 2, s"writer-$i".getBytes("UTF-8"))
+            results.add(Right(i))
+          } catch { case e: Throwable => results.add(Left(e)) }
+          ()
+        })
+        t.start(); t
+      }
+      gate.countDown()
+      threads.foreach(_.join())
+    } finally graft.core.AtomicFiles.disableLinksForTest = false
     val (losers, winners) = {
       import scala.jdk.CollectionConverters._
       results.asScala.toSeq.partition(_.isLeft)
@@ -1650,9 +1652,9 @@ class TxnTableSpec extends AnyFunSuite {
     // FIRST legacy resolution: exactly one LIST, and the self-upgrade
     // sidecar lands
     assert(TxnTable.constraintsAt(dir, 3).map(_._1) == Seq("v_small"))
-    assert(TxnTable.rootLists.get() == 1,
+    assert(TxnTable.manifestLog.lists.get() == 1,
       s"first legacy resolution must pay exactly one LIST, " +
-        s"saw ${TxnTable.rootLists.get()}")
+        s"saw ${TxnTable.manifestLog.lists.get()}")
     assert(sidecar.exists(), "the self-upgrade sidecar must persist")
     // SECOND resolution, cold in-process caches (a fresh reader):
     // zero LISTs — the sidecar is the index now
@@ -1661,9 +1663,9 @@ class TxnTableSpec extends AnyFunSuite {
     assert(TxnTable.constraintsAt(dir, 3).map(_._1) == Seq("v_small"))
     assert(TxnTable.constraintsAt(dir, 1).isEmpty,
       "epoch time travel below the declare must stay empty")
-    assert(TxnTable.rootLists.get() == 0,
+    assert(TxnTable.manifestLog.lists.get() == 0,
       s"post-upgrade legacy resolution must be LIST-free, " +
-        s"saw ${TxnTable.rootLists.get()}")
+        s"saw ${TxnTable.manifestLog.lists.get()}")
     // the active constraint still ENFORCES through the upgraded path,
     // and the mutation folds the legacy anchors into the new head
     // (the anchor channel takes over from here)
@@ -2612,7 +2614,7 @@ class TxnTableSpec extends AnyFunSuite {
     def listsDuring[T](body: => T): (T, Long) = {
       TxnTable.resetIoCountersForTest()
       val r = body
-      (r, TxnTable.rootLists.get())
+      (r, TxnTable.manifestLog.lists.get())
     }
     // STEADY STATE: head resolution, reads, history bounds, asOf —
     // all through hint + existence probes, zero LISTs (on an object
