@@ -66,4 +66,24 @@ object AtomicFiles {
       }
     } finally { java.nio.file.Files.deleteIfExists(tmp); () }
   }
+
+  /** Replace `dir/name` with `body` (UTF-8) — the last-writer-wins
+    * twin of [[publishExclusive]] for files rewritten in place
+    * (checkpoints, hints, lock renewals, sidecars): the body goes to a
+    * `.<name>…tmp` file first and moves over the target with
+    * ATOMIC_MOVE + REPLACE_EXISTING, so a reader sees the old file or
+    * the new one, never a torn one. The temp file is deleted on every
+    * path, a failed move included; the failure itself propagates and
+    * each caller keeps its own policy for it. */
+  def replace(dir: String, name: String, body: String): Unit = {
+    val tmp = java.nio.file.Files.createTempFile(
+      java.nio.file.Paths.get(dir), s".$name", ".tmp")
+    try {
+      java.nio.file.Files.write(tmp, body.getBytes("UTF-8"))
+      java.nio.file.Files.move(tmp, java.nio.file.Paths.get(dir, name),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      ()
+    } finally { java.nio.file.Files.deleteIfExists(tmp); () }
+  }
 }

@@ -606,18 +606,7 @@ object Lease {
             if (!body.contains(token)) return
             val updated = body.replaceFirst("\"ts\":\\d+",
               "\"ts\":" + System.currentTimeMillis())
-            val tmp = java.nio.file.Files.createTempFile(
-              java.nio.file.Paths.get(dir), s".$lockName", ".tmp")
-            // a failed move must not orphan the tmp in the data dir
-            // (best-effort writers otherwise accumulate junk forever)
-            try {
-              java.nio.file.Files.write(tmp, updated.getBytes("UTF-8"))
-              java.nio.file.Files.move(tmp, f.toPath,
-                java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-                java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            } finally {
-              java.nio.file.Files.deleteIfExists(tmp); ()
-            }
+            AtomicFiles.replace(dir, lockName, updated)
           } finally exitSection(dir, sec)
       }
     } catch { case scala.util.control.NonFatal(_) => () }

@@ -495,13 +495,7 @@ object TxnTable {
     val es = liveEntries(dir, cv)
     val body = (s"""{"checkpoint":$cv}""" +: es.map(entryLine))
       .mkString("[\n", ",\n", "\n]")
-    val tmp = java.nio.file.Files.createTempFile(
-      java.nio.file.Paths.get(dir), s".checkpoint-v$cv", ".tmp")
-    java.nio.file.Files.write(tmp, body.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp,
-      fileOf(dir, s"checkpoint-v$cv.json").toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    AtomicFiles.replace(dir, s"checkpoint-v$cv.json", body)
     cv
   }
 
@@ -608,24 +602,18 @@ object TxnTable {
     // set — perf-only (stats gate pruning, never correctness), but a
     // key-column upgrade silently lost to a tear is a lasting
     // whole-table-rewrite tax on every later mutation of that key
-    val tmp = java.nio.file.Files.createTempFile(
-      java.nio.file.Paths.get(dir), ".table", ".tmp")
-    try {
-      java.nio.file.Files.write(tmp,
-        cols.distinct.map("\"" + _ + "\"")
-          .mkString("{\"statsCols\":[", ",", "]}").getBytes("UTF-8"))
-      try java.nio.file.Files.move(tmp, fileOf(dir, "table.json").toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      catch {
-        // filesystems without atomic replace (some network/object-store
-        // mounts): stats are perf-only, so degrade to a plain replace
-        // rather than hard-fail the calling mutation
-        case _: java.nio.file.AtomicMoveNotSupportedException =>
-          java.nio.file.Files.move(tmp, fileOf(dir, "table.json").toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-    } finally { java.nio.file.Files.deleteIfExists(tmp); () }
+    val body = cols.distinct.map("\"" + _ + "\"")
+      .mkString("{\"statsCols\":[", ",", "]}")
+    try AtomicFiles.replace(dir, "table.json", body)
+    catch {
+      // filesystems without atomic replace (some network/object-store
+      // mounts): stats are perf-only, so degrade to a plain replace
+      // rather than hard-fail the calling mutation
+      case _: java.nio.file.AtomicMoveNotSupportedException =>
+        java.nio.file.Files.write(fileOf(dir, "table.json").toPath,
+          body.getBytes("UTF-8"))
+        ()
+    }
   }
 
   /** CHECK constraints (the lakehouse expectations channel): declared
@@ -933,21 +921,11 @@ object TxnTable {
         // a dir with no committed manifest is not (yet) a table —
         // don't freeze or persist an index for it
         if (mvs.nonEmpty) {
-          try {
-            val tmp = java.nio.file.Files.createTempFile(
-              java.nio.file.Paths.get(dir), "._epochs-legacy", ".tmp")
-            try {
-              java.nio.file.Files.write(tmp,
-                legacyEpochBases.map(b =>
-                  s""""$b":${idx(b).mkString("[", ",", "]")}""")
-                  .mkString("{", ",", "}").getBytes("UTF-8"))
-              java.nio.file.Files.move(tmp, f.toPath,
-                java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-                java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            } finally {
-              java.nio.file.Files.deleteIfExists(tmp); ()
-            }
-          } catch { case scala.util.control.NonFatal(_) => () }
+          try AtomicFiles.replace(dir, legacySidecarName,
+            legacyEpochBases.map(b =>
+              s""""$b":${idx(b).mkString("[", ",", "]")}""")
+              .mkString("{", ",", "}"))
+          catch { case scala.util.control.NonFatal(_) => () }
           legacyEpochIdxCache.put(dir, idx)
         }
         idx

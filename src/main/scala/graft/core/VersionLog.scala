@@ -198,23 +198,8 @@ final class VersionLog(prefix: String, hintKey: String,
     * hints out of order, the reader's forward probe absorbs a stale
     * winner). */
   private[graft] def writeHint(dir: String, n: Int): Unit =
-    try {
-      val tmp = java.nio.file.Files.createTempFile(
-        java.nio.file.Paths.get(dir), "._head", ".tmp")
-      // a failed move must not orphan the tmp in the log root: a
-      // best-effort writer that swallows its failure AND leaves its
-      // temp behind accumulates junk forever (nothing sweeps these)
-      try {
-        java.nio.file.Files.write(tmp,
-          s"""{"$hintKey":$n}""".getBytes("UTF-8"))
-        java.nio.file.Files.move(tmp,
-          java.nio.file.Paths.get(dir, VersionLog.HintFile),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      } finally {
-        java.nio.file.Files.deleteIfExists(tmp); ()
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
+    try AtomicFiles.replace(dir, VersionLog.HintFile, s"""{"$hintKey":$n}""")
+    catch { case scala.util.control.NonFatal(_) => () }
 
   /** None for a missing or corrupt hint (the reader lists instead). */
   private def readHint(dir: String): Option[Int] = {

@@ -18,6 +18,21 @@ import graft.core.Tables._
   * scans the corpus once — the right plan when queries ≪ corpus.
   * The LSH variant buckets by random-hyperplane signature so candidate
   * generation is an equi-join on bucket id instead of a cross join.
+  *
+  * Every IVF entry point (sim05/06/09/11/12/13, st13, the `/index`
+  * serve and maintenance ops) runs the same four steps, each written
+  * once below:
+  *   1. SEED — [[seedCents]]: the flat quantizer, the first k vectors
+  *      as centroids (cid = vec_id + 1); sim05 and retrains train
+  *      instead ([[trainCentroids]]).
+  *   2. ASSIGN — [[writeLayout]]: nearest-centroid list per vector,
+  *      one shuffle on cid, a cid-partitioned parquet layout.
+  *   3. ROUTE — [[routeProbes]]: each query to its nprobe nearest
+  *      lists, map-only.
+  *   4. RANK — [[rankProbed]]: broadcast probes ⋈ postings on cid,
+  *      self-exclusion, exact cosine, map-side-combining top-k.
+  * Entry points differ only in their constants, their memo keys and
+  * scratch tags, and what they filter around these steps.
   */
 object Similarity {
 
@@ -190,9 +205,6 @@ object Similarity {
   // partial sums, n×dim rows map-side-combined into k×dim groups.
   // ---------------------------------------------------------------
 
-  /** Nearest-centroid assignment: argmin over ‖c‖² − 2·v·c (the ‖v‖²
-    * term is constant per vector). Ties break on cid via the struct
-    * ordering. */
   /** A coarse-quantizer centroid, driver-resident: cid, the vector,
     * and its fixed-point squared norm (the constant term of the
     * distance). Centers are O(k·dim) index METADATA — the MLlib
@@ -238,6 +250,58 @@ object Similarity {
       centers: Seq[(Int, Seq[Float])], v: Column): Column =
     nearestCidCol(centers.map { case (cid, e) => ctr(cid, e) }, v)
 
+  /** IVF step 1, SEED: the first-k vectors as centers (sim06's
+    * flat-quantizer discipline — deterministic, oracle-replicable;
+    * cid = vec_id + 1). */
+  private def seedCents(v: DataFrame, k: Int): Seq[Ctr] =
+    v.filter(col("vec_id") < k)
+      .select(col("vec_id"), col("embedding"))
+      .orderBy("vec_id").collect().toSeq
+      .map(r => ctr(r.getLong(0).toInt + 1, r.getSeq[Float](1)))
+
+  /** IVF step 2, ASSIGN: each (vec_id, embedding, nrm) row to its
+    * nearest centroid, one shuffle on cid, written `partitionBy(cid)`
+    * under `path` — the one inverted-file layout writer (index
+    * builds, streamed segments, retrains). */
+  private def writeLayout(rows: DataFrame, cents: Seq[Ctr], path: String,
+      mode: String = "overwrite"): Unit =
+    rows.select(nearestCidCol(cents, col("embedding")).as("cid"),
+        col("vec_id"), col("embedding"), col("nrm"))
+      .repartition(col("cid"))
+      .write.partitionBy("cid").mode(mode).parquet(path)
+
+  /** IVF step 3, ROUTE: each query row to its `nprobe` nearest lists
+    * — one (qid, qe, qn, cid) row per probed list, map-only (the
+    * fused kernel with nprobe > 1, ascending (dist, cid)). `id`, `emb`
+    * and `nrm` name the query frame's columns. */
+  private def routeProbes(q: DataFrame, cents: Seq[Ctr], nprobe: Int,
+      id: String = "vec_id", emb: String = "embedding",
+      nrm: String = "nrm"): DataFrame =
+    q.select(col(id).as("qid"), col(emb).as("qe"), col(nrm).as("qn"),
+      explode(probeCol(cents, col(emb), nprobe)).as("cid"))
+
+  /** A layout's rows as postings: (cid, nid, ce, cn). */
+  private def postingsOf(layout: DataFrame): DataFrame =
+    layout.select(col("cid"), col("vec_id").as("nid"),
+      col("embedding").as("ce"), col("nrm").as("cn"))
+
+  /** IVF step 4, RANK: broadcast the routed probes into the postings
+    * on cid (over a cid-partitioned scan this is dynamic partition
+    * pruning: only probed lists are read), drop self-matches, exact
+    * cosine, then the map-side-combining top-k — candidates are
+    * nprobe/k of the corpus per query and would otherwise all ride a
+    * rank window's shuffle. */
+  private def rankProbed(postings: DataFrame, probes: DataFrame,
+      topK: Int, excludeSelf: Boolean = true): DataFrame = {
+    val joined = postings.join(broadcast(probes), Seq("cid"))
+    (if (excludeSelf) joined.filter(col("qid") =!= col("nid")) else joined)
+      .withColumn("cosine", dotFix / (col("qn") * col("cn")))
+      .groupBy("qid")
+      .agg(topKAgg(topK)(col("cosine"), col("nid")).as("top"))
+      .transform(explodeRanked(_, "cosine"))
+      .orderBy("qid", "rank")
+  }
+
   /** Train k centroids: hash-seeded picks refined by `iters` Lloyd
     * steps. Means are exact decimal sums cast back to float, so the
     * centroids (and everything downstream) are run-order independent.
@@ -271,34 +335,17 @@ object Similarity {
     centers
   }
 
-  /** The IVF search path, shared by the trained (sim05) and flat
-    * (sim06) quantizers: build inverted lists by nearest-centroid
-    * assignment, route each query to its `nprobe` nearest lists, rank
-    * candidates by exact cosine within the probed lists. List
-    * assignment and probe routing are both map-only against the
-    * literal centers; candidate generation is an equi-join on cid —
-    * per-query work is nprobe·n/k rows. */
+  /** The in-plan IVF search, shared by the trained (sim05) and flat
+    * (sim06) quantizers: step 2's assignment as a map-only projection
+    * (no layout is written), then ROUTE and RANK for query vectors
+    * vec_id < 10 — per-query work is nprobe·n/k rows. */
   private def ivfSearch(v: DataFrame, centers: Seq[Ctr],
       nprobe: Int, topK: Int): DataFrame = {
     val lists = v.select(
       nearestCidCol(centers, col("embedding")).as("cid"),
       col("vec_id").as("nid"), col("embedding").as("ce"), col("nrm").as("cn"))
-    // nprobe nearest lists per query: the same fused kernel with
-    // nprobe > 1 (ascending (dist, cid) — the same order the
-    // row_number formulation used), explode. Map-only.
-    val probes = v.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nrm").as("qn"),
-        explode(probeCol(centers, col("embedding"), nprobe)).as("cid"))
-    // rank within the probed lists via the map-side-combining top-k
-    // aggregate — candidates are nprobe/k of the corpus per query and
-    // would otherwise all ride the rank window's shuffle
-    lists.join(broadcast(probes), Seq("cid"))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("cosine", dotFix / (col("qn") * col("cn")))
-      .groupBy("qid")
-      .agg(topKAgg(topK)(col("cosine"), col("nid")).as("top"))
-      .transform(explodeRanked(_, "cosine"))
-      .orderBy("qid", "rank")
+    rankProbed(lists, routeProbes(v.filter(col("vec_id") < 10), centers,
+      nprobe), topK)
   }
 
   /** IVF ANN top-3 for query vectors vec_id < 10. k-means training is
@@ -334,28 +381,20 @@ object Similarity {
   def simIvfFlat(s: SparkSession, d: String): DataFrame = {
     val k = 8; val nprobe = 4
     val v = withNorm(s, d)
-    val cents = v.filter(col("vec_id") < k)
-      .select(col("vec_id"), col("embedding"))
-      .orderBy("vec_id").collect().toSeq
-      .map(r => ctr(r.getLong(0).toInt + 1, r.getSeq[Float](1)))
-    ivfSearch(v, cents, nprobe, topK = 3)
+    ivfSearch(v, seedCents(v, k), nprobe, topK = 3)
   }
 
-  /** The IVF index PERSISTED as a cid-partitioned parquet table — the
-    * ingest/serve split every production ANN deployment runs: the
-    * inverted file is built ONCE (assignment + one shuffle on cid +
-    * `partitionBy("cid")` write) and each query batch reads ONLY its
-    * probed partitions. Routing stays the fused CentroidProbe against
-    * literal flat centroids (sim06's oracle-expressible discipline,
-    * k=16 here so probed ∪ ≪ k); the serve join is broadcast(probes)
-    * ⋈ postings on the PARTITION column, which Spark turns into
-    * dynamic partition pruning — the scan's partitionFilters carry a
-    * runtime `dynamicpruning` subquery fed by the probe side, so of
-    * the k list directories only the probed ones are ever opened
-    * (plan-asserted in SimilaritySpec). At 100 TB: nprobe/k of the
-    * corpus is READ, not just filtered — file-listing-level pruning,
-    * the step beyond sim06's in-plan routing. Serve-side ranking is
-    * the map-side-combining top-k aggregate. */
+  /** sim11 — the IVF index PERSISTED as a cid-partitioned parquet
+    * table, the ingest/serve split every production ANN deployment
+    * runs: flat SEED (sim06's oracle-expressible discipline, k=16 here
+    * so probed ∪ ≪ k), ASSIGN once into the layout, then each query
+    * batch ROUTEs and RANKs over the layout scan. The RANK join is on
+    * the PARTITION column, which Spark turns into dynamic partition
+    * pruning — the scan's partitionFilters carry a runtime
+    * `dynamicpruning` subquery fed by the probe side, so of the k list
+    * directories only the probed ones are ever opened (plan-asserted
+    * in SimilaritySpec). At 100 TB: nprobe/k of the corpus is READ,
+    * not just filtered — the step beyond sim06's in-plan routing. */
   def simPersistedIndex(s: SparkSession, d: String): DataFrame =
     simPersistedIndexFrom(s, d).df
 
@@ -365,32 +404,14 @@ object Similarity {
       : ServeIndex = {
     val k = 16; val nprobe = 2; val nq = 5
     val v = withNorm(s, d)
-    val cents = v.filter(col("vec_id") < k)
-      .select(col("vec_id"), col("embedding"))
-      .orderBy("vec_id").collect().toSeq
-      .map(r => ctr(r.getLong(0).toInt + 1, r.getSeq[Float](1)))
+    val cents = seedCents(v, k)
     val dir = graft.core.Caches.memoObj(s, s"ivfindex|$d|k$k") {
       val path = graft.core.TempDirs.scratchShared("ivfindex")
-      v.select(nearestCidCol(cents, col("embedding")).as("cid"),
-          col("vec_id"), col("embedding"), col("nrm"))
-        .repartition(col("cid"))
-        .write.partitionBy("cid").mode("overwrite").parquet(path)
+      writeLayout(v, cents, path)
       path
     }
-    val postings = s.read.parquet(dir)
-      .select(col("cid"), col("vec_id").as("nid"),
-        col("embedding").as("ce"), col("nrm").as("cn"))
-    val probes = v.filter(col("vec_id") < nq)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        col("nrm").as("qn"),
-        explode(probeCol(cents, col("embedding"), nprobe)).as("cid"))
-    val df = postings.join(broadcast(probes), Seq("cid"))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("cosine", dotFix / (col("qn") * col("cn")))
-      .groupBy("qid")
-      .agg(topKAgg(3)(col("cosine"), col("nid")).as("top"))
-      .transform(explodeRanked(_, "cosine"))
-      .orderBy("qid", "rank")
+    val df = rankProbed(postingsOf(s.read.parquet(dir)),
+      routeProbes(v.filter(col("vec_id") < nq), cents, nprobe), topK = 3)
     ServeIndex(df, dir)
   }
 
@@ -410,34 +431,17 @@ object Similarity {
     val k = 16; val nprobe = 2; val nq = 5
     val dead = (0L until 40L).filter(_ % 3 == 1)
     val v = withNorm(s, d)
-    val cents = v.filter(col("vec_id") < k)
-      .select(col("vec_id"), col("embedding"))
-      .orderBy("vec_id").collect().toSeq
-      .map(r => ctr(r.getLong(0).toInt + 1, r.getSeq[Float](1)))
+    val cents = seedCents(v, k)
     val dir = graft.core.Caches.memoObj(s, s"ivftakedown|$d|k$k") {
       val path = graft.core.TempDirs.scratchShared("ivftakedown")
-      v.select(nearestCidCol(cents, col("embedding")).as("cid"),
-          col("vec_id"), col("embedding"), col("nrm"))
-        .repartition(col("cid"))
-        .write.partitionBy("cid").mode("overwrite").parquet(path)
+      writeLayout(v, cents, path)
       ivfTombstone(path, dead)
       path
     }
-    val postings = dropTombstoned(s, s.read.parquet(dir),
-        ivfTombstones(dir), "vec_id")
-      .select(col("cid"), col("vec_id").as("nid"),
-        col("embedding").as("ce"), col("nrm").as("cn"))
-    val probes = v.filter(col("vec_id") < nq)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        col("nrm").as("qn"),
-        explode(probeCol(cents, col("embedding"), nprobe)).as("cid"))
-    postings.join(broadcast(probes), Seq("cid"))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("cosine", dotFix / (col("qn") * col("cn")))
-      .groupBy("qid")
-      .agg(topKAgg(3)(col("cosine"), col("nid")).as("top"))
-      .transform(explodeRanked(_, "cosine"))
-      .orderBy("qid", "rank")
+    rankProbed(
+      postingsOf(dropTombstoned(s, s.read.parquet(dir),
+        ivfTombstones(dir), "vec_id")),
+      routeProbes(v.filter(col("vec_id") < nq), cents, nprobe), topK = 3)
   }
 
   /** INCREMENTAL ANN ingest over the persisted index — the rolling-
@@ -464,56 +468,22 @@ object Similarity {
     // over the full corpus without knowing it
     val maxId = v.agg(max("vec_id")).first().getLong(0)
     val deltaFrom = (maxId + 1) * 4 / 5
-    val cents = v.filter(col("vec_id") < k)
-      .select(col("vec_id"), col("embedding"))
-      .orderBy("vec_id").collect().toSeq
-      .map(r => ctr(r.getLong(0).toInt + 1, r.getSeq[Float](1)))
+    val cents = seedCents(v, k)
     val dir = graft.core.Caches.memoObj(s, s"ivfinc|$d|k$k") {
       val path = graft.core.TempDirs.scratchShared("ivfinc")
-      def slice(pred: org.apache.spark.sql.Column) =
-        v.filter(pred).select(
-          nearestCidCol(cents, col("embedding")).as("cid"),
-          col("vec_id"), col("embedding"), col("nrm"))
-          .repartition(col("cid"))
       // day 0: the base index
-      slice(col("vec_id") < deltaFrom)
-        .write.partitionBy("cid").mode("overwrite").parquet(path)
+      writeLayout(v.filter(col("vec_id") < deltaFrom), cents, path)
       // day 1: the delta, assigned by the SAME frozen quantizer and
       // appended — history files untouched (spec-pinned)
-      slice(col("vec_id") >= deltaFrom)
-        .write.partitionBy("cid").mode("append").parquet(path)
+      writeLayout(v.filter(col("vec_id") >= deltaFrom), cents, path,
+        mode = "append")
       path
     }
-    val postings = s.read.parquet(dir)
-      .select(col("cid"), col("vec_id").as("nid"),
-        col("embedding").as("ce"), col("nrm").as("cn"))
-    val probes = v.filter(col("vec_id") < 4 || col("vec_id") >= maxId - 2)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        col("nrm").as("qn"),
-        explode(probeCol(cents, col("embedding"), nprobe)).as("cid"))
-    postings.join(broadcast(probes), Seq("cid"))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("cosine", dotFix / (col("qn") * col("cn")))
-      .groupBy("qid")
-      .agg(topKAgg(5)(col("cosine"), col("nid")).as("top"))
-      .transform(explodeRanked(_, "cosine"))
-      .orderBy("qid", "rank")
+    rankProbed(postingsOf(s.read.parquet(dir)),
+      routeProbes(v.filter(col("vec_id") < 4 || col("vec_id") >= maxId - 2),
+        cents, nprobe), topK = 5)
   }
 
-  /** st13 — STREAMING VECTOR INGEST (the continuous-arrival form of
-    * [[simIncrementalIngest]], and the ANN counterpart of st10's
-    * streaming table ingest): delta vectors arrive as a FILE STREAM;
-    * each micro-batch is assigned to the existing lists with the
-    * FROZEN coarse quantizer (map-only — O(batch·k), the history is
-    * never re-read) and appended into the cid-partitioned layout
-    * inside `foreachBatch`, so a vector is searchable the moment its
-    * batch commits. Retraining stays a separate scheduled event
-    * ([[ivfRetrain]] + the generation pointer) — exactly because
-    * per-batch assignment must be deterministic, which is what makes
-    * STREAMED-APPENDED ≡ REBUILT exact. Oracle: flat-quantizer IVF
-    * over the full corpus — the oracle cannot see how the index was
-    * built, which IS the contract (sim12's argument, now across the
-    * streaming boundary). */
   /** EXACTLY-ONCE append of one streamed micro-batch into a
     * frozen-quantizer IVF layout. foreachBatch is at-least-once: a
     * crash between the index write and the checkpoint commit means
@@ -553,14 +523,9 @@ object Similarity {
     // the loser sees the winner's marker and drops its staging dir
     val tmp = new java.io.File(path,
       s".seg-b$bid-${java.util.UUID.randomUUID()}")
-    batch
-      .withColumn("nrm", sqrt(graft.functions.GraftFunctions
-        .fixdotD(col("embedding"), col("embedding"))))
-      .select(nearestCidCol(cents, col("embedding")).as("cid"),
-        col("vec_id"), col("embedding"), col("nrm"))
-      .repartition(col("cid"))
-      .write.partitionBy("cid").mode("overwrite")
-      .parquet(tmp.getAbsolutePath)
+    writeLayout(batch.withColumn("nrm", sqrt(graft.functions.GraftFunctions
+        .fixdotD(col("embedding"), col("embedding")))),
+      cents, tmp.getAbsolutePath)
     // orphan handling lives INSIDE the failure path, never as an
     // entry-time delete: a pre-write exists/rmTree pair would race a
     // concurrent committer (check sees no marker, the other writer's
@@ -614,9 +579,17 @@ object Similarity {
   private[graft] def ivfReadCommitted(s: SparkSession, root: String): DataFrame = {
     val segs = ivfCommittedSegs(root)
     require(segs.nonEmpty, s"no committed segments under $root")
-    s.read.option("basePath", root)
-      .parquet(segs.map(_._2.getAbsolutePath): _*)
+    ivfReadSegs(s, root, segs.map(_._2))
   }
+
+  /** One scan over the given segment dirs of a layout (`basePath`
+    * keeps `seg` and `cid` partition columns); with no segments, the
+    * bare cid-partitioned build under `root`. */
+  private def ivfReadSegs(s: SparkSession, root: String,
+      segs: Seq[java.io.File]): DataFrame =
+    if (segs.isEmpty) s.read.parquet(root)
+    else s.read.option("basePath", root)
+      .parquet(segs.map(_.getAbsolutePath): _*)
 
   private def ivfCommittedSegs(root: String): Seq[(String, java.io.File)] =
     Option(new java.io.File(root).listFiles())
@@ -632,28 +605,34 @@ object Similarity {
     * entry point reads through this, so the two shapes are
     * interchangeable everywhere. */
   private[graft] def ivfReadLayout(s: SparkSession, dir: String): DataFrame =
-    if (ivfCommittedSegs(dir).nonEmpty) ivfReadCommitted(s, dir)
-    else s.read.parquet(dir)
+    ivfReadSegs(s, dir, ivfCommittedSegs(dir).map(_._2))
 
+  /** st13 — STREAMING VECTOR INGEST (the continuous-arrival form of
+    * [[simIncrementalIngest]], and the ANN counterpart of st10's
+    * streaming table ingest): delta vectors arrive as a FILE STREAM;
+    * each micro-batch is assigned to the existing lists with the
+    * FROZEN coarse quantizer (map-only — O(batch·k), the history is
+    * never re-read) and appended into the cid-partitioned layout
+    * inside `foreachBatch`, so a vector is searchable the moment its
+    * batch commits. Retraining stays a separate scheduled event
+    * ([[ivfRetrain]] + the generation pointer) — exactly because
+    * per-batch assignment must be deterministic, which is what makes
+    * STREAMED-APPENDED ≡ REBUILT exact. Oracle: flat-quantizer IVF
+    * over the full corpus — the oracle cannot see how the index was
+    * built, which IS the contract (sim12's argument, now across the
+    * streaming boundary). */
   def st13StreamIngest(s: SparkSession, d: String): DataFrame = {
     val k = 16; val nprobe = 2
     val v = withNorm(s, d)
     val maxId = v.agg(max("vec_id")).first().getLong(0)
     val deltaFrom = (maxId + 1) * 4 / 5
-    val cents = v.filter(col("vec_id") < k)
-      .select(col("vec_id"), col("embedding"))
-      .orderBy("vec_id").collect().toSeq
-      .map(r => ctr(r.getLong(0).toInt + 1, r.getSeq[Float](1)))
+    val cents = seedCents(v, k)
     val dir = graft.core.Caches.memoObj(s, s"ivfstream|$d|k$k") {
       val path = graft.core.TempDirs.scratchShared("ivfstream")
       // day 0: the base index (batch build, frozen quantizer), committed
       // as its own segment — same _SUCCESS-marked unit as each batch
-      v.filter(col("vec_id") < deltaFrom)
-        .select(nearestCidCol(cents, col("embedding")).as("cid"),
-          col("vec_id"), col("embedding"), col("nrm"))
-        .repartition(col("cid"))
-        .write.partitionBy("cid").mode("overwrite")
-        .parquet(s"$path/seg=base")
+      writeLayout(v.filter(col("vec_id") < deltaFrom), cents,
+        s"$path/seg=base")
       // the arrival stream: the delta lands as two files, one per
       // micro-batch (maxFilesPerTrigger=1)
       val src = graft.core.TempDirs.scratchShared("st13")
@@ -679,20 +658,9 @@ object Similarity {
     }
     // serve over old + new in one scan (committed segments only) —
     // the plan sim11/sim12 pinned
-    val postings = ivfReadCommitted(s, dir)
-      .select(col("cid"), col("vec_id").as("nid"),
-        col("embedding").as("ce"), col("nrm").as("cn"))
-    val probes = v.filter(col("vec_id") < 6 || col("vec_id") >= maxId - 1)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        col("nrm").as("qn"),
-        explode(probeCol(cents, col("embedding"), nprobe)).as("cid"))
-    postings.join(broadcast(probes), Seq("cid"))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("cosine", dotFix / (col("qn") * col("cn")))
-      .groupBy("qid")
-      .agg(topKAgg(4)(col("cosine"), col("nid")).as("top"))
-      .transform(explodeRanked(_, "cosine"))
-      .orderBy("qid", "rank")
+    rankProbed(postingsOf(ivfReadCommitted(s, dir)),
+      routeProbes(v.filter(col("vec_id") < 6 || col("vec_id") >= maxId - 1),
+        cents, nprobe), topK = 4)
   }
 
   /** DRIFT STATISTIC for a frozen-quantizer cid-partitioned index
@@ -766,8 +734,7 @@ object Similarity {
         val base = new java.io.File(dir, "seg=base")
         val src =
           if (new java.io.File(base, "_SUCCESS").exists())
-            s.read.option("basePath", dir)
-              .parquet(base.getAbsolutePath)
+            ivfReadSegs(s, dir, Seq(base))
           else ivfReadLayout(s, dir)
         src
           .select(col("cid").cast("int").as("c"),
@@ -788,19 +755,14 @@ object Similarity {
   /** Persist a layout's trained quantizer — one header line plus one
     * `{"cid":…,"emb":[…]}` line per centroid. Written ONCE, before
     * the layout publishes (the dir is still private scratch), via
-    * tmp+atomic-move so no reader ever parses a torn file. Floats
-    * round-trip exactly through toString/toFloat. */
+    * [[graft.core.AtomicFiles.replace]] so no reader ever parses a
+    * torn file. Floats round-trip exactly through toString/toFloat. */
   private[graft] def writeQuantizer(dir: String, cents: Seq[Ctr]): Unit = {
-    val body = (s"""{"k":${cents.size}}""" +: cents.map(c =>
-      s"""{"cid":${c.cid},"emb":[${c.cemb.mkString(",")}]}"""))
-      .mkString("", "\n", "\n")
-    val d = java.nio.file.Paths.get(dir)
-    java.nio.file.Files.createDirectories(d)
-    val tmp = java.nio.file.Files.createTempFile(d, "._quantizer", ".tmp")
-    java.nio.file.Files.write(tmp, body.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, d.resolve("_quantizer.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    ()
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    graft.core.AtomicFiles.replace(dir, "_quantizer.json",
+      (s"""{"k":${cents.size}}""" +: cents.map(c =>
+        s"""{"cid":${c.cid},"emb":[${c.cemb.mkString(",")}]}"""))
+        .mkString("", "\n", "\n"))
   }
 
   private[graft] def readQuantizer(dir: String): Option[Seq[Ctr]] = {
@@ -856,7 +818,6 @@ object Similarity {
     // a corpus query must not count ITSELF among its neighbors — the
     // exclusion runs before the top-k so it never burns a slot
     ivfServeFrame(s, layout, queries, nprobe, topK, excludeSelf = true)
-      .orderBy("qid", "rank")
   }
 
   /** Serve top-k for EXTERNAL query vectors (the real serve contract —
@@ -883,11 +844,11 @@ object Similarity {
       .withColumn("qn", sqrt(graft.functions.GraftFunctions
         .fixdotD(col("qe"), col("qe"))))
     ivfServeFrame(s, layout, queries, nprobe, topK)
-      .orderBy("qid", "rank")
   }
 
-  /** The shared routed-scan serve: (qid, qe, qn) probe frame →
-    * nprobe-routed postings join → map-side-combining top-k. */
+  /** The shared routed-scan serve: ROUTE the (qid, qe, qn) query
+    * frame against the layout's pinned quantizer, RANK over its
+    * postings — with the serve-only guards below. */
   private def ivfServeFrame(s: SparkSession, layout: String,
       queries: DataFrame, nprobe: Int, topK: Int,
       excludeSelf: Boolean = false): DataFrame = {
@@ -904,20 +865,13 @@ object Similarity {
     // as a query would NaN every one of its results).
     // tombstoned ids (takedowns awaiting their physical purge at the
     // next retrain) must never surface as neighbors
-    val postings = dropTombstoned(s,
+    rankProbed(
+      postingsOf(dropTombstoned(s,
         ivfReadLayout(s, layout).filter(col("nrm") > 0d),
-        ivfTombstonesCached(s, layout), "vec_id")
-      .select(col("cid"), col("vec_id").as("nid"),
-        col("embedding").as("ce"), col("nrm").as("cn"))
-    val probes = queries.filter(col("qn") > 0d)
-      .select(col("qid"), col("qe"), col("qn"),
-        explode(probeCol(cents, col("qe"), np)).as("cid"))
-    val joined = postings.join(broadcast(probes), Seq("cid"))
-    (if (excludeSelf) joined.filter(col("qid") =!= col("nid")) else joined)
-      .withColumn("cosine", dotFix / (col("qn") * col("cn")))
-      .groupBy("qid")
-      .agg(topKAgg(topK)(col("cosine"), col("nid")).as("top"))
-      .transform(explodeRanked(_, "cosine"))
+        ivfTombstonesCached(s, layout), "vec_id")),
+      routeProbes(queries.filter(col("qn") > 0d), cents, np,
+        id = "qid", emb = "qe", nrm = "qn"),
+      topK, excludeSelf)
   }
 
   /** RETRAIN maintenance op — what [[ivfBalance]]'s trigger schedules
@@ -945,19 +899,12 @@ object Similarity {
     // excluded from the training corpus and from the fresh layout —
     // their bytes do not survive the rewrite
     val corpus = dropTombstoned(s,
-      (if (segs.nonEmpty)
-        s.read.option("basePath", dir)
-          .parquet(segs.map(_._2.getAbsolutePath): _*)
-      else s.read.parquet(dir))
+      ivfReadSegs(s, dir, segs.map(_._2))
         .select(col("vec_id"), col("embedding"), col("nrm")),
       ivfTombstones(dir), "vec_id")
     val cents = trainCentroids(corpus, k, iters)
     val path = graft.core.TempDirs.scratchShared("ivfretrain")
-    corpus.select(nearestCidCol(cents, col("embedding")).as("cid"),
-        col("vec_id"), col("embedding"), col("nrm"))
-      .repartition(col("cid"))
-      .write.partitionBy("cid").mode("overwrite")
-      .parquet(s"$path/seg=base")
+    writeLayout(corpus, cents, s"$path/seg=base")
     // CARRY THE APPLIED-BID LEDGER FORWARD — exactly the snapshot's
     // bids, no more: the retrain folded those batches into its fresh
     // base, so a batch redelivered AFTER the generation swap (crash
@@ -1015,22 +962,37 @@ object Similarity {
             "cannot be reused; re-ingest under fresh ids")
       }
     }
-    ivfStreamAppend(layoutCentroids(s, path), path, batch, bid)
-    // POST-COMMIT POINTER RE-CHECK: a retrain whose snapshot predates
-    // this batch may publish its successor while we were writing —
-    // its catch-up sweep covers batches committed before the sweep
-    // LISTS the old layout, and this re-apply covers the rest (the
-    // two overlap rather than leave a gap). Each apply is guarded by
-    // the bid marker, so the convergence loop never double-lands a
-    // vector no matter how the orderings interleave.
+    // commit into the current layout, then the POST-COMMIT POINTER
+    // RE-CHECK: a retrain whose snapshot predates this batch may
+    // publish its successor while we were writing — its catch-up
+    // sweep covers batches committed before the sweep LISTS the old
+    // layout, and the re-apply covers the rest (the two overlap
+    // rather than leave a gap). Each apply is guarded by the bid
+    // marker, so the convergence loop never double-lands a vector no
+    // matter how the orderings interleave.
+    applyUntilStable(root, gen0, path)(p =>
+      ivfStreamAppend(layoutCentroids(s, p), p, batch, bid))
+    ()
+  }
+
+  /** Apply `write` to generation `gen0`'s layout `path`, then re-apply
+    * it to each newer current layout until the generation pointer is
+    * stable — the post-write pointer re-check a retrain publishing
+    * mid-write needs ([[ivfStreamAppendCurrent]], [[ivfDelete]]).
+    * `write` must be idempotent. Returns the generation it settled
+    * on. */
+  private def applyUntilStable(root: String, gen0: Int, path: String)(
+      write: String => Unit): Int = {
+    write(path)
     var gen = gen0
     var cur = ivfCurrent(root)
     while (cur.exists(_._1 != gen)) {
       val (g2, p2, _) = cur.get
       gen = g2
-      ivfStreamAppend(layoutCentroids(s, p2), p2, batch, bid)
+      write(p2)
       cur = ivfCurrent(root)
     }
+    gen
   }
 
   // ---- TAKEDOWN (GDPR for the vector store) ----
@@ -1072,15 +1034,7 @@ object Similarity {
     // crashes mid-apply errs toward MORE deletion at rollback, never
     // resurrection.
     recordTakedown(root, ids)
-    ivfTombstone(path, ids)
-    var gen = gen0
-    var cur = ivfCurrent(root)
-    while (cur.exists(_._1 != gen)) {
-      val (g2, p2, _) = cur.get
-      gen = g2
-      ivfTombstone(p2, ids)
-      cur = ivfCurrent(root)
-    }
+    val gen = applyUntilStable(root, gen0, path)(ivfTombstone(_, ids))
     (gen, ids.distinct.size)
   }
 
@@ -1182,15 +1136,11 @@ object Similarity {
   private def writeIdFile(d: java.io.File, ids: Seq[Long]): Unit = {
     require(ids.nonEmpty, "at least one vec_id required")
     d.mkdirs()
-    val tmp = java.nio.file.Files.createTempFile(d.toPath, ".del", ".tmp")
     val distinctIds = ids.distinct.sorted
     // `#n=` header = the torn-tail guard readIdFiles verifies
-    java.nio.file.Files.write(tmp,
-      (s"#n=${distinctIds.size}" +: distinctIds)
-        .mkString("", "\n", "\n").getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp,
-      d.toPath.resolve(s"del-${java.util.UUID.randomUUID()}.txt"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    graft.core.AtomicFiles.replace(d.getPath,
+      s"del-${java.util.UUID.randomUUID()}.txt",
+      (s"#n=${distinctIds.size}" +: distinctIds).mkString("", "\n", "\n"))
     // CHANGE MARKER, bumped AFTER the id file is durable and BEFORE
     // the delete request acks: serve-path readers key their memoized
     // tombstone set on this value (one GET instead of a directory
@@ -1200,20 +1150,8 @@ object Similarity {
     // would serve a GDPR-deleted id from a stale cache, so a failed
     // bump fails the delete request loudly (the ledger already
     // recorded the id; the retry is idempotent).
-    val seqTmp = java.nio.file.Files.createTempFile(
-      d.toPath, "._seq", ".tmp")
-    // this bump THROWS on failure (see above) — but it must not also
-    // orphan its temp file in the tombstone dir on the way out
-    try {
-      java.nio.file.Files.write(seqTmp,
-        java.util.UUID.randomUUID().toString.getBytes("UTF-8"))
-      java.nio.file.Files.move(seqTmp, d.toPath.resolve("_seq"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } finally {
-      java.nio.file.Files.deleteIfExists(seqTmp); ()
-    }
-    ()
+    graft.core.AtomicFiles.replace(d.getPath, "_seq",
+      java.util.UUID.randomUUID().toString)
   }
 
   /** Serve-path LIST counter for the tombstone channel (probe/spec
@@ -1819,8 +1757,7 @@ object Similarity {
       // tombstoned a job later (a takedown must not resurface even
       // transiently)
       val rows = dropTombstoned(s,
-        s.read.option("basePath", from)
-          .parquet(s"$from/seg=$b")
+        ivfReadSegs(s, from, Seq(new java.io.File(from, s"seg=$b")))
           .select("vec_id", "embedding"),
         exclude, "vec_id")
       val bid = b.stripPrefix("b").toLong
@@ -1989,10 +1926,7 @@ object Similarity {
   private[graft] def simIvfPqFrom(s: SparkSession, v: DataFrame,
       g: Int, nq: Int = 10, memoTag: Option[String] = None): DataFrame = {
     val nprobe = 2; val m = 4; val k = 16; val sub = 16
-    val coarse = v.filter(col("vec_id") < g)
-      .select(col("vec_id"), col("embedding"))
-      .orderBy("vec_id").collect().toSeq
-      .map(r => ctr(r.getLong(0).toInt + 1, r.getSeq[Float](1)))
+    val coarse = seedCents(v, g)
     // RESIDUAL-SPACE codebook (the canonical IVFADC choice, Jégou
     // §IV-A: the product quantizer is trained on residuals): entries
     // are corpus-head RESIDUALS, not raw vectors, and the codebook
@@ -2187,14 +2121,6 @@ object Similarity {
     val cents = seedCents(v, k)
     v.select(col("vec_id"), hierCidCol(cents, col("embedding")).as("cid"))
   }
-
-  /** Seed centers: the first-k vectors (sim06's flat-quantizer
-    * discipline — deterministic, oracle-replicable; cid = vec_id+1). */
-  private def seedCents(v: DataFrame, k: Int): Seq[Ctr] =
-    v.filter(col("vec_id") < k)
-      .select(col("vec_id"), col("embedding"))
-      .orderBy("vec_id").collect().toSeq
-      .map(r => ctr(r.getLong(0).toInt + 1, r.getSeq[Float](1)))
 
   /** The shared SemDeDup tail: given an `assign` step that adds the
     * per-vector `cid`, compute cosine-to-own-centroid, within-cluster

@@ -788,14 +788,9 @@ object TextOps {
       (i + 1, l, r, c, p) }.toDF("ord", "l", "r", "cnt", "pieces")
       .coalesce(1)
       .write.parquet(new java.io.File(d, "merges").getPath)
-    val tmp = java.nio.file.Files.createTempFile(d.toPath, ".meta", ".tmp")
-    java.nio.file.Files.write(tmp,
-      (s"""{"produced":$produced,"pieces":$pieces""" +
-        corpusFrom.map(f => s""","corpusFrom":$f""").getOrElse("") +
-        "}").getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp,
-      new java.io.File(d, "meta.json").toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    graft.core.AtomicFiles.replace(d.getPath, "meta.json",
+      s"""{"produced":$produced,"pieces":$pieces""" +
+        corpusFrom.map(f => s""","corpusFrom":$f""").getOrElse("") + "}")
     Option(new java.io.File(stateDir).listFiles())
       .getOrElse(Array.empty[java.io.File])
       .filter(f => f.getName.startsWith("state-v") &&

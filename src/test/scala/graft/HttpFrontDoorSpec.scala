@@ -1048,20 +1048,20 @@ class HttpFrontDoorSpec extends AnyFunSuite {
       rec("retrain", post(port, "/index/soak4_ann?op=retrain&iters=1", ""))
     }
     // one rollback lands mid-storm: re-read the pointer per attempt
-    // (racing retrains conflict as 409/400 — acceptable; 5xx is not)
-    def rollbacker(): Unit = {
+    // (racing retrains conflict as 409/400 — acceptable; 5xx is not).
+    // Waiting for the first retrain's publish (gen 2) spends no
+    // attempt; the wait is bounded by the retrainer thread's life.
+    def rollbacker(retrainT: Thread): Unit = {
+      def cur = Similarity.ivfCurrent(ivfRoot).map(_._1).getOrElse(1)
+      while (cur < 2 && retrainT.isAlive) retrainT.join(100)
+      assert(cur >= 2, "no retrain published a generation to roll back")
       var ok = false; var attempts = 0
       while (!ok && attempts < 20) {
         attempts += 1
-        val cur = Similarity.ivfCurrent(ivfRoot).map(_._1).getOrElse(1)
-        if (cur < 2) Thread.sleep(100)
-        else {
-          val r = post(port,
-            s"/index/soak4_ann?op=rollback&gen=${cur - 1}", "")
-          rec("rollback", r)
-          ok = r.statusCode() == 200
-          if (!ok) Thread.sleep(100)
-        }
+        val r = post(port, s"/index/soak4_ann?op=rollback&gen=${cur - 1}", "")
+        rec("rollback", r)
+        ok = r.statusCode() == 200
+        if (!ok) Thread.sleep(100)
       }
       assert(ok, s"rollback never landed in $attempts attempts")
     }
@@ -1098,11 +1098,16 @@ class HttpFrontDoorSpec extends AnyFunSuite {
       rec("balance", post(port, "/index/soak4_ann?op=balance", ""))
       rec("ihist", post(port, "/index/soak4_ann?op=history", ""))
     }
+    // a storm thread's failed assertion must fail THIS test, not die
+    // unseen in its worker thread
+    val stormFailures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    def storming(body: => Unit): Thread = new Thread(() =>
+      try body catch { case t: Throwable => stormFailures.add(t); () })
+    val retrainT = storming(retrainer())
     val storm = Seq(
-      new Thread(() => writer(1L)), new Thread(() => writer(2L)),
-      new Thread(() => deleter()), new Thread(() => retrainer()),
-      new Thread(() => rollbacker())) ++
-      Seq(new Thread(() => maintainer()), new Thread(() => reader()))
+      storming(writer(1L)), storming(writer(2L)),
+      storming(deleter()), retrainT, storming(rollbacker(retrainT))) ++
+      Seq(storming(maintainer()), storming(reader()))
     try {
       storm.foreach(_.start())
       storm.take(5).foreach(_.join(300000))
@@ -1125,6 +1130,8 @@ class HttpFrontDoorSpec extends AnyFunSuite {
       stop.set(true)
       storm.drop(5).foreach(_.join(300000))
       import scala.jdk.CollectionConverters._
+      Option(stormFailures.peek()).foreach(t =>
+        fail(s"${stormFailures.size} storm thread(s) failed; first: $t", t))
       val all = statuses.asScala.toSeq
       val bad5 = all.filter(_._2 >= 500)
       assert(bad5.isEmpty, s"soak produced 5xx: ${bad5.take(3)}")

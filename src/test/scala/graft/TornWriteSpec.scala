@@ -219,6 +219,38 @@ class TornWriteSpec extends AnyFunSuite {
     }
   }
 
+  test("blocked atomic replace: a target that cannot be replaced (a " +
+      "non-empty directory under its name) fails the write loudly and " +
+      "leaves no temp file behind — checkpoint and quantizer sidecar") {
+    import spark.implicits._
+    def block(f: java.io.File): Unit = {
+      f.mkdirs()
+      java.nio.file.Files.write(new java.io.File(f, "x").toPath,
+        Array[Byte](1))
+      ()
+    }
+    def tmps(d: String): Seq[String] =
+      Option(new java.io.File(d).listFiles())
+        .getOrElse(Array.empty[java.io.File]).map(_.getName)
+        .filter(_.endsWith(".tmp")).toSeq
+    val dir = graft.core.TempDirs.scratchShared("blockedckpt")
+    TxnTable.init(spark, dir,
+      (0L until 10L).map(k => (k, k)).toDF("k", "v"),
+      numFiles = 1, statsCols = Seq("k"))
+    // resolve (and memoize) the live set first, so the replace itself
+    // is the only step that meets the blocked name
+    TxnTable.liveEntries(dir)
+    block(new java.io.File(dir, s"checkpoint-v${TxnTable.version(dir)}.json"))
+    intercept[java.io.IOException] { TxnTable.checkpoint(dir) }
+    assert(tmps(dir).isEmpty, s"checkpoint orphaned ${tmps(dir)}")
+    val layout = graft.core.TempDirs.scratchShared("blockedquant")
+    block(new java.io.File(layout, "_quantizer.json"))
+    intercept[java.io.IOException] {
+      Similarity.writeQuantizer(layout, Seq(Similarity.ctr(1, Seq(1f, 0f))))
+    }
+    assert(tmps(layout).isEmpty, s"quantizer orphaned ${tmps(layout)}")
+  }
+
   test("torn gen pointer: a zero-length husk reads as not-published " +
       "(self-heal); a half-written body fails loudly naming the file") {
     val root = graft.core.TempDirs.scratchShared("torngen")
