@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.DecimalType
+import scala.jdk.CollectionConverters._
 
 /** Parquet table loaders + numeric-determinism helpers.
   *
@@ -14,8 +15,82 @@ import org.apache.spark.sql.types.DecimalType
   * in both Spark and DuckDB, so no intermediate rounding ever occurs.
   */
 object Tables {
-  def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A fresh relation over `<dir>/<name>.parquet`. The parquet schema
+    * is inferred once per (session, file identity, inference confs)
+    * and memoized in [[Caches.memoObj]]; later calls read with that
+    * schema declared, so planning a request over a known table runs
+    * no Spark job (inference is a one-task job per read). Only the
+    * schema is memoized, never the frame: each call returns a new scan
+    * with fresh attribute ids, which the planner's paged driving dim
+    * relies on. The key carries `dir` as its own '|' token, so
+    * [[graft.semantic.Freshness.refresh]] drops it; it also carries
+    * the file identity ([[fileStamp]]), so a file landed without a
+    * refresh is re-inferred, and every conf that changes what
+    * inference returns ([[rawEvents]] sets the first two). A missing
+    * path fails with Spark's own path-not-found error. */
+  def tbl(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    fileStamp(path) match {
+      case None => spark.read.parquet(path)
+      case Some(stamp) =>
+        val confs = InferenceConfs
+          .map(k => spark.conf.getOption(k).getOrElse("")).mkString(",")
+        var inferred: DataFrame = null // the miss's own read, returned as is
+        val schema = Caches.memoObj(spark,
+            s"tblschema|$dir|$name|$confs|$stamp") {
+          inferred = spark.read.parquet(path)
+          inferred.schema
+        }
+        if (inferred != null) inferred
+        else spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.timestampType")
+
+  /** The identity of the parquet data at `path`, as a hex digest (so
+    * it holds no '|'), or None when the path does not exist or changes
+    * under the walk (the caller then reads without the memo, as Spark
+    * alone would). A file is identified by its size, nanosecond mtime
+    * and file key (the inode), so a replace-by-rename is seen even at
+    * equal size and mtime; a directory by the sorted relative names,
+    * sizes, mtimes and file keys of every file below it (partition
+    * subdirectories included). Both footer facts of a table, [[tbl]]'s
+    * schema and [[tableRows]], key on it. */
+  private[core] def fileStamp(path: String): Option[String] = {
+    import java.nio.file.{FileVisitOption, Files, Path, Paths}
+    import java.nio.file.attribute.BasicFileAttributes
+    def attrs(p: Path): BasicFileAttributes =
+      Files.readAttributes(p, classOf[BasicFileAttributes])
+    def line(name: String, a: BasicFileAttributes): String =
+      s"$name ${a.size} ${a.lastModifiedTime.to(java.util.concurrent.TimeUnit.NANOSECONDS)} ${a.fileKey}"
+    try {
+      val root = Paths.get(path)
+      val rootAttrs = attrs(root)
+      val lines =
+        if (!rootAttrs.isDirectory) Seq(line("", rootAttrs))
+        else scala.util.Using.resource(
+            Files.walk(root, FileVisitOption.FOLLOW_LINKS)) { st =>
+          st.iterator().asScala.map(p => (p, attrs(p)))
+            .collect { case (p, a) if a.isRegularFile =>
+              line(root.relativize(p).toString, a) }
+            .toSeq.sorted
+        }
+      Some(java.util.HexFormat.of().formatHex(
+        java.security.MessageDigest.getInstance("SHA-256")
+          .digest(lines.mkString("\n").getBytes("UTF-8"))))
+    } catch {
+      case _: java.io.IOException | _: java.io.UncheckedIOException |
+          _: java.nio.file.InvalidPathException => None
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = tbl(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = tbl(s, d, "nation")
@@ -33,7 +108,8 @@ object Tables {
     * for tables that are plain directories rather than manifest
     * logs. */
   def tableRows(s: SparkSession, dir: String, name: String): Long =
-    Caches.memoObj(s, s"tablerows|$dir|$name") {
+    Caches.memoObj(s, s"tablerows|$dir|$name|" +
+        fileStamp(s"$dir/$name.parquet").getOrElse("")) {
       val f = new java.io.File(s"$dir/$name.parquet")
       val paths =
         if (f.isDirectory)

@@ -48,14 +48,18 @@ object Freshness {
     *     frames, IVF quantizers, …) are rebuilt from the new data;
     *  3. refreshes Spark's own path caches so any catalog-cached
     *     relation under the dir re-lists its files.
-    * Requests plan against `Tables.tbl` per call, so after this hook
-    * the very next request reflects the landed data — including
-    * re-broadcasting changed dims. */
-  def refresh(s: SparkSession, dir: String): Unit = {
+    * Requests plan against `Tables.tbl` per call, which reads with a
+    * parquet schema memoized per (dir, table, file identity, inference
+    * confs); step 2 drops those schema entries too, so after this hook
+    * the very next request re-infers and reflects the landed data —
+    * including re-broadcasting changed dims. (A file landed WITHOUT the
+    * hook changes its identity, so its schema is re-inferred as well.)
+    * Returns the number of session cache entries dropped in step 2. */
+  def refresh(s: SparkSession, dir: String): Int = {
     memo.keySet.removeIf(_._1 == dir)
-    graft.core.Caches.invalidateMatching(s, dir)
+    val dropped = graft.core.Caches.invalidateMatching(s, dir)
     s.catalog.refreshByPath(dir)
-    ()
+    dropped
   }
 
   def forFact(s: SparkSession, dir: String, f: FactDef): TableFreshness =

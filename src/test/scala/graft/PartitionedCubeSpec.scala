@@ -108,4 +108,26 @@ class PartitionedCubeSpec extends AnyFunSuite {
       s"expected 3 runtime-pruned partitions, got ${scan.metrics("numPartitions").value} " +
         s"of ${scan.selectedPartitions.partitionCount} statically selected")
   }
+
+  test("Tables.tbl over a partitioned directory keeps its partition columns") {
+    // tbl declares a memoized schema on every read after the first; a
+    // partitioned layout must come back with the same columns, types
+    // (an int partition column stays int) and order as plain inference
+    val tmp = graft.core.TempDirs.scratch("tbl-part")
+    val path = s"$tmp/orders_pm.parquet"
+    graft.core.Tables.orders(spark, sf)
+      .filter(year(col("o_orderdate")) < 1997)
+      .withColumn("o_year", year(col("o_orderdate")))
+      .withColumn("o_month", date_format(col("o_orderdate"), "MM"))
+      .write.partitionBy("o_year", "o_month").parquet(path)
+    val inferred = spark.read.parquet(path)
+    val first = graft.core.Tables.tbl(spark, tmp, "orders_pm")
+    val second = graft.core.Tables.tbl(spark, tmp, "orders_pm")
+    assert(first.schema == inferred.schema && second.schema == inferred.schema,
+      s"${second.schema.treeString} vs ${inferred.schema.treeString}")
+    assert(inferred.schema.fieldNames.takeRight(2).toSeq == Seq("o_year", "o_month"))
+    assert(second.count() == inferred.count())
+    assert(second.filter(col("o_year") === 1995).count() ==
+      inferred.filter(col("o_year") === 1995).count())
+  }
 }

@@ -472,6 +472,109 @@ class SemanticLayerSpec extends AnyFunSuite {
       "memoized intermediate not rebuilt from the landed data")
   }
 
+  test("schema memo: a file replaced in place WITHOUT refresh is re-inferred") {
+    // Tables.tbl declares a memoized parquet schema; the memo key
+    // carries the file identity, so a table landed under the same path
+    // without calling Freshness.refresh is re-inferred on the next plan
+    // (and its footer row count re-read) instead of served stale
+    import graft.semantic.model._
+    import org.apache.spark.sql.functions._
+    import java.nio.file.{Files, Paths}
+    val tmp = graft.core.TempDirs.scratch("restamp")
+    for (t <- Seq("orders", "customer", "nation", "region"))
+      Files.copy(Paths.get(s"$sf/$t.parquet"), Paths.get(s"$tmp/$t.parquet"))
+    val cube = SemanticQueries.orderCube.copy(dims =
+      SemanticQueries.orderCube.dims.map(d =>
+        if (d.name == "region") d.copy(cols = d.cols :+ PubCol("Region Note", "r_note"))
+        else d))
+    val reg = Registry(cube)
+    def rows(fields: String*): Either[String, Array[org.apache.spark.sql.Row]] =
+      for {
+        req <- request.parse(s"""{"cube": "order_stats", "selectFields": [""" +
+          (fields :+ "Order Count").map(f => s"""{"field": "$f"}""").mkString(", ") + "]}")
+        m <- RequestModel.from(req, reg)
+        p <- graft.planner.Planner.plan(m, spark, tmp)
+      } yield p.df.collect()
+    assert(rows("Region Name").fold(e => fail(e), _.length) == 5)
+    val n0 = graft.core.Tables.tableRows(spark, tmp, "region")
+    assert(intercept[org.apache.spark.sql.AnalysisException](
+      rows("Region Name", "Region Note")).getMessage.contains("r_note"),
+      "precondition: the old file has no r_note column")
+
+    // land a replacement as ONE file: staged write, then a rename over
+    // the old path, the way an external ingestion job lands it
+    val old = graft.core.Tables.tbl(spark, tmp, "region")
+    val landed = old
+      .withColumn("r_note", concat(col("r_name"), lit("!")))
+      .unionByName(old.limit(1)
+        .withColumn("r_regionkey", lit(99L).cast(old.schema("r_regionkey").dataType))
+        .withColumn("r_note", lit("spare")))
+    val stage = s"$tmp/_stage_region"
+    spark.createDataFrame(java.util.Arrays.asList(landed.collect(): _*),
+      landed.schema).coalesce(1).write.parquet(stage)
+    val part = new java.io.File(stage).listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    Files.move(part.toPath, Paths.get(s"$tmp/region.parquet"),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+
+    val after = rows("Region Name", "Region Note").fold(e => fail(e), identity)
+    assert(after.length == 5 && after.forall(_.getString(1).endsWith("!")),
+      s"the plan did not see the landed column: ${after.toSeq}")
+    assert(graft.core.Tables.tableRows(spark, tmp, "region") == n0 + 1,
+      "tableRows served the row count of the replaced file")
+  }
+
+  test("schema memo: Freshness.refresh drops the dir's schema entries") {
+    import java.nio.file.{Files, Paths}
+    val tmp = graft.core.TempDirs.scratch("refresh-drop")
+    for (t <- Seq("nation", "region"))
+      Files.copy(Paths.get(s"$sf/$t.parquet"), Paths.get(s"$tmp/$t.parquet"))
+    graft.core.Tables.nation(spark, tmp)
+    graft.core.Tables.region(spark, tmp)
+    graft.core.Tables.region(spark, tmp) // a hit: no second entry
+    assert(graft.semantic.Freshness.refresh(spark, tmp) == 2,
+      "refresh must drop exactly the two schema entries keyed on the dir")
+    assert(graft.semantic.Freshness.refresh(spark, tmp) == 0)
+    // a sibling dir's entries survive a refresh of this one
+    graft.core.Tables.region(spark, tmp)
+    assert(graft.semantic.Freshness.refresh(spark, tmp + "x") == 0)
+    assert(graft.semantic.Freshness.refresh(spark, tmp) == 1)
+  }
+
+  test("schema memo: a conf that changes inference is part of the key") {
+    // a naive (isAdjustedToUTC=false) µs timestamp column in a file
+    // written without Spark's schema footer (as the events generator
+    // writes them) infers as TIMESTAMP_NTZ or TIMESTAMP by
+    // spark.sql.parquet.inferTimestampNTZ.enabled, which rawEvents
+    // flips: a schema memoized under one setting must not be declared
+    // under the other
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64
+    import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+    val tmp = graft.core.TempDirs.scratch("ntz")
+    val schema = Types.buildMessage()
+      .required(INT64).as(LogicalTypeAnnotation.timestampType(false,
+        LogicalTypeAnnotation.TimeUnit.MICROS)).named("t")
+      .named("ntz")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$tmp/ntz.parquet"))
+      .withType(schema).build()
+    try w.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+      .newGroup().append("t", 1704448800000000L))
+    finally w.close()
+    val key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    val prior = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "true")
+      assert(graft.core.Tables.tbl(spark, tmp, "ntz").schema("t").dataType ==
+        TimestampNTZType)
+      spark.conf.set(key, "false")
+      assert(graft.core.Tables.tbl(spark, tmp, "ntz").schema("t").dataType ==
+        TimestampType)
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("PublicColumn guard rails: required, dependsOn, incompatibleWith, filteringRequired") {
     import graft.semantic.model._
     // the four reference PublicColumn validation knobs (Column.scala
