@@ -2,6 +2,8 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.DecimalType
+import java.nio.file.{FileVisitOption, Files, Path, Paths}
+import java.nio.file.attribute.BasicFileAttributes
 import scala.jdk.CollectionConverters._
 
 /** Parquet table loaders + numeric-determinism helpers.
@@ -64,25 +66,13 @@ object Tables {
     * sizes, mtimes and file keys of every file below it (partition
     * subdirectories included). Both footer facts of a table, [[tbl]]'s
     * schema and [[tableRows]], key on it. */
-  private[core] def fileStamp(path: String): Option[String] = {
-    import java.nio.file.{FileVisitOption, Files, Path, Paths}
-    import java.nio.file.attribute.BasicFileAttributes
-    def attrs(p: Path): BasicFileAttributes =
-      Files.readAttributes(p, classOf[BasicFileAttributes])
-    def line(name: String, a: BasicFileAttributes): String =
-      s"$name ${a.size} ${a.lastModifiedTime.to(java.util.concurrent.TimeUnit.NANOSECONDS)} ${a.fileKey}"
+  private[core] def fileStamp(path: String): Option[String] =
     try {
       val root = Paths.get(path)
-      val rootAttrs = attrs(root)
-      val lines =
-        if (!rootAttrs.isDirectory) Seq(line("", rootAttrs))
-        else scala.util.Using.resource(
-            Files.walk(root, FileVisitOption.FOLLOW_LINKS)) { st =>
-          st.iterator().asScala.map(p => (p, attrs(p)))
-            .collect { case (p, a) if a.isRegularFile =>
-              line(root.relativize(p).toString, a) }
-            .toSeq.sorted
-        }
+      val lines = leafFiles(root).map { case (p, a) =>
+        s"${root.relativize(p)} ${a.size} ${a.lastModifiedTime.to(
+          java.util.concurrent.TimeUnit.NANOSECONDS)} ${a.fileKey}"
+      }.sorted
       Some(java.util.HexFormat.of().formatHex(
         java.security.MessageDigest.getInstance("SHA-256")
           .digest(lines.mkString("\n").getBytes("UTF-8"))))
@@ -90,7 +80,16 @@ object Tables {
       case _: java.io.IOException | _: java.io.UncheckedIOException |
           _: java.nio.file.InvalidPathException => None
     }
-  }
+
+  /** Every regular file at or below `root` (a file root is its own one
+    * entry) with its attributes, following links. */
+  private def leafFiles(root: Path): List[(Path, BasicFileAttributes)] =
+    scala.util.Using.resource(
+        Files.walk(root, FileVisitOption.FOLLOW_LINKS)) { st =>
+      st.iterator().asScala.map(p =>
+        (p, Files.readAttributes(p, classOf[BasicFileAttributes])))
+        .filter(_._2.isRegularFile).toList
+    }
 
   def region(s: SparkSession, d: String): DataFrame    = tbl(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = tbl(s, d, "nation")
@@ -106,16 +105,19 @@ object Tables {
     * manifest channel: it feeds cardinality-aware decisions
     * ([[graft.operators.KeyShip]]'s `keyRows`, CostModel fixedRows)
     * for tables that are plain directories rather than manifest
-    * logs. */
+    * logs. A directory table counts every `*.parquet` file below it,
+    * partition subdirectories (`col=val/`) included — the file set
+    * Spark reads, which skips any path component starting with `.`,
+    * or with `_` unless it names a partition. */
   def tableRows(s: SparkSession, dir: String, name: String): Long =
     Caches.memoObj(s, s"tablerows|$dir|$name|" +
         fileStamp(s"$dir/$name.parquet").getOrElse("")) {
-      val f = new java.io.File(s"$dir/$name.parquet")
-      val paths =
-        if (f.isDirectory)
-          f.listFiles().filter(_.getName.endsWith(".parquet"))
-            .map(_.getPath).toSeq
-        else Seq(f.getPath)
+      val root = Paths.get(s"$dir/$name.parquet")
+      val paths = leafFiles(root).map(_._1).filter(p => p == root ||
+        p.toString.endsWith(".parquet") && !root.relativize(p).iterator()
+          .asScala.map(_.toString).exists(c => c.startsWith(".") ||
+            c.startsWith("_") && !c.contains("=")))
+        .map(_.toString).sorted
       java.lang.Long.valueOf(
         Layout.multiStatsWithRows(s, paths, Nil).map(_._2).sum)
     }.longValue()

@@ -20,8 +20,8 @@ import scala.jdk.CollectionConverters._
   *    commit's changes (removed paths + added entries — O(changed
   *    files) to render, the commit-metadata analogue of Delta Lake's
   *    delta commits) for mutations, or a full snapshot for commits
-  *    that replace the whole live set (init/optimize/restore) and
-  *    for legacy tables. Entries carry byte size, exact row count,
+  *    that replace the whole live set (init/optimize/restore).
+  *    Entries carry byte size, exact row count,
   *    and per-column [min,max] stats (the Delta-style stats
   *    channel): stats are computed ONCE, from the footers of the
   *    files a commit just wrote, and every later mutation plans its
@@ -43,9 +43,11 @@ import scala.jdk.CollectionConverters._
   *    touches O(files-containing-k), not O(table); untouched files
   *    carry over into the new manifest BY REFERENCE, stats included
   *    (never recomputed);
-  *  - legacy manifests (bare path lines, no stats) stay readable:
-  *    entries missing the needed column's stats fall back to a footer
+  *  - entries missing the needed column's stats (a column first used
+  *    as a mutation key after they were written) fall back to a footer
   *    read for exactly those files;
+  *  - ONE on-disk format: an older artifact fails every read loudly,
+  *    naming [[upgrade]], the one-shot rewrite into the current one;
   *  - [[vacuum]] physically deletes files no live manifest references.
   *
   * CONCURRENCY (optimistic, serialized by the manifest log): every
@@ -77,8 +79,8 @@ object TxnTable {
 
   /** One live file of a table version: relative path, byte size,
     * per-column [min,max], and exact row count — all carried from its
-    * commit's footer pass. `bytes < 0` / empty stats / `rows < 0` =
-    * legacy entry (pre-stats or pre-rows manifest). */
+    * commit's footer pass. Empty stats / `rows < 0` = committed by a
+    * table with no declared stats columns (no footer pass ran). */
   final case class FileEntry(path: String, bytes: Long,
       stats: Map[String, (Long, Long)], rows: Long = -1L)
 
@@ -103,20 +105,25 @@ object TxnTable {
   def version(dir: String): Int =
     manifestLog.head(dir).getOrElse(sys.error(s"no manifest under $dir"))
 
+  private def needsUpgrade(f: java.io.File, what: String): Nothing =
+    VersionLog.predatesFormat(f, what,
+      s"""TxnTable.upgrade(spark, "${f.getParent}")""")
+
+  // anything but this entry shape is a parse error, never a guessed
+  // file path (a corrupted or foreign-format line must fail loudly
+  // here, not as a confusing read error later, and must never make
+  // vacuum misjudge what's referenced)
   private val entryPat =
-    """\{"path":"([^"]+)","bytes":(-?\d+)(?:,"rows":(-?\d+))?,"stats":\{(.*)\}\}""".r
+    """\{"path":"([^"]+)","bytes":(\d+),"rows":(-?\d+),"stats":\{(.*)\}\}""".r
   private val statPat = """"([^"]+)":\[(-?\d+),(-?\d+)\]""".r
-  // legacy pre-stats format: one QUOTED BARE PATH per line — anything
-  // else is a parse error, never a guessed file path (a corrupted or
-  // future-format line must fail loudly here, not as a confusing read
-  // error later, and must never make vacuum misjudge what's referenced)
-  private val legacyPat = """"([^"]+)"""".r
-  // manifest METADATA header lines (all optional — legacy manifests
-  // have none): the table's physical schema, the epoch anchors, and
-  // the commit wall-clock timestamp
+  // manifest METADATA header lines, all three on every manifest: the
+  // table's physical schema, the epoch anchors, and the commit
+  // wall-clock timestamp
   private val schemaLinePrefix = """{"schema":"""
   private val epochsLinePrefix = """{"epochs":"""
   private val tsLinePrefix = """{"ts":"""
+  private val headerPrefixes =
+    Seq(schemaLinePrefix, epochsLinePrefix, tsLinePrefix)
   // DELTA manifest vocabulary: a manifest carrying this marker lists
   // only its commit's CHANGES — `{"remove":"<path>"}` lines for files
   // rewritten away plus ordinary entry lines for files added — and
@@ -126,7 +133,7 @@ object TxnTable {
   // per streaming trigger — the write-side twin of the footer walks
   // the stats/schema channels killed on the read side. Full-snapshot
   // manifests remain the format of init/optimize/restore (commits
-  // that replace the whole live set anyway) and of legacy tables.
+  // that replace the whole live set anyway).
   private val deltaMarker = """{"delta":true}"""
   private val removePat = """\{"remove":"([^"]+)"\}""".r
 
@@ -151,14 +158,14 @@ object TxnTable {
     *    filesystem mtime is NOT durable metadata (an rsync, a backup
     *    restore, an object-store migration rewrites it), so keying
     *    time travel off mtime would silently shift answers after a
-    *    routine migration. mtime remains the legacy fallback.
+    *    routine migration.
     *  - `delta`: whether the manifest is a change record (resolved
     *    against its predecessor) or a full snapshot.
     * Committed manifests are immutable, so all parse once per
     * (dir, version) and cache. */
-  private final case class ManifestMeta(schema: Option[
-      org.apache.spark.sql.types.StructType], epochs: Option[Map[String, Int]],
-      ts: Option[Long] = None, delta: Boolean = false)
+  private final case class ManifestMeta(
+      schema: org.apache.spark.sql.types.StructType,
+      epochs: Map[String, Int], ts: Long, delta: Boolean)
 
   private val metaCache = new java.util.concurrent.ConcurrentHashMap[
     (String, Int), ManifestMeta]()
@@ -167,42 +174,38 @@ object TxnTable {
     val key = (dir, v)
     val hit = metaCache.get(key)
     if (hit != null) return hit
-    val f = manifestLog.file(dir, v)
-    // absence is NOT cached: an in-flight version's manifest may
-    // appear a moment later
-    if (!f.exists()) return ManifestMeta(None, None)
-    val lines = new String(
-      java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      .split('\n').toSeq.map(_.trim.stripSuffix(","))
-    val schema = lines.find(_.startsWith(schemaLinePrefix)).map { l =>
-      org.apache.spark.sql.types.DataType.fromJson(
-        l.stripPrefix(schemaLinePrefix).dropRight(1))
-        .asInstanceOf[org.apache.spark.sql.types.StructType] }
-    val epochs = lines.find(_.startsWith(epochsLinePrefix)).map { l =>
-      """"([A-Za-z]+)":(\d+)""".r
-        .findAllMatchIn(l.stripPrefix(epochsLinePrefix))
-        .map(m => m.group(1) -> m.group(2).toInt).toMap }
-    val ts = lines.find(_.startsWith(tsLinePrefix)).map(
-      _.stripPrefix(tsLinePrefix).stripSuffix("}").trim.toLong)
-    val r = ManifestMeta(schema, epochs, ts, lines.contains(deltaMarker))
+    val lines = manifestLines(dir, v)
+    val r = ManifestMeta(schemaOf(lines).get, epochsOf(lines).get,
+      tsOf(lines).get, lines.contains(deltaMarker))
     if (metaCache.size > 10000) metaCache.clear()
     metaCache.put(key, r)
     r
   }
 
-  /** The table's recorded PHYSICAL schema at version `v` (None for
-    * manifests predating the schema channel). */
-  private[graft] def physSchemaAt(dir: String, v: Int): Option[
-      org.apache.spark.sql.types.StructType] = manifestMeta(dir, v).schema
+  // the header decoders (None = the line is absent)
+  private def header(lines: Seq[String], prefix: String): Option[String] =
+    lines.find(_.startsWith(prefix)).map(_.stripPrefix(prefix))
+  private def schemaOf(lines: Seq[String]) = header(lines, schemaLinePrefix)
+    .map(h => org.apache.spark.sql.types.DataType.fromJson(h.dropRight(1))
+      .asInstanceOf[org.apache.spark.sql.types.StructType])
+  private def epochsOf(lines: Seq[String]) = header(lines, epochsLinePrefix)
+    .map(""""([A-Za-z]+)":(\d+)""".r.findAllMatchIn(_)
+      .map(m => m.group(1) -> m.group(2).toInt).toMap)
+  private def tsOf(lines: Seq[String]) =
+    header(lines, tsLinePrefix).map(_.stripSuffix("}").trim.toLong)
 
-  /** Test/probe seam: forget cached manifest metadata for `dir` (a
-    * probe that rewrites a manifest in place violates the
-    * immutability premise the cache rests on). */
-  private[graft] def dropMetaCacheForTest(dir: String): Unit = {
+  /** The table's recorded PHYSICAL schema at version `v`. */
+  private[graft] def physSchemaAt(dir: String,
+      v: Int): org.apache.spark.sql.types.StructType =
+    manifestMeta(dir, v).schema
+
+  /** Forget the cached manifest metadata, epoch sets and live sets of
+    * `dir` — after [[upgrade]] (or a probe) rewrote manifests in place,
+    * breaking the immutability premise the caches rest on. */
+  private[graft] def dropCaches(dir: String): Unit = {
     metaCache.keySet.removeIf(_._1 == dir)
     epochCache.keySet.removeIf(_._1 == dir)
     entriesCache.keySet.removeIf(_._1 == dir)
-    legacyEpochIdxCache.remove(dir)
     ()
   }
 
@@ -231,66 +234,62 @@ object TxnTable {
       (base.fields ++ extra).map(_.copy(nullable = true)))
   }
 
-  /** The physical schema a commit at `planned + 1` should record: the
-    * schema carried by `planned`'s manifest — a legacy table resolves
-    * it ONCE via a mergeSchema footer union, the last such walk it
-    * ever pays — unioned with the newly written data's columns. */
-  private def nextSchema(s: SparkSession, dir: String, planned: Int,
-      newData: Option[org.apache.spark.sql.types.StructType])
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val prior = physSchemaAt(dir, planned).orElse {
-      val paths = liveFiles(dir, planned).map(rel => s"$dir/$rel")
-      if (paths.isEmpty) None
-      else Some(s.read.option("mergeSchema", "true")
-        .parquet(paths: _*).schema)
-    }
-    (prior, newData) match {
-      case (Some(p), Some(n)) => Some(unionSchema(p, n))
-      case (p, n) => p.orElse(n)
-    }
-  }
-
-  /** Parse one manifest file body. Left(entries) for a full-snapshot
-    * manifest; Right((adds, removes)) for a delta. One entry per
-    * line; bare-string lines (legacy manifests) parse as stats-less
-    * entries; unrecognized lines are a loud error. */
-  private def parseManifestBody(dir: String, v: Int)
-      : Either[Seq[FileEntry], (Seq[FileEntry], Set[String])] = {
+  /** The trimmed lines of manifest `v`, under the TORN-TAIL GUARD and
+    * the format check. Every manifest is rendered as an array, `[` …
+    * `]`: a truncation that happens to cut at a LINE boundary — or at
+    * zero bytes — would otherwise parse as a valid, silently SHORTER
+    * live set (an empty delta drops its predecessor chain: a
+    * zero-byte v2 resolves v3 to v3's own adds) — the torn shapes a
+    * per-line parse cannot catch (mid-line tears die loudly as
+    * unparseable lines). The publish seam itself cannot tear (tmp is
+    * fully written before the link/move), so this is external-damage
+    * detection, and loud is the contract. A manifest missing any
+    * header line predates the current format (`current` checks). */
+  private def manifestLines(dir: String, v: Int,
+      current: Boolean = true): Seq[String] = {
     val f = manifestLog.file(dir, v)
     if (!f.exists()) sys.error(s"no manifest v$v under $dir")
     val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-    // TORN-TAIL GUARD: every manifest is rendered as an array, `[` …
-    // `]`. A truncation that happens to cut at a LINE boundary — or
-    // at zero bytes — would otherwise parse as a valid, silently
-    // SHORTER live set (an empty delta drops its predecessor chain: a
-    // zero-byte v2 resolves v3 to v3's own adds) — the torn shapes the
-    // per-line parse below cannot catch (mid-line tears die loudly as
-    // unparseable lines). The publish seam itself cannot tear (tmp is
-    // fully written before the link/move), so this is external-damage
-    // detection, and loud is the contract.
     val body = txt.trim
     if (!body.startsWith("[") || !body.endsWith("]")) sys.error(
       s"torn manifest ${f.getPath} (empty or unterminated body) — " +
         "restore it to recover")
+    val lines = txt.split('\n').toSeq.map(_.trim.stripSuffix(","))
+    if (current) headerPrefixes.find(p => header(lines, p).isEmpty)
+      .foreach(p => needsUpgrade(f, s"no ${p.drop(2).dropRight(2)} header"))
+    lines
+  }
+
+  private def statsOf(body: String): Map[String, (Long, Long)] =
+    statPat.findAllMatchIn(body).map(m =>
+      m.group(1) -> (m.group(2).toLong, m.group(3).toLong)).toMap
+
+  /** One entry line of a manifest or checkpoint (`kind`) `f`. */
+  private def parseEntry(line: String, kind: String,
+      f: java.io.File): FileEntry =
+    line match {
+      case entryPat(path, bytes, rows, statsBody) =>
+        FileEntry(path, bytes.toLong, statsOf(statsBody), rows.toLong)
+      case _ => sys.error(s"unparseable $kind line in ${f.getPath}: '$line' " +
+        "(a table written before the current on-disk format needs one " +
+        "TxnTable.upgrade call)")
+    }
+
+  /** Parse one manifest file body. Left(entries) for a full-snapshot
+    * manifest; Right((adds, removes)) for a delta. One entry per
+    * line; unrecognized lines are a loud error. */
+  private def parseManifestBody(dir: String, v: Int)
+      : Either[Seq[FileEntry], (Seq[FileEntry], Set[String])] = {
+    val f = manifestLog.file(dir, v)
     var isDelta = false
     val adds = Seq.newBuilder[FileEntry]
     val removes = Set.newBuilder[String]
-    txt.split('\n').map(_.trim.stripSuffix(",")).foreach {
+    manifestLines(dir, v).foreach {
       case "" | "[" | "]" =>
-      case l if l.startsWith(schemaLinePrefix) ||
-        l.startsWith(epochsLinePrefix) ||
-        l.startsWith(tsLinePrefix) => // metadata header
+      case l if headerPrefixes.exists(l.startsWith) => // metadata header
       case `deltaMarker` => isDelta = true
       case removePat(p) => removes += p
-      case entryPat(path, bytes, rowsOrNull, statsBody) =>
-        val stats = statPat.findAllMatchIn(statsBody).map(m =>
-          m.group(1) -> (m.group(2).toLong, m.group(3).toLong)).toMap
-        adds += FileEntry(path, bytes.toLong, stats,
-          Option(rowsOrNull).map(_.toLong).getOrElse(-1L))
-      case legacyPat(path) =>
-        adds += FileEntry(path, -1L, Map.empty)
-      case line => sys.error(
-        s"unparseable manifest line in ${f.getPath}: '$line'")
+      case line => adds += parseEntry(line, "manifest", f)
     }
     if (isDelta) Right((adds.result(), removes.result()))
     else Left(adds.result())
@@ -368,9 +367,9 @@ object TxnTable {
 
   /** Exact row count of version `v` from manifest METADATA alone —
     * O(manifest), no scan (footers recorded the count at commit
-    * time). None when any live entry predates the rows channel
-    * (legacy manifest) or was committed without a footer pass: an
-    * unknown must surface as unknown, never as a number. Serves
+    * time). None when any live entry was committed without a footer
+    * pass (no declared stats columns): an unknown must surface as
+    * unknown, never as a number. Serves
     * COUNT(*)-grade questions (also over the maintenance history
     * endpoint); a cube registered over a TxnTable can feed it into
     * `CostModel(fixedRows = ...)` at registry build to make variant
@@ -387,13 +386,14 @@ object TxnTable {
     * and must re-plan against the winner's manifest. This is
     * optimistic concurrency control, the protocol every manifest-log
     * table format uses; on an object store the same contract comes
-    * from a put-if-absent on the manifest key. */
+    * from a put-if-absent on the manifest key. `newCols`: the schema
+    * of the data this commit wrote, unioned into the carried one. */
   private[graft] def writeManifest(dir: String, v: Int,
       entries: Seq[FileEntry],
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
+      newCols: Option[org.apache.spark.sql.types.StructType] = None,
       epochUpdate: Option[(String, Int)] = None): Unit =
     publishManifestBody(dir, v,
-      buildHeader(dir, v, schema, epochUpdate), entries)
+      buildHeader(dir, v, newCols, epochUpdate), entries)
 
   /** Commit version `v` as a DELTA manifest: only this commit's
     * changes are rendered — `removes` (paths rewritten away) and
@@ -405,47 +405,46 @@ object TxnTable {
     * resolution walk. */
   private[graft] def writeDelta(dir: String, v: Int,
       adds: Seq[FileEntry], removes: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
+      newCols: Option[org.apache.spark.sql.types.StructType] = None,
       epochUpdate: Option[(String, Int)] = None): Unit = {
-    val body = buildHeader(dir, v, schema, epochUpdate) ++
+    val body = buildHeader(dir, v, newCols, epochUpdate) ++
       (deltaMarker +: removes.sorted.map(p => s"""{"remove":"$p"}""")) ++
       adds.map(entryLine)
     publishLines(dir, v, body)
     maybeCheckpoint(dir, v)
   }
 
-  /** The metadata header a commit at `v` writes: schema (explicit, or
-    * carried from v-1), the epoch anchors (carried from v-1 — a table
-    * predating the anchor channel folds its legacy-resolved anchors
-    * in on its first new commit — overlaid with this commit's own
-    * epoch, if any), and the commit timestamp. The anchors line is
-    * ALWAYS written, even empty: only a manifest that explicitly says
-    * "no epoch in force" keeps an orphaned epoch file from being
-    * resolved by the legacy directory scan. */
+  /** The metadata header a commit at `v` writes: the schema carried
+    * from v-1 unioned with `newCols` ([[unionSchema]] — the physical
+    * schema only grows), the epoch anchors carried from v-1 overlaid
+    * with this commit's own epoch, if any, and the commit instant,
+    * never below v-1's ([[VersionLog.nextTs]]). The anchors line is
+    * ALWAYS written, even empty: a manifest says explicitly which
+    * epoch is in force, so an orphaned epoch file is never resolved.
+    * A v-1 written before the current format fails loudly here, so
+    * no writer commits on top of a log [[upgrade]] has not rewritten. */
   private def buildHeader(dir: String, v: Int,
-      schema: Option[org.apache.spark.sql.types.StructType],
-      epochUpdate: Option[(String, Int)]): Seq[String] = {
-    val prior =
-      if (v > 1) manifestMeta(dir, v - 1) else ManifestMeta(None, None)
-    val schemaOut = schema.orElse(prior.schema)
-    val anchors = prior.epochs.getOrElse(
-      Seq("constraints", "colmap").flatMap(b =>
-        legacyEpochAnchorAt(dir, b, v - 1).map(b -> _)).toMap) ++ epochUpdate
-    renderHeader(schemaOut, anchors, System.currentTimeMillis())
-  }
+      newCols: Option[org.apache.spark.sql.types.StructType],
+      epochUpdate: Option[(String, Int)]): Seq[String] =
+    if (v == 1) renderHeader(newCols.getOrElse(sys.error(
+      s"the first commit under $dir needs a schema")), epochUpdate.toMap,
+      System.currentTimeMillis())
+    else {
+      val prior = manifestMeta(dir, v - 1)
+      renderHeader(newCols.fold(prior.schema)(unionSchema(prior.schema, _)),
+        prior.epochs ++ epochUpdate, VersionLog.nextTs(prior.ts))
+    }
 
   /** ONE renderer for the manifest metadata header (schema line +
     * commit-timestamp line + epoch-anchor line) — [[buildHeader]]'s
     * carry-forward path and [[restore]]'s replaced header must never
     * drift apart. */
-  private def renderHeader(
-      schema: Option[org.apache.spark.sql.types.StructType],
+  private def renderHeader(schema: org.apache.spark.sql.types.StructType,
       anchors: Map[String, Int], tsMillis: Long): Seq[String] =
-    schema.map(sch => s"""{"schema":${sch.json}}""").toSeq ++
-      Seq(s"""{"ts":$tsMillis}""",
-        anchors.toSeq.sortBy(_._1)
-          .map { case (b, k) => s""""$b":$k""" }
-          .mkString("""{"epochs":{""", ",", "}}"))
+    Seq(s"""{"schema":${schema.json}}""", s"""{"ts":$tsMillis}""",
+      anchors.toSeq.sortBy(_._1)
+        .map { case (b, k) => s""""$b":$k""" }
+        .mkString("""{"epochs":{""", ",", "}}"))
 
   private def entryLine(e: FileEntry): String = {
     val stats = e.stats.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
@@ -521,15 +520,7 @@ object TxnTable {
     if (!lines.headOption.contains(s"""{"checkpoint":$v}"""))
       sys.error(s"corrupt checkpoint file ${f.getPath} (missing " +
         "header) — delete it to recover (checkpoints are derivable)")
-    Some(lines.drop(1).toSeq.map {
-      case entryPat(path, bytes, rowsOrNull, statsBody) =>
-        val stats = statPat.findAllMatchIn(statsBody).map(m =>
-          m.group(1) -> (m.group(2).toLong, m.group(3).toLong)).toMap
-        FileEntry(path, bytes.toLong, stats,
-          Option(rowsOrNull).map(_.toLong).getOrElse(-1L))
-      case line => sys.error(
-        s"unparseable checkpoint line in ${f.getPath}: '$line'")
-    })
+    Some(lines.drop(1).toSeq.map(parseEntry(_, "checkpoint", f)))
   }
 
   /** Post-publish: checkpoint `v` when the delta tail behind it has
@@ -557,21 +548,39 @@ object TxnTable {
     * retry: the body must plan from `plannedVersion`'s manifest and
     * publish at `plannedVersion + 1`; on a publish collision it is
     * re-invoked against the new latest version. Each losing attempt
-    * orphans its commit dir (vacuum-collected). */
-  private[graft] def withOcc[T](dir: String, maxRetries: Int = 4)(
-      body: Int => T): T = {
+    * orphans its commit dir (vacuum-collected). A `rewrite` (the
+    * content-invisible [[optimize]], [[optimizeRange]], [[compactSmall]])
+    * first waits out this process's commits retrying a lost round on
+    * `dir` (bounded by their retries): a rewrite loop committing faster
+    * than a mutation plans would otherwise starve it. */
+  private[graft] def withOcc[T](dir: String, maxRetries: Int = 4,
+      rewrite: Boolean = false)(body: Int => T): T = {
     var last: java.util.ConcurrentModificationException = null
     var attempt = 0
-    while (attempt <= maxRetries) {
-      val planned = version(dir)
-      try return body(planned)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          last = e; attempt += 1
+    var waiting: java.util.concurrent.atomic.AtomicInteger = null
+    try {
+      while (attempt <= maxRetries) {
+        if (rewrite) Option(retrying.get(dir))
+          .foreach(w => while (w.get() > 0) Thread.sleep(10))
+        val planned = version(dir)
+        try return body(planned)
+        catch {
+          case e: java.util.ConcurrentModificationException =>
+            if (!rewrite && waiting == null) {
+              waiting = retrying.computeIfAbsent(dir,
+                _ => new java.util.concurrent.atomic.AtomicInteger())
+              waiting.incrementAndGet()
+            }
+            last = e; attempt += 1
+        }
       }
-    }
-    throw last
+      throw last
+    } finally if (waiting != null) waiting.decrementAndGet()
   }
+
+  /** Per table, the commits of this process retrying a lost round. */
+  private val retrying = new java.util.concurrent.ConcurrentHashMap[
+    String, java.util.concurrent.atomic.AtomicInteger]()
 
   /** Columns whose stats every commit records into the manifest —
     * declared once at [[init]] (`table.json`), extended automatically
@@ -624,10 +633,9 @@ object TxnTable {
     * BEFORE any file is written, so a rejected batch leaves no
     * version, no orphan files, and nothing to vacuum; the cost is one
     * short-circuit job over the incoming frame per mutation, and zero
-    * when no constraints are declared. Stored one-per-line in
-    * `constraints.json` (separate from table.json — its legacy parser
-    * scans every quoted string). */
-  /** Declare a constraint. The constraint set RIDES THE MANIFEST LOG:
+    * when no constraints are declared.
+    *
+    * Declare a constraint. The constraint set RIDES THE MANIFEST LOG:
     * a declaration commits a new table version (same file entries,
     * new constraint epoch), so it is serialized against every
     * mutation by the same OCC publish that serializes mutations
@@ -751,7 +759,7 @@ object TxnTable {
     // would otherwise parse as a valid, silently SHORTER set — for a
     // colmap that resurrects a renamed-away physical column, for
     // constraints it silently stops enforcing one. The count makes
-    // that torn shape loud (legacy count-less headers stay readable).
+    // that torn shape loud.
     AtomicFiles.publishExclusive(dir, s"$base-v$k.json",
       (s"""{"epoch":$k,"n":${lines.size}}""" +: lines)
         .mkString("", "\n", "\n").getBytes("UTF-8"))(
@@ -790,15 +798,13 @@ object TxnTable {
   private val epochStamp = new java.util.concurrent.atomic.AtomicLong()
 
   /** The committed `<base>-v<k>.json` lines (header stripped) in
-    * force at version `v`: the highest committed epoch with k <= v.
-    * An epoch file whose manifest never committed (a lost-then-
-    * crashed declare) is ignored. COMMITTED means the anchor manifest
-    * exists — or predates the oldest surviving manifest: vacuum drops
-    * old manifests, and an epoch whose anchor was swept MUST stay in
-    * force (versions are consecutive, so an epoch below the vacuum
-    * horizon necessarily committed; treating it as uncommitted would
-    * silently revert the table's constraints/column mapping after a
-    * routine vacuum). None = no epoch declared yet. */
+    * force at version `v`: the epoch the ANCHOR CHANNEL names — the
+    * highest committed manifest <= v lists the epoch in force, so
+    * activation rides the committed manifest and an orphaned epoch
+    * file (a lost-then-crashed declare) can never be resolved. An
+    * anchor survives the vacuum of the manifest that declared it
+    * (every later manifest carries it forward). None = no epoch
+    * declared yet. */
   private def epochLinesAt(dir: String, base: String,
       v: Int): Option[Seq[String]] = {
     val key = (dir, base, v)
@@ -806,27 +812,15 @@ object TxnTable {
     if (hit != null) return hit
     val stamp = epochStamp.get()
     val maxCommitted = manifestLog.head(dir).getOrElse(0)
-    // ANCHOR CHANNEL: the highest committed manifest <= v names the
-    // epoch in force — activation rides the committed manifest, so an
-    // orphaned epoch file can never be resolved. An in-flight v
-    // (planned + 1, mid-declare) resolves through the latest COMMITTED
-    // manifest — the pre-declare answer, by construction. Manifests
-    // predating the anchor line fall back to the directory scan.
-    // LIST-FREE: versions are consecutive, so the highest committed
-    // manifest <= v is min(v, head) when it survives — ONE existence
-    // probe; if it was vacuumed, nothing <= v survives (the prefix is
-    // what vacuum drops) and the legacy scan takes over.
-    val anchored = {
-      val mv = math.min(v, maxCommitted)
-      if (mv >= 1 && manifestLog.exists(dir, mv))
-        Some(manifestMeta(dir, mv).epochs)
-      else None
-    }
-    val r = anchored match {
-      case Some(Some(m)) => m.get(base).map(k => epochFileLines(dir, base, k))
-      case _ => legacyEpochAnchorAt(dir, base, v)
+    // an in-flight v (planned + 1, mid-declare) resolves through the
+    // latest COMMITTED manifest — the pre-declare answer, by
+    // construction. LIST-FREE: versions are consecutive, so the
+    // highest committed manifest <= v is min(v, head)
+    val mv = math.min(v, maxCommitted)
+    val r =
+      if (mv < 1) None
+      else manifestMeta(dir, mv).epochs.get(base)
         .map(k => epochFileLines(dir, base, k))
-    }
     if (epochCache.size > 10000) epochCache.clear()
     // only a COMMITTED version's answer is immutable: caching an
     // in-flight v would pin the pre-declare answer for the version a
@@ -834,102 +828,6 @@ object TxnTable {
     if (epochStamp.get() == stamp && v <= maxCommitted)
       epochCache.put(key, r)
     r
-  }
-
-  /** The legacy (pre-anchor) resolution: highest epoch file with
-    * k <= v whose anchor manifest committed — or predates the oldest
-    * surviving manifest (versions are consecutive, so an epoch below
-    * the vacuum horizon necessarily committed). Served from the
-    * [[legacyEpochIndex]] self-upgrade sidecar: the directory LIST is
-    * paid ONCE per table lifetime, not once per legacy resolution. */
-  private def legacyEpochAnchorAt(dir: String, base: String,
-      v: Int): Option[Int] =
-    legacyEpochIndex(dir).getOrElse(base, Seq.empty)
-      .filter(_ <= v).lastOption
-
-  private val legacySidecarName = "_epochs-legacy.json"
-  private val legacyEpochBases = Seq("constraints", "colmap")
-  private val legacyEpochIdxCache = new java.util.concurrent
-    .ConcurrentHashMap[String, Map[String, Seq[Int]]]()
-
-  /** One-time SELF-UPGRADE retiring the legacy epoch-anchor LIST: a
-    * table predating the anchor channel used to pay a directory scan
-    * per legacy resolution; the FIRST such resolution now snapshots
-    * the legacy epoch index (per base, the ascending committed epoch
-    * versions) into `_epochs-legacy.json`, and every later resolution
-    * reads the sidecar — one GET, then cached in-process.
-    *
-    * A SIDECAR in the checkpoint discipline (derivable, idempotent,
-    * re-writable, atomic move), NOT a commit: the upgrade fires on
-    * READ paths, and a reader must not become an OCC writer racing
-    * real commits for a slot. Sound because the legacy range is
-    * FROZEN: a new epoch can only claim a slot above the current
-    * head and its anchor rides the same commit's manifest header, so
-    * it resolves through the anchor channel, never through this
-    * index; and versions are consecutive, so every epoch file at
-    * k <= head is necessarily committed and immutable (an in-flight
-    * k = head+1 declare is excluded exactly as the scan excluded it).
-    * A torn/corrupt sidecar rebuilds from the listing — advisory-
-    * grade durability on a correctness-grade answer, because rebuild
-    * and sidecar are the same pure function of the frozen range. */
-  private def legacyEpochIndex(dir: String): Map[String, Seq[Int]] = {
-    val cached = legacyEpochIdxCache.get(dir)
-    if (cached != null) return cached
-    val f = fileOf(dir, legacySidecarName)
-    val fromSidecar: Option[Map[String, Seq[Int]]] =
-      if (!f.exists()) None
-      else try {
-        val body = new String(
-          java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        // a torn/garbage body must read as CORRUPT (rebuild from the
-        // listing), never as "no epochs in force" — each base's key
-        // must be present, even when its list is empty
-        if (!legacyEpochBases.forall(b =>
-            body.contains("\"" + b + "\":["))) None
-        else Some(legacyEpochBases.map { b =>
-          b -> ("\"" + b + "\":\\[([0-9,]*)\\]").r
-            .findFirstMatchIn(body)
-            .map(_.group(1)).getOrElse("")
-            .split(',').filter(_.nonEmpty).map(_.toInt).toSeq
-        }.toMap)
-      } catch { case scala.util.control.NonFatal(_) => None }
-    fromSidecar match {
-      case Some(idx) =>
-        legacyEpochIdxCache.put(dir, idx)
-        idx
-      case None =>
-        // the once-per-lifetime LIST (seam-counted like every other):
-        // manifest range and epoch files off ONE listing
-        manifestLog.lists.incrementAndGet()
-        val names = Option(new java.io.File(dir).listFiles())
-          .getOrElse(Array.empty[java.io.File]).map(_.getName).toSeq
-        val mPat = """manifest-v(\d+)\.json""".r
-        val mvs = names.flatMap {
-          case mPat(k) => Some(k.toInt)
-          case _ => None
-        }.toSet
-        val minManifest = if (mvs.isEmpty) 1 else mvs.min
-        val idx = legacyEpochBases.map { b =>
-          val pat = (java.util.regex.Pattern.quote(b) +
-            """-v(\d+)\.json""").r
-          b -> names.flatMap {
-            case pat(k) => Some(k.toInt)
-            case _ => None
-          }.filter(k => k < minManifest || mvs.contains(k))
-            .sorted
-        }.toMap
-        // a dir with no committed manifest is not (yet) a table —
-        // don't freeze or persist an index for it
-        if (mvs.nonEmpty) {
-          try AtomicFiles.replace(dir, legacySidecarName,
-            legacyEpochBases.map(b =>
-              s""""$b":${idx(b).mkString("[", ",", "]")}""")
-              .mkString("{", ",", "}"))
-          catch { case scala.util.control.NonFatal(_) => () }
-          legacyEpochIdxCache.put(dir, idx)
-        }
-        idx
-    }
   }
 
   /** Read committed epoch `k`'s lines (header verified + stripped).
@@ -944,15 +842,13 @@ object TxnTable {
     val lines = new String(
       java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
       .split('\n').toSeq.map(_.trim).filter(_.nonEmpty)
-    val hdr = s"""\\{"epoch":$k(?:,"n":(\\d+))?\\}""".r
+    val hdr = s"""\\{"epoch":$k,"n":(\\d+)\\}""".r
     lines.headOption match {
       case Some(hdr(n)) =>
         // TORN-TAIL GUARD: the header's recorded count catches a
         // line-boundary truncation that would otherwise read as a
-        // silently smaller set. Count-less headers predate the guard
-        // and stay readable (mid-line tears still die on their JSON
-        // parse); every new declaration writes the counted form.
-        if (n != null && lines.size - 1 != n.toInt) sys.error(
+        // silently smaller set
+        if (lines.size - 1 != n.toInt) sys.error(
           s"torn $base epoch file ${f.getPath} (${lines.size - 1} of " +
             s"$n recorded entries) — restore it to recover")
         lines.drop(1)
@@ -963,31 +859,28 @@ object TxnTable {
       // rolled-back binary's say-so silently drops them (see
       // README.md "On-disk format compatibility").
       case _ => sys.error(s"unreadable $base epoch file ${f.getPath} " +
-        "(missing or unrecognized header). If this table was written " +
-        "by a newer binary, upgrade this binary instead of touching " +
-        "the file — deleting an epoch file drops committed " +
+        "(missing or unrecognized header). A table written before the " +
+        "counted header needs one TxnTable.upgrade call; if it was " +
+        "written by a newer binary, upgrade this binary instead of " +
+        "touching the file — deleting an epoch file drops committed " +
         s"$base declarations permanently")
     }
   }
 
-  /** The constraint set in force at committed version `v`; tables
-    * predating the epoch channel fall back to the legacy flat
-    * `constraints.json` (effective at every version). */
+  /** The constraint set in force at committed version `v`. A root
+    * `constraints.json` (the flat set of tables predating the epoch
+    * channel) is refused while no epoch is in force, never silently
+    * ignored: ignoring it would stop enforcing its constraints. */
   def constraintsAt(dir: String, v: Int): Seq[(String, String)] = {
     val pat = """\{"name":"([^"]+)","predicate":"([^"]+)"\}""".r
-    def parse(lines: Seq[String], where: String) = lines.map {
+    epochLinesAt(dir, "constraints", v).getOrElse {
+      val flat = fileOf(dir, "constraints.json")
+      if (flat.exists()) needsUpgrade(flat, "root constraint file")
+      Nil
+    }.map {
       case pat(n, p) => (n, p)
       case line => sys.error(
-        s"unparseable constraint line in $where: '$line'")
-    }
-    epochLinesAt(dir, "constraints", v) match {
-      case Some(lines) => parse(lines, s"$dir constraints epoch")
-      case None =>
-        val legacy = fileOf(dir, "constraints.json")
-        if (!legacy.exists()) Nil
-        else parse(new String(java.nio.file.Files.readAllBytes(
-          legacy.toPath), "UTF-8").split('\n').toSeq
-          .map(_.trim).filter(_.nonEmpty), legacy.getPath)
+        s"unparseable constraint line in $dir constraints epoch: '$line'")
     }
   }
 
@@ -1171,22 +1064,15 @@ object TxnTable {
     * metadata epochs (same file entries as their predecessor — no
     * data touched), 'data' otherwise. Fills the operation column of
     * DESCRIBE HISTORY. Resolved through the manifest's epoch ANCHORS
-    * where present — a version is an epoch commit iff its own
-    * manifest anchors an epoch AT that version — so an orphaned epoch
-    * file (a crashed lost declare) cannot mislabel the data commit
-    * that took its slot; legacy manifests fall back to file
-    * existence. */
-  def versionKind(dir: String, v: Int): String =
-    manifestMeta(dir, v).epochs match {
-      case Some(m) =>
-        if (m.get("constraints").contains(v)) "constraints"
-        else if (m.get("colmap").contains(v)) "colmap"
-        else "data"
-      case None =>
-        if (fileOf(dir, s"constraints-v$v.json").exists()) "constraints"
-        else if (fileOf(dir, s"colmap-v$v.json").exists()) "colmap"
-        else "data"
-    }
+    * — a version is an epoch commit iff its own manifest anchors an
+    * epoch AT that version — so an orphaned epoch file (a crashed lost
+    * declare) cannot mislabel the data commit that took its slot. */
+  def versionKind(dir: String, v: Int): String = {
+    val m = manifestMeta(dir, v).epochs
+    if (m.get("constraints").contains(v)) "constraints"
+    else if (m.get("colmap").contains(v)) "colmap"
+    else "data"
+  }
 
   /** Reject `incoming` if any declared constraint is FALSE on any of
     * its rows — one short-circuit (limit-1) job, run before anything
@@ -1239,8 +1125,8 @@ object TxnTable {
       .getOrElse(Array.empty).toSeq
       .filter(_.getName.endsWith(".parquet"))
     // one footer pass yields stats AND exact row counts; a table
-    // with no declared stats columns skips the pass (legacy cost
-    // profile) and records rows as unknown
+    // with no declared stats columns skips the pass and records rows
+    // as unknown
     val byPath: Map[String, (Long, Map[String, (Long, Long)])] =
       if (cols.isEmpty) Map.empty
       else Layout.multiStatsWithRows(s, files.map(_.getPath), cols)
@@ -1260,11 +1146,11 @@ object TxnTable {
     new java.io.File(dir).mkdirs()
     writeStatsCols(dir, statsCols)
     writeManifest(dir, 1, commitFiles(s, dir, df, numFiles, statsCols),
-      schema = Some(df.schema))
+      newCols = Some(df.schema))
   }
 
-  /** Snapshot read of `v` (default: latest). mergeSchema unions the
-    * commit schemas — SCHEMA EVOLUTION: an upsert may carry columns
+  /** Snapshot read of `v` (default: latest), planned with the schema
+    * `v` recorded — SCHEMA EVOLUTION: an upsert may carry columns
     * the older commits lack (rows from before the column existed read
     * as null), so a table can grow columns without rewriting history.
     * The result projects through the COLUMN MAPPING in force at `v`
@@ -1280,25 +1166,17 @@ object TxnTable {
     * ([[optimize]]) and mutation internals read, so files keep their
     * physical column names forever (the invariant the mapping
     * depends on). Plans with the manifest-recorded schema — ZERO
-    * footer I/O; only manifests predating the schema channel pay the
-    * mergeSchema footer union (and every commit records the schema
-    * from then on). */
+    * footer I/O. */
   private def readPhysical(s: SparkSession, dir: String,
       v: Int): DataFrame = readSubset(s, dir, v, liveFiles(dir, v))
 
   /** Read a subset of version `v`'s live files WITH `v`'s recorded
     * schema: columns a pre-evolution file lacks surface as typed
-    * nulls, exactly as the full mergeSchema read would yield them,
-    * without opening a single footer. */
+    * nulls, exactly as a mergeSchema read would yield them, without
+    * opening a single footer. */
   private def readSubset(s: SparkSession, dir: String, v: Int,
-      rels: Seq[String]): DataFrame = {
-    val paths = rels.map(rel => s"$dir/$rel")
-    physSchemaAt(dir, v) match {
-      case Some(sch) => s.read.schema(sch).parquet(paths: _*)
-      case None =>
-        s.read.option("mergeSchema", "true").parquet(paths: _*)
-    }
-  }
+      rels: Seq[String]): DataFrame =
+    s.read.schema(physSchemaAt(dir, v)).parquet(rels.map(rel => s"$dir/$rel"): _*)
 
   /** CDC read — net row-level changes between two committed versions
     * (the lakehouse `table_changes` surface), computed from the
@@ -1443,16 +1321,17 @@ object TxnTable {
 
   /** [min,max] of `keyCol` per live entry of version `v`, from the
     * manifest's carried stats; only entries MISSING `keyCol` stats
-    * (legacy manifests) pay a footer read, and only for themselves. */
+    * (written before `keyCol` was a stats column) pay a footer read,
+    * and only for themselves. */
   private def entryRanges(s: SparkSession, dir: String, keyCol: String,
       v: Int): (Seq[FileEntry], FileEntry => (Long, Long)) = {
     val live = liveEntries(dir, v)
-    val legacy = live.filterNot(_.stats.contains(keyCol))
-    val legacyStats: Map[String, (Long, Long)] =
-      if (legacy.isEmpty) Map.empty
-      else Layout.statsForFiles(s, legacy.map(e => s"$dir/${e.path}"), keyCol)
+    val unstated = live.filterNot(_.stats.contains(keyCol))
+    val footerStats: Map[String, (Long, Long)] =
+      if (unstated.isEmpty) Map.empty
+      else Layout.statsForFiles(s, unstated.map(e => s"$dir/${e.path}"), keyCol)
         .map { case (p, lo, hi) => (p, (lo, hi)) }.toMap
-    (live, e => e.stats.getOrElse(keyCol, legacyStats(s"$dir/${e.path}")))
+    (live, e => e.stats.getOrElse(keyCol, footerStats(s"$dir/${e.path}")))
   }
 
   /** Which live entries can contain any of `keys` on `keyCol` — the
@@ -1585,8 +1464,7 @@ object TxnTable {
       val fresh = commitFiles(s, dir, kept,
         math.min(numFiles, matched.size), cols)
       onBeforeCommit()
-      writeDelta(dir, planned + 1, fresh, matched.map(_.path),
-        schema = nextSchema(s, dir, planned, None))
+      writeDelta(dir, planned + 1, fresh, matched.map(_.path))
       matched.size
     }
   }
@@ -1615,7 +1493,7 @@ object TxnTable {
     onBeforeCommit()
     writeDelta(dir, planned + 1, survivors ++ inserted,
       matched.map(_.path),
-      schema = nextSchema(s, dir, planned, Some(phys.schema)))
+      newCols = Some(phys.schema))
     }
   }
 
@@ -1655,7 +1533,7 @@ object TxnTable {
       onBeforeCommit()
       writeDelta(dir, planned + 1, survivors ++ inserted,
         matched.map(_.path),
-        schema = nextSchema(s, dir, planned, Some(phys.schema)))
+        newCols = Some(phys.schema))
     }
   }
 
@@ -1742,7 +1620,7 @@ object TxnTable {
       onBeforeCommit()
       writeDelta(dir, planned + 1, survivors ++ inserted,
         matched.map(_.path),
-        schema = nextSchema(s, dir, planned, Some(phys.schema)))
+        newCols = Some(phys.schema))
     }
     } finally { if (seqCol.isDefined) { compacted.unpersist(); () } }
   }
@@ -1760,7 +1638,7 @@ object TxnTable {
     * z-column is heavily skewed. */
   def optimize(s: SparkSession, dir: String, zcols: Seq[String],
       numFiles: Int = 8, ranked: Boolean = false): Unit =
-    withOcc(dir) { planned =>
+    withOcc(dir, rewrite = true) { planned =>
     // zcols arrive LOGICAL — the spelling every other API speaks —
     // and translate to physical here (a renamed-away spelling is
     // rejected loudly): silently clustering the stale physical would
@@ -1786,8 +1664,7 @@ object TxnTable {
           .drop("__z")
     val fresh = commitFiles(s, dir, clustered, numFiles = 0, statsCols(dir))
     onBeforeCommit()
-    writeManifest(dir, planned + 1, fresh,
-      schema = nextSchema(s, dir, planned, None))
+    writeManifest(dir, planned + 1, fresh)
   }
 
   /** Incremental OPTIMIZE: re-cluster ONLY the live files whose
@@ -1801,7 +1678,7 @@ object TxnTable {
     * mutations). Returns how many files were re-clustered. */
   def optimizeRange(s: SparkSession, dir: String, keyCol: String,
       lo: Long, hi: Long, numFiles: Int = 4): Int =
-    withOcc(dir) { planned =>
+    withOcc(dir, rewrite = true) { planned =>
       // keyCol is LOGICAL (loud reject of renamed-away spellings) —
       // the stats channel and the files speak physical
       val pKey = physicalName(colMapAt(dir, planned), keyCol)
@@ -1817,8 +1694,7 @@ object TxnTable {
         val fresh = commitFiles(s, dir, clustered, numFiles = 0,
           statsCols(dir))
         onBeforeCommit()
-        writeDelta(dir, planned + 1, fresh, matched.map(_.path),
-          schema = nextSchema(s, dir, planned, None))
+        writeDelta(dir, planned + 1, fresh, matched.map(_.path))
         matched.size
       }
     }
@@ -1829,44 +1705,37 @@ object TxnTable {
     * streaming ingest actually schedules — each trigger lands small
     * commits, and rewriting the whole table per sweep ([[optimize]])
     * would be O(table) per trigger interval; this sweep is O(recent
-    * small files). Sizes come from the manifest (legacy entries fall
-    * back to a stat call). Returns how many small files were packed. */
+    * small files). Sizes come from the manifest. Returns how many
+    * small files were packed. */
   def compactSmall(s: SparkSession, dir: String, minBytes: Long,
-      numFiles: Int = 1): Int = withOcc(dir) { planned =>
-    val live = liveEntries(dir, planned)
-    val (small, big) = live.partition { e =>
-      val sz = if (e.bytes >= 0) e.bytes
-               else new java.io.File(dir, e.path).length()
-      sz < minBytes
-    }
+      numFiles: Int = 1): Int = withOcc(dir, rewrite = true) { planned =>
+    val small = liveEntries(dir, planned).filter(_.bytes < minBytes)
     if (small.size <= numFiles) 0 // nothing worth packing
     else {
       val packed = commitFiles(s, dir,
         readSubset(s, dir, planned, small.map(_.path)),
         numFiles, statsCols(dir))
       onBeforeCommit()
-      writeDelta(dir, planned + 1, packed, small.map(_.path),
-        schema = nextSchema(s, dir, planned, None))
+      writeDelta(dir, planned + 1, packed, small.map(_.path))
       small.size
     }
   }
 
   /** Table history — one row per committed version: (version, live
-    * file count, total live bytes where the manifest carries sizes;
-    * legacy entries count as size 0). Pure manifest metadata (no data
+    * file count, total live bytes, exact rows when every entry
+    * carries them). Pure manifest metadata (no data
     * file touched) — the audit surface behind `op=history`, the
     * lakehouse DESCRIBE HISTORY analogue. */
   def history(dir: String): Seq[(Int, Int, Long, Option[Long])] =
     historyWithTs(dir).map(t => (t._1, t._2, t._3, t._4))
 
-  /** [[history]] plus each version's commit instant ([[commitTs]] —
-    * recorded ts, mtime for legacy manifests): the audit row
-    * DESCRIBE HISTORY actually shows an operator. */
+  /** [[history]] plus each version's recorded commit instant: the
+    * audit row DESCRIBE HISTORY actually shows an operator. */
   def historyWithTs(dir: String)
       : Seq[(Int, Int, Long, Option[Long], Long)] =
     manifestLog.range(dir).map { v =>
       val es = liveEntries(dir, v)
-      (v, es.size, es.map(e => math.max(e.bytes, 0L)).sum,
+      (v, es.size, es.map(_.bytes).sum,
         if (es.exists(_.rows < 0)) None else Some(es.map(_.rows).sum),
         manifestLog.commitTs(dir, v))
     }
@@ -1917,9 +1786,6 @@ object TxnTable {
           s"cannot restore $dir to v$toV: ${e.path} was vacuumed"))
       val k = planned + 1
       val toMeta = manifestMeta(dir, toV)
-      val toAnchors: Map[String, Int] = toMeta.epochs.getOrElse(
-        Seq("constraints", "colmap").flatMap(b =>
-          legacyEpochAnchorAt(dir, b, toV).map(b -> _)).toMap)
       // THE RECORDED SCHEMA NEVER SHRINKS — the no-retype invariant
       // unionSchema enforces needs the full historical physical set.
       // Shrinking to toV's schema would let a later writer re-add a
@@ -1930,35 +1796,19 @@ object TxnTable {
       // restore buries is TOMBSTONED through the colmap channel: reads
       // present exactly toV's surface, and a writer re-issuing the
       // buried spelling is rejected loudly (pick a new name).
-      val headSchema = nextSchema(s, dir, planned, None)
-      val schemaOut = (headSchema, toMeta.schema) match {
-        case (Some(h), Some(t)) => Some(unionSchema(h, t))
-        case (h, t) => h.orElse(t)
-      }
-      val toPhysCols: Set[String] = toMeta.schema
-        .map(_.fieldNames.map(_.toLowerCase).toSet)
-        .getOrElse(
-          // a legacy (no recorded schema) target with ZERO live files
-          // has no surface to recover — bury nothing: the restored
-          // table is empty, head's logical surface stays visible, and
-          // the no-retype invariant holds through schemaOut alone (a
-          // parquet read over an empty path list would throw Spark's
-          // opaque 'unable to infer schema' instead)
-          if (entries.isEmpty)
-            schemaOut.map(_.fieldNames.map(_.toLowerCase).toSet)
-              .getOrElse(Set.empty)
-          else readSubset(s, dir, toV, entries.map(_.path))
-            .schema.fieldNames.map(_.toLowerCase).toSet)
-      val buried = schemaOut.map(_.fieldNames.toSeq).getOrElse(Nil)
+      val headMeta = manifestMeta(dir, planned)
+      val schemaOut = unionSchema(headMeta.schema, toMeta.schema)
+      val toPhysCols = toMeta.schema.fieldNames.map(_.toLowerCase).toSet
+      val buried = schemaOut.fieldNames.toSeq
         .filterNot(f => toPhysCols(f.toLowerCase))
       val cmTo = colMapAt(dir, toV)
       val anchors =
-        if (buried.isEmpty) toAnchors
+        if (buried.isEmpty) toMeta.epochs
         else {
           val restoredCm = cmTo.filterNot(e => buried.contains(e._1)) ++
             buried.map(p => (p, Option.empty[String]))
           publishEpochFile(dir, "colmap", k, renderColMap(restoredCm))
-          toAnchors + ("colmap" -> k)
+          toMeta.epochs + ("colmap" -> k)
         }
       onBeforeCommit()
       // FENCE immediately before the publish: a restore that stalled
@@ -1973,7 +1823,7 @@ object TxnTable {
       // snapshot manifest (it replaces the whole live set), so it is
       // itself a resolution base for later deltas.
       try publishManifestBody(dir, k,
-        renderHeader(schemaOut, anchors, System.currentTimeMillis()),
+        renderHeader(schemaOut, anchors, VersionLog.nextTs(headMeta.ts)),
         entries)
       catch { case e: Throwable =>
         if (buried.nonEmpty) {
@@ -2003,13 +1853,6 @@ object TxnTable {
     }
     }
 
-  /** The commit instant of version `v` ([[VersionLog.commitTs]]):
-    * the timestamp RECORDED in its manifest header at publish; legacy
-    * manifests (predating the ts channel) fall back to the mtime of
-    * `f`, version `v`'s manifest file. */
-  def commitTs(dir: String, v: Int, f: java.io.File): Long =
-    manifestLog.commitTs(dir, v)
-
   /** Resolve the latest version COMMITTED at or before `tsMillis` —
     * timestamp time travel (`TIMESTAMP AS OF`), an O(log versions)
     * search over the recorded commit instants with zero directory
@@ -2033,9 +1876,9 @@ object TxnTable {
     * [[vacuum]] will drop it (7 days — the lakehouse default): a
     * snapshot reader pins its file list at plan time, so deleting
     * files of a freshly superseded version can fail a scan that is
-    * still running. Supersession time = the successor manifest's
-    * mtime (the moment the version stopped being latest — no reader
-    * can PIN a version after that). */
+    * still running. Supersession time = the successor's recorded
+    * commit instant (the moment the version stopped being latest — no
+    * reader can PIN a version after that). */
   val DefaultVacuumRetainMillis: Long = 7L * 24 * 3600 * 1000
 
   /** Physically delete files referenced by NO manifest ≥
@@ -2156,5 +1999,114 @@ object TxnTable {
     entriesCache.keySet.removeIf(k => k._1 == dir && k._2 < keepSince)
     metaCache.keySet.removeIf(k => k._1 == dir && k._2 < keepSince)
     ()
+    }
+
+  /** ONE-SHOT UPGRADE into the current on-disk format — the only code
+    * reading the older shapes, and the call every refusal names. Each
+    * older file is rewritten in place (atomic replace) into what the
+    * older read path resolved, so time travel, [[history]],
+    * [[changes]] and [[versionAsOf]] answer as before: a manifest
+    * missing a header or holding older entry lines (a bare path, no
+    * `rows`, `bytes` -1) gets its live files' mergeSchema union (its
+    * predecessor's schema when it has none), the epoch-file directory
+    * scan's anchors, its mtime clamped into log order
+    * ([[VersionLog.fillTs]]), true sizes and `rows` -1; a root
+    * `constraints.json` becomes epoch 0 (below every version, so none
+    * reads as its declaration), anchored wherever no constraints epoch
+    * was; epoch headers gain their count, checkpoints current lines.
+    * IDEMPOTENT: a current file is never rewritten. Runs under the
+    * maintenance lease; no mutation commits on a head predating the
+    * format, and a pass repeats while the head moves. Returns the
+    * number of files rewritten or removed. */
+  def upgrade(s: SparkSession, dir: String): Int =
+    Lease.withLeaseHandle(dir, "upgrade") { _ =>
+      var touched = 0
+      def text(name: String): Seq[String] = new String(java.nio.file.Files
+        .readAllBytes(fileOf(dir, name).toPath), "UTF-8").split('\n').toSeq
+        .map(_.trim.stripSuffix(",")).filter(_.nonEmpty)
+      def rewrite(name: String, body: String): Unit = {
+        AtomicFiles.replace(dir, name, body); touched += 1
+      }
+      def array(lines: Seq[String]) = lines.mkString("[\n", ",\n", "\n]")
+      val oldEntry =
+        """\{"path":"([^"]+)","bytes":(-?\d+)(?:,"rows":(-?\d+))?,"stats":\{(.*)\}\}""".r
+      val barePath = """"([^"]+)"""".r
+      def entryOf(line: String, where: String): FileEntry = {
+        val (path, bytes, rows, stats) = line match {
+          case oldEntry(p, b, r, st) => (p, b.toLong, r, st)
+          case barePath(p) => (p, -1L, null, "")
+          case _ => sys.error(s"unparseable line in $dir/$where: '$line'")
+        }
+        val f = fileOf(dir, path)
+        if (bytes < 0 && !f.exists()) sys.error(
+          s"cannot upgrade $dir: live file $path is missing")
+        FileEntry(path, if (bytes < 0) f.length() else bytes,
+          statsOf(stats), Option(rows).fold(-1L)(_.toLong))
+      }
+      def pass(): Unit = {
+        val names = new java.io.File(dir).list().toSeq
+        val vs = manifestLog.list(dir)
+        val flat = names.contains("constraints.json")
+        def epoch(n: String, k: Int, ls: Seq[String]) = rewrite(n,
+          (s"""{"epoch":$k,"n":${ls.size}}""" +: ls).mkString("", "\n", "\n"))
+        val epochName = """(constraints|colmap)-v(\d+)\.json""".r
+        val epochs = names.collect { case n @ epochName(b, k) => (n, b, k.toInt) }
+        epochs.foreach { case (n, _, k) =>
+          val lines = text(n)
+          if (lines.headOption.contains(s"""{"epoch":$k}""")) epoch(n, k, lines.tail)
+        }
+        if (flat && !names.contains("constraints-v0.json"))
+          epoch("constraints-v0.json", 0, text("constraints.json"))
+        val cpName = """checkpoint-v\d+\.json""".r
+        names.filter(cpName.matches).foreach { n =>
+          val lines = text(n).filterNot(l => l == "[" || l == "]")
+          if (!lines.tail.forall(entryPat.matches))
+            rewrite(n, array(lines.head +:
+              lines.tail.map(l => entryLine(entryOf(l, n)))))
+        }
+        val texts = vs.map(manifestLines(dir, _, current = false))
+        val ts = VersionLog.fillTs(texts.map(tsOf).toIndexedSeq,
+          i => manifestLog.file(dir, vs(i)).lastModified())
+        var live = Seq.empty[FileEntry]
+        var schema = org.apache.spark.sql.types.StructType(Nil)
+        vs.indices.foreach { i =>
+          val (v, lines) = (vs(i), texts(i))
+          val removes = lines.collect { case removePat(p) => p }.toSet
+          val entries = lines.filterNot(l => l.isEmpty || l == "[" ||
+            l == "]" || l == deltaMarker || removePat.matches(l) ||
+            headerPrefixes.exists(l.startsWith))
+          val adds = entries.map(entryOf(_, manifestLog.name(v)))
+          live =
+            if (!lines.contains(deltaMarker)) adds
+            else if (i > 0) live.filterNot(e => removes(e.path)) ++ adds
+            else readCheckpoint(dir, v).getOrElse(sys.error(s"cannot " +
+              s"upgrade $dir: its oldest manifest v$v is a delta with no " +
+              "checkpoint"))
+          schema = schemaOf(lines).getOrElse(
+            if (live.isEmpty) schema
+            else s.read.option("mergeSchema", "true")
+              .parquet(live.map(e => s"$dir/${e.path}"): _*).schema)
+          val had = epochsOf(lines).getOrElse(
+            Seq("constraints", "colmap").flatMap(b => epochs.collect {
+              case (_, `b`, k) if k <= v && (k < vs.head || vs.contains(k)) => k
+            }.maxOption.map(b -> _)).toMap)
+          val anchors =
+            if (flat && !had.contains("constraints")) had + ("constraints" -> 0)
+            else had
+          if (headerPrefixes.exists(p => header(lines, p).isEmpty) ||
+              anchors != had || entries != adds.map(entryLine))
+            rewrite(manifestLog.name(v), array(
+              renderHeader(schema, anchors, ts(i)) ++
+                lines.filter(l => l == deltaMarker || removePat.matches(l)) ++
+                adds.map(entryLine)))
+        }
+        dropCaches(dir)
+      }
+      var head = 0
+      while (head != version(dir)) { head = version(dir); pass() }
+      Seq("constraints.json", "_epochs-legacy.json").foreach { n =>
+        if (fileOf(dir, n).delete()) touched += 1
+      }
+      touched
     }
 }

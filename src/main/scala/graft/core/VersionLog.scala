@@ -28,13 +28,12 @@ import java.util.concurrent.atomic.AtomicLong
   *    existence check and takes the LIST fallback;
   *  - OLDEST survivor: binary search on existence over `[1, head]`
   *    (absent below the vacuum horizon, present above);
-  *  - COMMIT INSTANT: the `ts` recorded in the entry body; file mtime
-  *    only for legacy entries (mtime is not durable metadata — an
-  *    rsync, a backup restore or an object-store migration rewrites
-  *    it);
-  *  - AS OF: binary search over those instants, falling back to the
-  *    exact linear scan when the sampled instants are out of order
-  *    (an mtime-rewritten legacy entry);
+  *  - COMMIT INSTANT: the `ts` recorded in the entry body, never the
+  *    file mtime (mtime is not durable metadata — an rsync, a backup
+  *    restore or an object-store migration rewrites it). Every publish
+  *    records `max(now, predecessor's ts)` ([[nextTs]]), so the
+  *    instants are non-decreasing in log order by construction;
+  *  - AS OF: binary search over those instants;
   *  - RETENTION: vacuum refuses to drop an entry whose successor is
   *    younger than the retention window — a reader can pin an entry
   *    only until its successor commits.
@@ -43,10 +42,10 @@ import java.util.concurrent.atomic.AtomicLong
   * its existence rule in: a table counts any existing manifest (a
   * damaged one then fails loudly when parsed), the index does not
   * count a zero-length pointer (an unpublished crash husk).
-  * `recordedTs` reads an entry's recorded commit instant, if any. */
+  * `commitTs` reads an entry's recorded commit instant. */
 final class VersionLog(prefix: String, hintKey: String,
     committed: (String, Int) => Boolean,
-    recordedTs: (String, Int) => Option[Long]) {
+    val commitTs: (String, Int) => Long) {
 
   // ---- I/O-shape seams (SCALE_SLOPE r14/r15 count these): on an
   // object store a directory LIST is paged (10+ round trips at 10⁴
@@ -78,7 +77,7 @@ final class VersionLog(prefix: String, hintKey: String,
   }
 
   /** LIST-free head resolution: hint + forward probe, LIST fallback
-    * (which re-primes the hint, so a legacy log pays the listing
+    * (which re-primes the hint, so a hint-less log pays the listing
     * once). None = nothing committed. */
   def head(dir: String): Option[Int] = {
     val hinted = readHint(dir).filter(h => h >= 1 && exists(dir, h))
@@ -119,48 +118,27 @@ final class VersionLog(prefix: String, hintKey: String,
       lo to h
   }
 
-  /** The commit instant of entry `n`: recorded `ts`, else mtime. */
-  def commitTs(dir: String, n: Int): Long =
-    recordedTs(dir, n).getOrElse(file(dir, n).lastModified())
-
   /** The newest entry committed at or before `tsMillis` — None when
     * nothing is committed; `tooEarly(oldest, oldestTs)` when the
     * instant predates the oldest survivor (the earlier state is
     * vacuumed: answering with a LATER entry would be silently wrong).
-    *
-    * BINARY SEARCH over the recorded instants, which are
-    * non-decreasing in log order (the exclusive publish serializes
-    * commits) — O(log entries) body reads instead of one per entry.
-    * Legacy entries fall back to mtime, which a migration can
-    * rewrite: every inversion among the points the search samples
-    * falls back to the exact linear scan (inversions between
-    * unsampled points resolve per the monotonic interpretation, the
-    * same adjustment Delta applies). */
+    * BINARY SEARCH over the recorded instants, non-decreasing in log
+    * order ([[nextTs]]) — O(log entries) body reads instead of one
+    * per entry. */
   def asOf(dir: String, tsMillis: Long)(
       tooEarly: (Int, Long) => Nothing): Option[Int] = {
     val ns = range(dir)
     if (ns.isEmpty) return None
-    val tsMemo = scala.collection.mutable.Map.empty[Int, Long]
-    def tsAt(i: Int): Long =
-      tsMemo.getOrElseUpdate(i, commitTs(dir, ns(i)))
-    def linear(): Int =
-      ns.indices.filter(i => tsAt(i) <= tsMillis).lastOption.map(ns(_))
-        .getOrElse(tooEarly(ns.head, tsAt(0)))
-    // ts(0) > t is either "before the log existed" (tooEarly) or a
-    // head inversion (a rewritten legacy mtime) — only a scan can
-    // tell them apart, and both are off the hot path
-    if (tsAt(0) > tsMillis) return Some(linear())
+    val ts0 = commitTs(dir, ns.head)
+    if (ts0 > tsMillis) tooEarly(ns.head, ts0)
     // invariant: ts(lo) <= tsMillis < ts(hi) (hi = ns.length is +inf)
     var lo = 0
     var hi = ns.length
     while (hi - lo > 1) {
       val mid = (lo + hi) >>> 1
-      if (tsAt(mid) <= tsMillis) lo = mid else hi = mid
+      if (commitTs(dir, ns(mid)) <= tsMillis) lo = mid else hi = mid
     }
-    val sampled = tsMemo.keys.toSeq.sorted
-    val monotone = sampled.zip(sampled.tail)
-      .forall { case (a, b) => tsAt(a) <= tsAt(b) }
-    Some(if (monotone) ns(lo) else linear())
+    Some(ns(lo))
   }
 
   /** Vacuum's retention guard: the entries of `drop` whose successor
@@ -219,4 +197,29 @@ object VersionLog {
 
   /** A forward walk at least this long rewrites the hint. */
   val HintRefreshWalk = 8
+
+  /** The instant an entry records after one committed at `priorTs`:
+    * the wall clock, never below it — a lagging writer clock keeps the
+    * log non-decreasing, which [[VersionLog.asOf]] rests on. */
+  def nextTs(priorTs: Long): Long =
+    math.max(System.currentTimeMillis(), priorTs)
+
+  /** The loud refusal of a file written before the current on-disk
+    * format — no read or write path interprets one — naming the
+    * `upgrade` call that rewrites it. */
+  def predatesFormat(f: java.io.File, what: String,
+      upgrade: String): Nothing =
+    throw new IllegalStateException(s"${f.getPath} predates the current " +
+      s"on-disk format ($what) — run $upgrade once to rewrite it")
+
+  /** Commit instants for entries whose `ts` is unrecorded (a format
+    * upgrade's fill), in log order: each takes its `mtime`, clamped
+    * between its predecessor's instant and the next recorded one, so
+    * the filled log is non-decreasing wherever the recorded one is. */
+  def fillTs(recorded: IndexedSeq[Option[Long]],
+      mtime: Int => Long): IndexedSeq[Long] =
+    recorded.indices.scanLeft(Long.MinValue) { (prior, i) =>
+      recorded(i).getOrElse(math.max(prior, math.min(mtime(i),
+        recorded.drop(i + 1).flatten.headOption.getOrElse(Long.MaxValue))))
+    }.tail
 }

@@ -1110,28 +1110,29 @@ object Similarity {
   /** Parse one takedown/tombstone id file under the TORN-TAIL GUARD
     * (the GDPR channel's wrong-answer shape): a file truncated at a
     * LINE boundary would otherwise read as a silently smaller dead
-    * set and serve a deleted vector again. New files carry their id
-    * count in a `#n=` header ([[writeIdFile]]); count-less files
-    * predate the guard and stay readable (a mid-number tear still
-    * dies loudly on toLong). [[writeIdFile]] never writes a file
-    * without ids, so an empty one is a tear too — read as "no ids",
-    * it would serve every vector it took down again. */
+    * set and serve a deleted vector again. Every file carries its id
+    * count in a `#n=` header ([[writeIdFile]]); a file without one
+    * predates it and is refused, naming [[ivfUpgrade]].
+    * [[writeIdFile]] never writes a file without ids, so an empty one
+    * is a tear too — read as "no ids", it would serve every vector it
+    * took down again. */
   private def parseIdFile(f: java.io.File): Seq[Long] = {
     val lines = new String(
       java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
       .split('\n').filter(_.nonEmpty)
     if (lines.isEmpty) sys.error(
       s"torn takedown file ${f.getPath} (empty) — restore it to recover")
-    lines.headOption.filter(_.startsWith("#n=")) match {
-      case Some(h) =>
-        val n = h.stripPrefix("#n=").toInt
-        if (lines.length - 1 != n) sys.error(
-          s"torn takedown file ${f.getPath} (${lines.length - 1} " +
-            s"of $n recorded ids) — restore it to recover")
-        lines.iterator.drop(1).map(_.toLong).toSeq
-      case None => lines.iterator.map(_.toLong).toSeq
-    }
+    if (!lines.head.startsWith("#n=")) indexNeedsUpgrade(f, "no #n= header")
+    val n = lines.head.stripPrefix("#n=").toInt
+    if (lines.length - 1 != n) sys.error(
+      s"torn takedown file ${f.getPath} (${lines.length - 1} " +
+        s"of $n recorded ids) — restore it to recover")
+    lines.iterator.drop(1).map(_.toLong).toSeq
   }
+
+  private def indexNeedsUpgrade(f: java.io.File, what: String): Nothing =
+    graft.core.VersionLog.predatesFormat(f, what,
+      "Similarity.ivfUpgrade on the index root")
 
   private def writeIdFile(d: java.io.File, ids: Seq[Long]): Unit = {
     require(ids.nonEmpty, "at least one vec_id required")
@@ -1166,10 +1167,9 @@ object Similarity {
     * per-request round trips on a hot path being the object-store
     * anti-pattern the stats/schema/head-hint channels exist to kill.
     * Read-your-writes holds: any read issued after a delete's ack
-    * sees the bumped marker and re-reads under a fresh key. Layouts
-    * predating the marker (tombstones written by older code) fall
-    * back to the listing-keyed memo and self-upgrade on their next
-    * takedown. */
+    * sees the bumped marker and re-reads under a fresh key. A layout
+    * without the marker (no takedown yet, or hand-built) takes the
+    * listing-keyed memo; its first takedown writes the marker. */
   private[graft] def ivfTombstonesCached(s: SparkSession,
       layout: String): Set[Long] = {
     val seqF = new java.io.File(layout, "_tombstones/_seq")
@@ -1270,11 +1270,11 @@ object Similarity {
     // the publish INSTANT rides the pointer body (the TxnTable
     // commit-ts discipline): file mtime is not durable metadata — an
     // rsync/backup/object-store migration rewrites it, which would
-    // silently shift ivfVacuum's retention verdicts; recorded beats
-    // mtime, mtime stays the legacy fallback
+    // silently shift ivfVacuum's retention verdicts. Never below the
+    // predecessor's, so ivfGenAsOf's binary search holds.
+    val ts = graft.core.VersionLog.nextTs(genPtr(root, gen - 1).fold(0L)(_.ts))
     val body = (s"""{"gen":$gen,"path":${jq(layoutPath)},"k":$k""" +
-      s""","ts":${System.currentTimeMillis()}$rb}""")
-      .getBytes("UTF-8")
+      s""","ts":$ts$rb}""").getBytes("UTF-8")
     // exclusive publish ([[graft.core.VersionLog.publish]]), then the
     // head hint: the pointer file appears COMPLETE or not at all, and
     // a racing publisher of the same generation loses loudly instead
@@ -1315,14 +1315,15 @@ object Similarity {
   // ([[genPtr]]), the ivfTombstonesCached discipline. A husk does not
   // count as committed: it stops the head's forward probe exactly as
   // an unpublished generation would.
-  private final case class GenPtr(path: String, k: Int,
-      ts: Option[Long], rollbackOf: Option[Int])
+  private final case class GenPtr(path: String, k: Int, ts: Long,
+      rollbackOf: Option[Int])
 
   private val genPtrCache =
     new java.util.concurrent.ConcurrentHashMap[String, GenPtr]()
   private[graft] val ivfLog = new graft.core.VersionLog("gen-", "gen",
     (root, g) => genPtr(root, g).isDefined,
-    (root, g) => genPtr(root, g).flatMap(_.ts))
+    (root, g) => genPtr(root, g).getOrElse(throw new IllegalStateException(
+      s"no published index generation $g under $root")).ts)
   private[graft] val ivfPointerReads =
     new java.util.concurrent.atomic.AtomicLong()
   private[graft] def resetIvfIoCountersForTest(): Unit = {
@@ -1336,7 +1337,8 @@ object Similarity {
   /** Memoized parse of one published pointer file. None = absent, or
     * a zero-length crash husk (claim created, fill never ran — NOT
     * published; never cached, it may be healed and re-claimed). Loud
-    * on a non-empty file missing its fields (external damage). */
+    * on a non-empty file missing its fields (external damage) or its
+    * `ts` (written before the current format: [[ivfUpgrade]]). */
   private def genPtr(root: String, gen: Int): Option[GenPtr] = {
     val f = ivfLog.file(root, gen)
     val key = f.getAbsolutePath
@@ -1357,7 +1359,7 @@ object Similarity {
     val k = """"k":(\d+)""".r.findFirstMatchIn(body)
       .fold(corrupt("k"))(_.group(1)).toInt
     val ts = """"ts":(\d+)""".r.findFirstMatchIn(body)
-      .map(_.group(1).toLong)
+      .fold(indexNeedsUpgrade(f, "no ts"))(_.group(1).toLong)
     val rb = """"rollbackOf":(\d+)""".r.findFirstMatchIn(body)
       .map(_.group(1).toInt)
     val p = GenPtr(path, k, ts, rb)
@@ -1390,9 +1392,8 @@ object Similarity {
     genPtr(root, gen).flatMap(_.rollbackOf)
 
   /** The publish instant of generation `gen`: the timestamp RECORDED
-    * in its pointer body; mtime for legacy pointers (predating the ts
-    * field) — what [[ivfVacuum]]'s retention guard and op=history key
-    * off ([[graft.core.VersionLog.commitTs]]). */
+    * in its pointer body — what [[ivfVacuum]]'s retention guard and
+    * op=history key off ([[graft.core.VersionLog.commitTs]]). */
   private[graft] def ivfCommitTs(root: String, gen: Int): Long =
     ivfLog.commitTs(root, gen)
 
@@ -1427,8 +1428,7 @@ object Similarity {
     * silently wrong).
     *
     * O(log generations) pointer reads and ZERO LISTs for a deep
-    * history ([[graft.core.VersionLog.asOf]] — a legacy pointer's
-    * mtime inversion falls back to the exact linear scan). */
+    * history ([[graft.core.VersionLog.asOf]]). */
   private[graft] def ivfGenAsOf(root: String, tsMillis: Long): Int =
     ivfLog.asOf(root, tsMillis) { (oldest, oldestTs) =>
       throw new IllegalArgumentException(
@@ -1529,6 +1529,45 @@ object Similarity {
     lease.checkFence()
     ivfPublishAs(root, curGen + 1, tPath, tK, rollbackOf = Some(toGen))
     (curGen + 1, tPath)
+    }
+
+  /** ONE-SHOT UPGRADE of an index root into the current on-disk
+    * format — the only code reading the older shapes, and the call
+    * every refusal of one names. A generation pointer with no `ts`
+    * gets its mtime clamped into generation order
+    * ([[graft.core.VersionLog.fillTs]]); a `_takedowns` or
+    * `_tombstones` id file with no `#n=` header gains one. IDEMPOTENT:
+    * a current file is never rewritten. Runs under the index
+    * maintenance lease. Returns the number of files rewritten. */
+  def ivfUpgrade(root: String): Int =
+    graft.core.Lease.withLeaseHandle(root, "index-upgrade") { _ =>
+      var touched = 0
+      def rewrite(f: java.io.File, body: String): Unit = {
+        graft.core.AtomicFiles.replace(f.getParent, f.getName, body)
+        touched += 1
+      }
+      def text(f: java.io.File) =
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      val tsPat = """"ts":(\d+)""".r
+      // zero-length crash husks are not published — nothing to upgrade
+      val ptrs = ivfLog.list(root).map(ivfLog.file(root, _))
+        .filter(_.length() > 0)
+      val bodies = ptrs.map(text(_).trim)
+      val ts = graft.core.VersionLog.fillTs(bodies.map(tsPat
+        .findFirstMatchIn(_).map(_.group(1).toLong)).toIndexedSeq,
+        i => ptrs(i).lastModified())
+      ptrs.indices.filterNot(i => tsPat.findFirstIn(bodies(i)).isDefined)
+        .foreach(i => rewrite(ptrs(i),
+          bodies(i).stripSuffix("}") + s""","ts":${ts(i)}}"""))
+      (new java.io.File(root, "_takedowns") +: ivfHistory(root)
+          .map(g => new java.io.File(g._2, "_tombstones")).distinct)
+        .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty))
+        .filter(_.getName.endsWith(".txt")).foreach { f =>
+          val ids = text(f).split('\n').filter(_.nonEmpty)
+          if (ids.nonEmpty && !ids.head.startsWith("#n="))
+            rewrite(f, (s"#n=${ids.length}" +: ids).mkString("", "\n", "\n"))
+        }
+      touched
     }
 
   /** Every published generation, ascending — the index's DESCRIBE

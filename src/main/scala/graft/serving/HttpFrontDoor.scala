@@ -274,8 +274,8 @@ final class HttpFrontDoor(s: SparkSession, dir: String, reg: Registry,
                 val rb = Similarity.ivfRollbackOf(root, g)
                   .map(m => s""","rollbackOf":$m""").getOrElse("")
                 val ts = Similarity.ivfTombstonesCached(s, p).size
-                // `ts` = the recorded publish instant (mtime for
-                // legacy pointers) — the table history's audit shape
+                // `ts` = the recorded publish instant — the table
+                // history's audit shape
                 s"""{"gen":$g,"path":${Domain.jStr(p)},"k":$k,""" +
                   s""""ts":${Similarity.ivfCommitTs(root, g)},""" +
                   s""""tombstones":$ts$rb}""" }

@@ -622,9 +622,14 @@ class HttpFrontDoorSpec extends AnyFunSuite {
       val rf = post(port, "/refresh", "")
       statuses.add(("refresh", rf.statusCode(), rf.body().take(200)))
     }
+    // a worker's failed assertion must fail THIS test, not die unseen
+    // in its thread
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    def worker(body: => Unit): Thread = new Thread(() =>
+      try body catch { case t: Throwable => failures.add(t); () })
     val threads =
-      (1 to 4).map(_ => new Thread(() => reporter())) ++
-        Seq(new Thread(() => writer()), new Thread(() => maintainer()))
+      (1 to 4).map(_ => worker(reporter())) ++
+        Seq(worker(writer()), worker(maintainer()))
     try {
       threads.foreach(_.start())
       // join reporters + writer, then stop the maintenance loop
@@ -632,6 +637,8 @@ class HttpFrontDoorSpec extends AnyFunSuite {
       stop.set(true)
       threads.last.join(300000)
       import scala.jdk.CollectionConverters._
+      assert(failures.isEmpty, s"soak workers failed: ${
+        failures.asScala.map(_.getMessage).mkString("; ")}")
       val bad = statuses.asScala.filter(_._2 >= 500)
       assert(bad.isEmpty, s"soak produced 5xx responses: ${bad.take(3)}")
       assert(statuses.asScala.count(s => s._1 == "report" && s._2 == 200) == 100,
@@ -848,9 +855,14 @@ class HttpFrontDoorSpec extends AnyFunSuite {
         statuses.add(("index", r.statusCode(), r.body().take(200)))
       }
     }
-    val threads = Seq(new Thread(() => writer()),
-      new Thread(() => retrainer()), new Thread(() => retrainer())) ++
-      Seq(new Thread(() => optimizer()), new Thread(() => ivfReader()))
+    // a worker's failed assertion must fail THIS test, not die unseen
+    // in its thread
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    def worker(body: => Unit): Thread = new Thread(() =>
+      try body catch { case t: Throwable => failures.add(t); () })
+    val threads = Seq(worker(writer()),
+      worker(retrainer()), worker(retrainer())) ++
+      Seq(worker(optimizer()), worker(ivfReader()))
     try {
       threads.foreach(_.start())
       threads.take(3).foreach(_.join(300000)) // writer + retrainers
@@ -860,6 +872,8 @@ class HttpFrontDoorSpec extends AnyFunSuite {
       follower.processAllAvailable()
       follower.stop()
       import scala.jdk.CollectionConverters._
+      assert(failures.isEmpty, s"soak workers failed: ${
+        failures.asScala.map(_.getMessage).mkString("; ")}")
       // read path never 5xxes mid-publish
       val bad = statuses.asScala.filter(_._2 >= 500)
       assert(bad.isEmpty, s"index reads produced 5xx: ${bad.take(3)}")

@@ -130,4 +130,21 @@ class PartitionedCubeSpec extends AnyFunSuite {
     assert(second.filter(col("o_year") === 1995).count() ==
       inferred.filter(col("o_year") === 1995).count())
   }
+
+  test("Tables.tableRows counts a partitioned directory's nested files") {
+    // a partitioned `<table>.parquet/` keeps its data under `col=val/`
+    // subdirectories: a top-level-only listing read 0 rows there,
+    // and that 0 reached the key-ship's keyRows
+    val tmp = graft.core.TempDirs.scratch("rows-part")
+    val path = s"$tmp/orders_py.parquet"
+    graft.core.Tables.orders(spark, sf)
+      .withColumn("o_year", year(col("o_orderdate")))
+      .write.partitionBy("o_year").parquet(path)
+    val n = spark.read.parquet(path).count()
+    assert(n > 0)
+    assert(graft.core.Tables.tableRows(spark, tmp, "orders_py") == n)
+    // a flat table counts as before
+    graft.core.Tables.orders(spark, sf).write.parquet(s"$tmp/orders_flat.parquet")
+    assert(graft.core.Tables.tableRows(spark, tmp, "orders_flat") == n)
+  }
 }

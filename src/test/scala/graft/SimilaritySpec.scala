@@ -23,6 +23,82 @@ class SimilaritySpec extends AnyFunSuite {
 
   val sf = "/root/testdata/sf0.001"
 
+  /** An index artifact written before the current on-disk format is
+    * refused loudly, and the refusal names the upgrade call. */
+  private def assertIndexNeedsUpgrade(body: => Any): Unit = {
+    val ex = intercept[IllegalStateException](body)
+    assert(String.valueOf(ex.getMessage).contains("ivfUpgrade"),
+      s"the refusal must name the upgrade: ${ex.getMessage}")
+  }
+
+  /** (absolute path -> (mtime, bytes)) of every file under `dirs`. */
+  private def fileStates(dirs: String*): Map[String, (Long, Seq[Byte])] =
+    dirs.flatMap { d =>
+      scala.util.Using.resource(
+          java.nio.file.Files.walk(java.nio.file.Paths.get(d))) { st =>
+        import scala.jdk.CollectionConverters._
+        st.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+          .map(p => p.toAbsolutePath.toString ->
+            (java.nio.file.Files.getLastModifiedTime(p).toMillis,
+              java.nio.file.Files.readAllBytes(p).toSeq))
+          .toList
+      }
+    }.toMap
+
+  test("ivfUpgrade: a ts-less pointer gains its mtime, count-less " +
+      "takedown and tombstone files gain their count — refused until " +
+      "then; a current index and a second upgrade touch no file; a " +
+      "publish never records a ts below its predecessor's") {
+    val root = graft.core.TempDirs.scratchShared("ivfupgroot")
+    val lay = graft.core.TempDirs.scratchShared("ivfupglay")
+    new java.io.File(lay).mkdirs()
+    def put(f: java.io.File, body: String): Unit = {
+      java.nio.file.Files.write(f.toPath, body.getBytes("UTF-8")); ()
+    }
+    assert(Similarity.ivfPublish(root, lay, 4) == 1)
+    Similarity.ivfPublishAs(root, 2, lay, 4)
+    Similarity.ivfDelete(root, Seq(3L, 5L))
+    val current = fileStates(root, lay)
+    assert(Similarity.ivfUpgrade(root) == 0)
+    assert(fileStates(root, lay) == current,
+      "a current index must stay untouched")
+    // forge the OLDER shapes: gen 1 without its ts (mtime 1 s before
+    // gen 2's publish), both id files without their count header
+    val ts2 = Similarity.ivfCommitTs(root, 2)
+    val g1 = new java.io.File(root, "gen-1.json")
+    put(g1, s"""{"gen":1,"path":"$lay","k":4}""")
+    assert(g1.setLastModified(ts2 - 1000L))
+    val idFiles = Seq(new java.io.File(root, "_takedowns"),
+      new java.io.File(lay, "_tombstones")).flatMap(d =>
+      d.listFiles().filter(_.getName.endsWith(".txt")))
+    assert(idFiles.size == 2)
+    idFiles.foreach(f => put(f, "3\n5\n"))
+    Similarity.dropGenPtrCacheForTest(root)
+    assertIndexNeedsUpgrade(Similarity.ivfCommitTs(root, 1))
+    assertIndexNeedsUpgrade(Similarity.ivfTombstones(lay))
+    assertIndexNeedsUpgrade(Similarity.takedownLedger(root))
+    assert(Similarity.ivfUpgrade(root) == 3)
+    assert(Similarity.ivfCommitTs(root, 1) == ts2 - 1000L,
+      "a pointer's filled instant is its mtime when that is in order")
+    assert(Similarity.ivfTombstones(lay) == Set(3L, 5L))
+    assert(Similarity.takedownLedger(root) == Set(3L, 5L))
+    assert(idFiles.forall(f => new String(java.nio.file.Files.readAllBytes(
+      f.toPath), "UTF-8") == "#n=2\n3\n5\n"))
+    val once = fileStates(root, lay)
+    assert(Similarity.ivfUpgrade(root) == 0)
+    assert(fileStates(root, lay) == once, "a second upgrade must touch no file")
+    // a publisher whose predecessor recorded an instant ahead of this
+    // clock: the pointer log stays non-decreasing
+    val future = System.currentTimeMillis() + 86400000L
+    put(new java.io.File(root, "gen-2.json"),
+      s"""{"gen":2,"path":"$lay","k":4,"ts":$future}""")
+    Similarity.dropGenPtrCacheForTest(root)
+    Similarity.ivfPublishAs(root, 3, lay, 4)
+    assert(Similarity.ivfCommitTs(root, 3) >= future)
+    assert(Similarity.ivfGenAsOf(root, future - 1) == 1)
+    assert(Similarity.ivfGenAsOf(root, future) == 3)
+  }
+
   test("band signatures: deterministic, bands independent, packed width") {
     import spark.implicits._
     // distinct powers of two: no ±1 combination sums to exactly zero,
@@ -474,7 +550,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("ivfGenAsOf binary-searches recorded instants: O(log) pointer " +
       "reads and ZERO root LISTs on a deep history; a legacy mtime " +
-      "inversion falls back to the exact linear answer") {
+      "inversion is refused until ivfUpgrade clamps it into order") {
     val root = graft.core.TempDirs.scratchShared("ivfasofdeep")
     new java.io.File(root).mkdirs()
     // a DEEP pointer history (64 generations, recorded instants 1 s
@@ -505,16 +581,19 @@ class SimilaritySpec extends AnyFunSuite {
       Similarity.ivfGenAsOf(root, t0) // predates the oldest: loud
     }
     // THE ADVICE SCENARIO: the oldest pointer is LEGACY (no recorded
-    // ts) and an rsync pushed its mtime into the FUTURE — the
-    // monotonicity the search leans on is broken at a sampled point,
-    // so the exact linear scan must answer (not a false 'nothing
-    // published' from the inverted head of the range)
+    // ts) and an rsync pushed its mtime into the FUTURE — refused
+    // until the upgrade fills it clamped below gen 2's recorded
+    // instant, so the search never answers a false 'nothing
+    // published' from an inverted head of the range
     plant(1, """{"gen":1,"path":"lay1","k":4}""")
     java.nio.file.Files.setLastModifiedTime(
       java.nio.file.Paths.get(root, "gen-1.json"),
       java.nio.file.attribute.FileTime.fromMillis(
         System.currentTimeMillis() + 86400000L))
     Similarity.dropGenPtrCacheForTest(root)
+    assertIndexNeedsUpgrade(Similarity.ivfGenAsOf(root, t0 + 37 * 1000L))
+    assert(Similarity.ivfUpgrade(root) == 1)
+    assert(Similarity.ivfCommitTs(root, 1) == t0 + 2 * 1000L)
     assert(Similarity.ivfGenAsOf(root, t0 + 37 * 1000L + 500) == 37,
       "an mtime-inverted legacy pointer must not shift the asOf answer")
     // hint-bounded history: the full committed chain, zero LISTs
@@ -676,7 +755,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("generation retention keys off the RECORDED publish instant — " +
-      "an mtime rewrite shifts nothing; legacy pointers fall back") {
+      "an mtime rewrite shifts nothing; legacy pointers need ivfUpgrade") {
     import spark.implicits._
     def vec(i: Long) = Seq(math.cos(i * 0.1).toFloat, math.sin(i * 0.1).toFloat)
     val lay1 = graft.core.TempDirs.scratchShared("tsgen1")
@@ -708,14 +787,17 @@ class SimilaritySpec extends AnyFunSuite {
     }
     assert(refused.getMessage.contains("superseded less than"),
       refused.getMessage)
-    // LEGACY pointer (pre-ts body): mtime is the fallback — write one
-    // by hand at the head slot and check the fallback engages
+    // LEGACY pointer (pre-ts body) at the head slot: refused until the
+    // upgrade records its mtime — clamped to no earlier than gen 2's
+    // recorded instant (this 2009 mtime predates it)
     val legacy = new java.io.File(root, "gen-3.json")
     java.nio.file.Files.write(legacy.toPath,
       s"""{"gen":3,"path":${"\"" + lay1 + "\""},"k":4}""".getBytes("UTF-8"))
     assert(legacy.setLastModified(1234567890000L))
-    assert(Similarity.ivfCommitTs(root, 3) == 1234567890000L,
-      "a pointer without a recorded ts falls back to mtime")
+    assertIndexNeedsUpgrade(Similarity.ivfCommitTs(root, 3))
+    assert(Similarity.ivfUpgrade(root) == 1)
+    assert(Similarity.ivfCommitTs(root, 3) == tsBefore(1),
+      "the filled instant is clamped to its predecessor's")
   }
 
   test("vacuum's fold-forward never writes a taken-down id's bytes " +

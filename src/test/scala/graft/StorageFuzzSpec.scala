@@ -321,7 +321,7 @@ class StorageFuzzSpec extends AnyFunSuite {
             java.nio.file.Files.write(f.toPath,
               "{{{torn".getBytes("UTF-8"))
           else java.nio.file.Files.deleteIfExists(f.toPath)
-          TxnTable.dropMetaCacheForTest(dir)
+          TxnTable.dropCaches(dir)
           opLog += "hintChaos"
           assert(TxnTable.version(dir) == v,
             s"hint chaos changed the resolved head: ${opLog.mkString("; ")}")

@@ -69,19 +69,19 @@ class TornWriteSpec extends AnyFunSuite {
     // line-boundary tear on the SNAPSHOT base: without the tail guard
     // this parses as a valid shorter file list — the wrong-answer shape
     val orig = tearAtLine(m1)
-    TxnTable.dropMetaCacheForTest(dir)
+    TxnTable.dropCaches(dir)
     val torn = intercept[RuntimeException] { TxnTable.read(spark, dir) }
     assert(torn.getMessage.contains("torn manifest"), torn.getMessage)
     // mid-line tear: the per-line parse dies loudly
     write(m1, orig); tearMidLine(m1)
-    TxnTable.dropMetaCacheForTest(dir)
+    TxnTable.dropCaches(dir)
     val jag = intercept[RuntimeException] { TxnTable.read(spark, dir) }
     assert(jag.getMessage.contains("torn manifest") ||
       jag.getMessage.contains("unparseable manifest line"),
       jag.getMessage)
     // restored bytes: full recovery, same answer
     write(m1, orig)
-    TxnTable.dropMetaCacheForTest(dir)
+    TxnTable.dropCaches(dir)
     assert(TxnTable.read(spark, dir).count() == rows)
   }
 
@@ -96,7 +96,7 @@ class TornWriteSpec extends AnyFunSuite {
     val cv = TxnTable.checkpoint(dir)
     val ck = new java.io.File(dir, s"checkpoint-v$cv.json")
     tearAtLine(ck)
-    TxnTable.dropMetaCacheForTest(dir)
+    TxnTable.dropCaches(dir)
     val torn = intercept[RuntimeException] {
       TxnTable.liveEntries(dir, cv)
     }
@@ -105,7 +105,7 @@ class TornWriteSpec extends AnyFunSuite {
     // checkpoints are derivable: DELETE is the recovery, and the
     // resolution walks the manifests to the identical answer
     assert(ck.delete())
-    TxnTable.dropMetaCacheForTest(dir)
+    TxnTable.dropCaches(dir)
     assert(TxnTable.read(spark, dir).count() == 50)
     assert(TxnTable.checkpoint(dir) == cv, "re-checkpoint repairs")
   }
@@ -122,7 +122,7 @@ class TornWriteSpec extends AnyFunSuite {
       (0L until 10L).map(k => (k, -k)).toDF("k", "v"),
       numFiles = 2)                                                 // v2 delta
     tearAtLine(new java.io.File(dir, "manifest-v2.json"))
-    TxnTable.dropMetaCacheForTest(dir)
+    TxnTable.dropCaches(dir)
     val torn = intercept[RuntimeException] { TxnTable.read(spark, dir) }
     assert(torn.getMessage.contains("torn manifest"), torn.getMessage)
     // a ZERO-BYTE tear under a later delta: read as an empty snapshot
@@ -139,7 +139,7 @@ class TornWriteSpec extends AnyFunSuite {
       (90L until 95L).map(k => (k, -k)).toDF("k", "v"),
       numFiles = 1)                                                 // v3 delta
     write(new java.io.File(dir0, "manifest-v2.json"), Array.emptyByteArray)
-    TxnTable.dropMetaCacheForTest(dir0)
+    TxnTable.dropCaches(dir0)
     Seq[() => Any](() => TxnTable.read(spark, dir0),
         () => TxnTable.rowCount(dir0)).foreach { f =>
       val empty = intercept[RuntimeException] { f() }
@@ -165,7 +165,7 @@ class TornWriteSpec extends AnyFunSuite {
     val orig = readBytes(ep)
     val kept = new String(orig, "UTF-8").split('\n').dropRight(1)
     write(ep, kept.mkString("", "\n", "\n").getBytes("UTF-8"))
-    TxnTable.dropMetaCacheForTest(dir)
+    TxnTable.dropCaches(dir)
     val torn = intercept[RuntimeException] {
       TxnTable.constraints(dir)
     }
@@ -179,13 +179,14 @@ class TornWriteSpec extends AnyFunSuite {
     assert(viaWrite.getMessage.contains("torn constraints epoch"),
       viaWrite.getMessage)
     write(ep, orig)
-    TxnTable.dropMetaCacheForTest(dir)
+    TxnTable.dropCaches(dir)
     assert(TxnTable.constraints(dir).map(_._1) == Seq("v_lo", "v_hi"))
   }
 
   test("torn takedown id file: losing trailing tombstone lines fails " +
       "loudly on the recorded count (a GDPR-deleted vector must never " +
-      "silently serve again); legacy count-less files stay readable") {
+      "silently serve again); legacy count-less files are refused until " +
+      "ivfUpgrade") {
     val layout = graft.core.TempDirs.scratchShared("torntomb")
     new java.io.File(layout).mkdirs()
     Similarity.ivfTombstone(layout, Seq(11L, 22L, 33L, 44L))
@@ -209,11 +210,24 @@ class TornWriteSpec extends AnyFunSuite {
     }
     assert(empty.getMessage.contains("torn takedown file"),
       empty.getMessage)
-    // a LEGACY file (no #n= header, pre-guard) still reads
+    // a LEGACY file (no #n= header, pre-guard) is refused, naming the
+    // upgrade; the upgrade of the index serving the layout counts it
+    val root = graft.core.TempDirs.scratchShared("torntombroot")
+    Similarity.ivfPublish(root, layout, 4)
+    def refused(): Unit = {
+      val old = intercept[IllegalStateException] {
+        Similarity.ivfTombstones(layout)
+      }
+      assert(old.getMessage.contains("ivfUpgrade"), old.getMessage)
+    }
     write(f, "11\n22\n".getBytes("UTF-8"))
+    refused()
+    assert(Similarity.ivfUpgrade(root) == 1)
     assert(Similarity.ivfTombstones(layout) == Set(11L, 22L))
     // mid-number tears on legacy files die loudly on the parse
     write(f, "11\n2".concat(" ").getBytes("UTF-8"))
+    refused()
+    assert(Similarity.ivfUpgrade(root) == 1)
     intercept[NumberFormatException] {
       Similarity.ivfTombstones(layout)
     }
@@ -336,7 +350,7 @@ class TornWriteSpec extends AnyFunSuite {
     // re-primes the hint — same committed answer
     val hint = new java.io.File(dir, "_head.json")
     java.nio.file.Files.write(hint.toPath, """{"head":""".getBytes("UTF-8"))
-    TxnTable.dropMetaCacheForTest(dir)
+    TxnTable.dropCaches(dir)
     assert(TxnTable.read(spark, dir).count() == 10)
     assert(new String(readBytes(hint), "UTF-8").contains("\"head\":2"),
       "the degraded read must re-prime the hint")

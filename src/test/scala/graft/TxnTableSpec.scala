@@ -31,6 +31,27 @@ class TxnTableSpec extends AnyFunSuite {
     dir
   }
 
+  /** A table artifact written before the current on-disk format is
+    * refused loudly, and the refusal names the upgrade call. */
+  private def assertNeedsUpgrade(body: => Any): Unit = {
+    val ex = intercept[RuntimeException](body)
+    assert(String.valueOf(ex.getMessage).contains("TxnTable.upgrade"),
+      s"the refusal must name the upgrade: ${ex.getMessage}")
+  }
+
+  /** (relative name -> (mtime, bytes)) of every file under `dir`. */
+  private def fileStates(dir: String): Map[String, (Long, Seq[Byte])] = {
+    val root = java.nio.file.Paths.get(dir)
+    scala.util.Using.resource(java.nio.file.Files.walk(root)) { st =>
+      import scala.jdk.CollectionConverters._
+      st.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString ->
+          (java.nio.file.Files.getLastModifiedTime(p).toMillis,
+            java.nio.file.Files.readAllBytes(p).toSeq))
+        .toMap
+    }
+  }
+
   test("init writes v1; delete rewrites only stat-matched files") {
     val dir = freshTable()
     // NOTE init's repartition(8) hash-scatters keys, so every file
@@ -292,7 +313,8 @@ class TxnTableSpec extends AnyFunSuite {
     assert(TxnTable.liveEntries(dir).forall(_.stats.contains("k")))
   }
 
-  test("legacy bare-path manifests fall back to footers, then self-upgrade") {
+  test("legacy bare-path manifests are refused until upgrade, then fall " +
+      "back to footers and self-upgrade their stats") {
     val dir = graft.core.TempDirs.scratchShared("txntable")
     import spark.implicits._
     TxnTable.init(spark, dir,
@@ -307,8 +329,14 @@ class TxnTableSpec extends AnyFunSuite {
       legacy.getBytes("UTF-8"))
     // the in-place rewrite violates the manifest-immutability premise
     // the resolution caches rest on — drop them (the probe seam)
-    TxnTable.dropMetaCacheForTest(dir)
+    TxnTable.dropCaches(dir)
+    assertNeedsUpgrade(TxnTable.liveEntries(dir))
+    assertNeedsUpgrade(TxnTable.deleteKeys(spark, dir, "k", Seq(1000L)))
+    assert(TxnTable.upgrade(spark, dir) == 1)
     assert(TxnTable.liveEntries(dir).forall(_.stats.isEmpty))
+    // the upgrade records each file's true size (the bare path had none)
+    assert(TxnTable.liveEntries(dir).forall(e =>
+      e.bytes == new java.io.File(dir, e.path).length() && e.bytes > 0))
     // first delete: footer fallback finds the rewrite set correctly
     val rewrote = TxnTable.deleteKeys(spark, dir, "k", Seq(1000L, 1001L))
     assert(rewrote >= 1 && TxnTable.read(spark, dir).count() == 3998)
@@ -1360,16 +1388,22 @@ class TxnTableSpec extends AnyFunSuite {
     // rows survive carry-by-reference (untouched files keep their
     // counts without any footer re-read)
     assert(TxnTable.liveEntries(dir).forall(_.rows >= 0))
-    // a legacy bare-path manifest has no rows channel: unknown must
-    // surface as None, never as a number
+    // a legacy bare-path manifest has no rows channel: it is refused
+    // until upgraded, and then unknown must surface as None, never as
+    // a number
     val legacyDir = graft.core.TempDirs.scratchShared("txnrowslegacy")
-    TxnTable.init(spark, legacyDir, (0L until 10L).toDF("k"), numFiles = 1)
+    TxnTable.init(spark, legacyDir, (0L until 10L).toDF("k"), numFiles = 1,
+      statsCols = Seq("k"))
+    assert(TxnTable.rowCount(legacyDir).contains(10L))
     val mf = new java.io.File(legacyDir, "manifest-v1.json")
     val paths = TxnTable.liveFiles(legacyDir)
     java.nio.file.Files.write(mf.toPath,
       paths.map(p => s""""$p"""").mkString("[\n", ",\n", "\n]")
         .getBytes("UTF-8"),
       java.nio.file.StandardOpenOption.TRUNCATE_EXISTING)
+    TxnTable.dropCaches(legacyDir)
+    assertNeedsUpgrade(TxnTable.rowCount(legacyDir))
+    TxnTable.upgrade(spark, legacyDir)
     assert(TxnTable.rowCount(legacyDir).isEmpty,
       "legacy manifests must report unknown, not a guessed count")
   }
@@ -1532,21 +1566,21 @@ class TxnTableSpec extends AnyFunSuite {
   }
 
   test("manifest-carried schema: recorded at init, grows under evolution, " +
-      "refuses type changes; legacy tables upgrade on first mutation") {
+      "refuses type changes; legacy tables are refused until upgrade") {
     import spark.implicits._
     val dir = graft.core.TempDirs.scratchShared("txnschema")
     TxnTable.init(spark, dir,
       (0L until 50L).map(k => (k, k * 2)).toDF("k", "v"),
       numFiles = 2, statsCols = Seq("k"))
-    assert(TxnTable.physSchemaAt(dir, 1).map(_.fieldNames.toSeq)
-      .contains(Seq("k", "v")), "init must record the schema")
+    assert(TxnTable.physSchemaAt(dir, 1).fieldNames.toSeq == Seq("k", "v"),
+      "init must record the schema")
     // schema evolution: the upsert's new column folds into the
     // recorded schema; pre-evolution rows read as typed nulls
     TxnTable.upsert(spark, dir, "k",
       Seq((1L, 10L, "x")).toDF("k", "v", "tag"))
     val v2 = TxnTable.version(dir)
-    assert(TxnTable.physSchemaAt(dir, v2)
-      .exists(_.fieldNames.toSeq == Seq("k", "v", "tag")))
+    assert(TxnTable.physSchemaAt(dir, v2).fieldNames.toSeq ==
+      Seq("k", "v", "tag"))
     val now = TxnTable.read(spark, dir)
     assert(now.filter(col("k") === 2L).select("tag").first().isNullAt(0))
     assert(now.filter(col("k") === 1L).select("tag").first()
@@ -1564,8 +1598,8 @@ class TxnTableSpec extends AnyFunSuite {
     assert(boom.getMessage.contains("schema evolution"), boom.getMessage)
     assert(TxnTable.version(dir) == v2 &&
       TxnTable.read(spark, dir).count() == 50)
-    // LEGACY manifests (no schema header) still read via the footer
-    // union and upgrade on their first mutation
+    // LEGACY manifests (no schema header) are refused until the
+    // upgrade records the schema their footer union yields
     val leg = graft.core.TempDirs.scratchShared("txnlegacy")
     TxnTable.init(spark, leg,
       (0L until 20L).map(k => (k, k)).toDF("k", "v"),
@@ -1576,13 +1610,18 @@ class TxnTableSpec extends AnyFunSuite {
       .filterNot(l => l.contains("\"schema\":") || l.contains("\"epochs\":"))
       .mkString("\n")
     java.nio.file.Files.write(m1, stripped.getBytes("UTF-8"))
-    assert(TxnTable.physSchemaAt(leg, 1).isEmpty)
-    assert(TxnTable.read(spark, leg).count() == 20,
-      "legacy manifests read through the mergeSchema fallback")
+    TxnTable.dropCaches(leg)
+    assertNeedsUpgrade(TxnTable.physSchemaAt(leg, 1))
+    assertNeedsUpgrade(TxnTable.read(spark, leg))
+    assertNeedsUpgrade(TxnTable.deleteKeys(spark, leg, "k", Seq(1L)))
+    assert(TxnTable.version(leg) == 1, "a refused mutation commits nothing")
+    assert(TxnTable.upgrade(spark, leg) == 1)
+    assert(TxnTable.physSchemaAt(leg, 1).fieldNames.toSeq == Seq("k", "v"),
+      "the upgrade records the footer union's schema")
+    assert(TxnTable.read(spark, leg).count() == 20)
     TxnTable.deleteKeys(spark, leg, "k", Seq(1L))
-    assert(TxnTable.physSchemaAt(leg, 2)
-      .exists(_.fieldNames.toSeq == Seq("k", "v")),
-      "the first mutation must upgrade a legacy table to the schema channel")
+    assert(TxnTable.physSchemaAt(leg, 2).fieldNames.toSeq == Seq("k", "v"),
+      "the first mutation carries the upgraded schema forward")
   }
 
   test("epoch anchors: an orphaned epoch file (crashed lost declare) is " +
@@ -1622,10 +1661,9 @@ class TxnTableSpec extends AnyFunSuite {
       .first().getLong(1) == 5000L)
   }
 
-  test("legacy epoch self-upgrade: the first resolution pays ONE LIST " +
-      "and persists _epochs-legacy.json; later resolutions are " +
-      "LIST-free (seam-counted) with identical answers; a corrupt " +
-      "sidecar rebuilds") {
+  test("legacy epochs: a table predating the anchor channel is refused " +
+      "until upgrade; the upgraded anchors resolve LIST-free with the " +
+      "directory scan's answers") {
     import spark.implicits._
     val dir = graft.core.TempDirs.scratchShared("txnlegup")
     TxnTable.init(spark, dir,
@@ -1645,45 +1683,118 @@ class TxnTableSpec extends AnyFunSuite {
       java.nio.file.Files.write(m, stripped.getBytes("UTF-8"))
       ()
     }
-    val sidecar = new java.io.File(dir, "_epochs-legacy.json")
-    assert(!sidecar.exists())
-    TxnTable.dropMetaCacheForTest(dir)
-    TxnTable.resetIoCountersForTest()
-    // FIRST legacy resolution: exactly one LIST, and the self-upgrade
-    // sidecar lands
-    assert(TxnTable.constraintsAt(dir, 3).map(_._1) == Seq("v_small"))
-    assert(TxnTable.manifestLog.lists.get() == 1,
-      s"first legacy resolution must pay exactly one LIST, " +
-        s"saw ${TxnTable.manifestLog.lists.get()}")
-    assert(sidecar.exists(), "the self-upgrade sidecar must persist")
-    // SECOND resolution, cold in-process caches (a fresh reader):
-    // zero LISTs — the sidecar is the index now
-    TxnTable.dropMetaCacheForTest(dir)
+    TxnTable.dropCaches(dir)
+    assertNeedsUpgrade(TxnTable.constraintsAt(dir, 3))
+    assertNeedsUpgrade(TxnTable.versionKind(dir, 2))
+    assert(TxnTable.upgrade(spark, dir) == 3)
+    // cold in-process caches (a fresh reader): zero LISTs, the
+    // directory scan's answers
+    TxnTable.dropCaches(dir)
     TxnTable.resetIoCountersForTest()
     assert(TxnTable.constraintsAt(dir, 3).map(_._1) == Seq("v_small"))
     assert(TxnTable.constraintsAt(dir, 1).isEmpty,
       "epoch time travel below the declare must stay empty")
     assert(TxnTable.manifestLog.lists.get() == 0,
-      s"post-upgrade legacy resolution must be LIST-free, " +
+      s"upgraded epoch resolution must be LIST-free, " +
         s"saw ${TxnTable.manifestLog.lists.get()}")
-    // the active constraint still ENFORCES through the upgraded path,
-    // and the mutation folds the legacy anchors into the new head
-    // (the anchor channel takes over from here)
+    assert((1 to 3).map(TxnTable.versionKind(dir, _)) ==
+      Seq("data", "constraints", "data"))
+    // the active constraint still ENFORCES, and the next mutation
+    // carries the upgraded anchors forward
     val rejected = intercept[IllegalArgumentException] {
       TxnTable.upsert(spark, dir, "k", Seq((2L, 5000L)).toDF("k", "v"))
     }
     assert(rejected.getMessage.contains("v_small"), rejected.getMessage)
     TxnTable.upsert(spark, dir, "k", Seq((2L, 7L)).toDF("k", "v")) // v4
     assert(TxnTable.constraintsAt(dir, 4).map(_._1) == Seq("v_small"))
-    // a CORRUPT sidecar (torn external write) re-pays one LIST and
-    // rebuilds — never parses garbage as "no constraints in force"
-    java.nio.file.Files.write(sidecar.toPath,
-      "torn garbage".getBytes("UTF-8"))
-    TxnTable.dropMetaCacheForTest(dir)
-    assert(TxnTable.constraintsAt(dir, 3).map(_._1) == Seq("v_small"))
-    assert(new String(java.nio.file.Files.readAllBytes(sidecar.toPath),
-      "UTF-8").contains("\"constraints\":[2]"),
-      "the rebuild must repair the sidecar in place")
+  }
+
+  test("upgrade: a root constraints.json becomes epoch 0 and reads the " +
+      "same constraintsAt at every version; a count-less epoch header " +
+      "gains its count; a second upgrade touches no file") {
+    import spark.implicits._
+    val dir = graft.core.TempDirs.scratchShared("txnupgflat")
+    TxnTable.init(spark, dir,
+      (0L until 20L).map(k => (k, k)).toDF("k", "v"),
+      numFiles = 1, statsCols = Seq("k"))                          // v1
+    TxnTable.upsert(spark, dir, "k", Seq((1L, 5L)).toDF("k", "v")) // v2
+    TxnTable.renameColumn(spark, dir, "v", "w")                    // v3
+    TxnTable.upsert(spark, dir, "k", Seq((2L, 7L)).toDF("k", "w")) // v4
+    // forge the OLDER shapes: the flat root constraint file (in force
+    // wherever no constraints epoch is — here, every version) and a
+    // colmap epoch with the count-less header
+    val flat = """{"name":"k_pos","predicate":"k >= 0"}"""
+    java.nio.file.Files.write(new java.io.File(dir, "constraints.json").toPath,
+      (flat + "\n").getBytes("UTF-8"))
+    val cm3 = new java.io.File(dir, "colmap-v3.json").toPath
+    val cmLines = new String(java.nio.file.Files.readAllBytes(cm3), "UTF-8")
+      .split('\n').filter(_.nonEmpty)
+    assert(cmLines.head == "{\"epoch\":3,\"n\":1}")
+    java.nio.file.Files.write(cm3,
+      ("{\"epoch\":3}" +: cmLines.tail).mkString("", "\n", "\n")
+        .getBytes("UTF-8"))
+    TxnTable.dropCaches(dir)
+    assertNeedsUpgrade(TxnTable.constraintsAt(dir, 2))
+    assertNeedsUpgrade(TxnTable.read(spark, dir, 4))
+    // epoch 0 + the colmap header + four manifests anchoring epoch 0,
+    // then the root file goes
+    assert(TxnTable.upgrade(spark, dir) == 7)
+    assert(!new java.io.File(dir, "constraints.json").exists())
+    (1 to 4).foreach { v =>
+      assert(TxnTable.constraintsAt(dir, v) == Seq(("k_pos", "k >= 0")),
+        s"v$v must read the flat file's set")
+    }
+    assert(new String(java.nio.file.Files.readAllBytes(cm3), "UTF-8")
+      .startsWith("{\"epoch\":3,\"n\":1}\n"))
+    assert(TxnTable.colMapAt(dir, 2).isEmpty &&
+      TxnTable.colMapAt(dir, 4) == Seq(("v", Some("w"))))
+    assert(TxnTable.read(spark, dir).columns.toSeq == Seq("k", "w"))
+    assert((1 to 4).map(TxnTable.versionKind(dir, _)) ==
+      Seq("data", "data", "colmap", "data"),
+      "epoch 0 is numbered below every version: none reads as its declare")
+    // the upgraded constraint ENFORCES
+    val rejected = intercept[IllegalArgumentException] {
+      TxnTable.upsert(spark, dir, "k", Seq((-1L, 1L)).toDF("k", "w"))
+    }
+    assert(rejected.getMessage.contains("k_pos"), rejected.getMessage)
+    // IDEMPOTENT: a second upgrade rewrites nothing
+    val once = fileStates(dir)
+    assert(TxnTable.upgrade(spark, dir) == 0)
+    assert(fileStates(dir) == once, "a second upgrade must touch no file")
+  }
+
+  test("upgrade of a current-format table touches no file; a commit on " +
+      "a prior manifest whose ts is forged into the future records a ts " +
+      "at or after it") {
+    import spark.implicits._
+    val dir = graft.core.TempDirs.scratchShared("txnupgcur")
+    TxnTable.init(spark, dir,
+      (0L until 20L).map(k => (k, k)).toDF("k", "v"),
+      numFiles = 2, statsCols = Seq("k"))                          // v1
+    TxnTable.addConstraint(spark, dir, "v_small", "v < 1000")      // v2
+    TxnTable.upsert(spark, dir, "k", Seq((1L, 5L)).toDF("k", "v")) // v3
+    TxnTable.checkpoint(dir)
+    TxnTable.restore(spark, dir, 1)                                // v4
+    val before = fileStates(dir)
+    assert(TxnTable.upgrade(spark, dir) == 0)
+    assert(fileStates(dir) == before, "a current table must stay untouched")
+    // a writer whose predecessor recorded an instant ahead of this
+    // clock (clock skew between writers): the log stays non-decreasing
+    val future = System.currentTimeMillis() + 86400000L
+    val m4 = new java.io.File(dir, "manifest-v4.json").toPath
+    java.nio.file.Files.write(m4, new String(
+      java.nio.file.Files.readAllBytes(m4), "UTF-8")
+      .replaceAll("\\{\"ts\":\\d+\\}", s"""{"ts":$future}""")
+      .getBytes("UTF-8"))
+    TxnTable.dropCaches(dir)
+    assert(TxnTable.historyWithTs(dir).last._5 == future)
+    TxnTable.upsert(spark, dir, "k", Seq((2L, 6L)).toDF("k", "v")) // v5
+    TxnTable.restore(spark, dir, 3)                                // v6
+    val tss = TxnTable.historyWithTs(dir).map(_._5)
+    assert(tss.drop(3).forall(_ >= future), s"ts went backwards: $tss")
+    // binary search over the non-decreasing log
+    assert(TxnTable.versionAsOf(dir, future - 1) == 3)
+    assert(TxnTable.versionAsOf(dir, future) == 6)
   }
 
   test("maintenance speaks LOGICAL names: optimize after a rename chain " +
@@ -1781,14 +1892,14 @@ class TxnTableSpec extends AnyFunSuite {
     // resolves identically (a) cold and (b) from a forced checkpoint
     val expect = (1 to 11).map(v =>
       v -> TxnTable.liveEntries(dir, v).toSet).toMap
-    TxnTable.dropMetaCacheForTest(dir)
+    TxnTable.dropCaches(dir)
     (1 to 11).foreach { v =>
       assert(TxnTable.liveEntries(dir, v).toSet == expect(v),
         s"cold resolution of v$v drifted")
     }
     (1 to 11).foreach { v =>
       assert(TxnTable.checkpoint(dir, v) == v)
-      TxnTable.dropMetaCacheForTest(dir)
+      TxnTable.dropCaches(dir)
       assert(TxnTable.liveEntries(dir, v).toSet == expect(v),
         s"checkpoint resolution of v$v ≠ chain resolution")
     }
@@ -1819,7 +1930,7 @@ class TxnTableSpec extends AnyFunSuite {
     TxnTable.vacuum(dir, keepSince = 4, force = true)
     assert(new java.io.File(dir, "checkpoint-v4.json").exists(),
       "vacuum must write the resolution base it is about to orphan")
-    TxnTable.dropMetaCacheForTest(dir)
+    TxnTable.dropCaches(dir)
     assert(TxnTable.read(spark, dir, 4).collect().toSet == expect4)
     assert(TxnTable.read(spark, dir, 5).collect().toSet == expect5)
     intercept[RuntimeException] { TxnTable.read(spark, dir, 2).count() }
@@ -1846,7 +1957,7 @@ class TxnTableSpec extends AnyFunSuite {
         new java.io.File(dir, s"manifest-v$v.json").toPath,
         java.nio.file.attribute.FileTime.fromMillis(1000L * v))
     }
-    TxnTable.dropMetaCacheForTest(dir)
+    TxnTable.dropCaches(dir)
     assert(TxnTable.versionAsOf(dir, tsAtV2) == 2,
       "TIMESTAMP AS OF must survive an mtime rewrite")
     // retention: mtimes now claim v1/v2 were superseded in 1970; the
@@ -1857,11 +1968,11 @@ class TxnTableSpec extends AnyFunSuite {
     }
     assert(refused.getMessage.contains("superseded less than"),
       refused.getMessage)
-    // INVERSION FALLBACK: a legacy oldest manifest (no recorded ts)
-    // whose mtime an rsync pushed into the FUTURE breaks the
-    // monotonicity the binary search assumes — the sampled inversion
-    // must fall back to the exact linear answer, not falsely throw
-    // 'no version existed'
+    // INVERSION: a legacy oldest manifest (no recorded ts) whose
+    // mtime an rsync pushed into the FUTURE is refused until upgrade;
+    // the upgrade clamps the filled instant below its successor's
+    // recorded one, so the binary search never falsely throws 'no
+    // version existed'
     val m1 = new java.io.File(dir, "manifest-v1.json").toPath
     val stripped = new String(java.nio.file.Files.readAllBytes(m1), "UTF-8")
       .split('\n').filterNot(_.trim.startsWith("{\"ts\":")).mkString("\n")
@@ -1869,9 +1980,13 @@ class TxnTableSpec extends AnyFunSuite {
     java.nio.file.Files.setLastModifiedTime(m1,
       java.nio.file.attribute.FileTime.fromMillis(
         System.currentTimeMillis() + 86400000L))
-    TxnTable.dropMetaCacheForTest(dir)
+    TxnTable.dropCaches(dir)
+    assertNeedsUpgrade(TxnTable.versionAsOf(dir, tsAtV2))
+    assert(TxnTable.upgrade(spark, dir) == 1)
     assert(TxnTable.versionAsOf(dir, tsAtV2) == 2,
       "an mtime-inverted legacy head must not shift the asOf answer")
+    val tss = TxnTable.historyWithTs(dir).map(_._5)
+    assert(tss == tss.sorted, s"upgraded instants must be in order: $tss")
   }
 
   test("the maintenance lease serializes restore against vacuum; the " +
@@ -2549,7 +2664,7 @@ class TxnTableSpec extends AnyFunSuite {
       }
       // cold-cache: every version re-resolves through whatever mix of
       // snapshots, checkpoints and delta tails the walk left behind
-      TxnTable.dropMetaCacheForTest(dir)
+      TxnTable.dropCaches(dir)
       (1 to TxnTable.version(dir)).foreach { v =>
         val got = TxnTable.read(spark, dir, v).collect()
           .map(r => (r.getLong(0), (r.getString(1), r.getLong(2)))).toSet
@@ -2572,8 +2687,8 @@ class TxnTableSpec extends AnyFunSuite {
     }
   }
 
-  test("restore of a legacy zero-file version is a clean commit, not an " +
-      "opaque schema-inference crash") {
+  test("restore of an upgraded legacy zero-file version is a clean " +
+      "commit, not an opaque schema-inference crash") {
     import spark.implicits._
     val dir = graft.core.TempDirs.scratchShared("txnrestempty")
     TxnTable.init(spark, dir,
@@ -2590,10 +2705,17 @@ class TxnTableSpec extends AnyFunSuite {
         .split('\n').filterNot(_.contains("\"schema\":")).mkString("\n")
       java.nio.file.Files.write(p, stripped.getBytes("UTF-8"))
     }
-    TxnTable.dropMetaCacheForTest(dir)
+    TxnTable.dropCaches(dir)
+    assertNeedsUpgrade(TxnTable.restore(spark, dir, 2))
+    assert(TxnTable.version(dir) == 3, "a refused restore commits nothing")
+    assert(TxnTable.upgrade(spark, dir) == 3)
+    // the empty version takes its predecessor's schema: the restore
+    // buries nothing and head's surface stays visible
+    assert(TxnTable.physSchemaAt(dir, 2).fieldNames.toSeq == Seq("k", "v"))
     val v4 = TxnTable.restore(spark, dir, 2)
     assert(v4 == 4 && TxnTable.liveEntries(dir, 4).isEmpty,
       "restoring to the empty version must commit cleanly")
+    assert(TxnTable.read(spark, dir).columns.toSeq == Seq("k", "v"))
   }
 
   test("head hint: steady-state reads resolve with ZERO directory " +
