@@ -38,7 +38,13 @@ object SqlFrontDoor {
     try walk(GraftBridge.parseSql(spark, sql))
     catch { case e: Exception => Left(s"unparseable SQL: ${e.getMessage}") }
 
-  def run(sql: String, reg: Registry)(spark: SparkSession, dir: String): DataFrame = {
+  def run(sql: String, reg: Registry)(spark: SparkSession, dir: String): DataFrame =
+    runOnCube(sql, reg)(spark, dir)._2
+
+  /** [[run]], also naming the cube the statement reads or describes
+    * (the front door sizes the served page by that cube's cap). */
+  def runOnCube(sql: String, reg: Registry)(spark: SparkSession,
+      dir: String): (String, DataFrame) = {
     val plan =
       try GraftBridge.parseSql(spark, sql)
       catch { case e: Exception =>
@@ -50,7 +56,8 @@ object SqlFrontDoor {
       case d: DescribeRelation =>
         d.relation match {
           case u: UnresolvedTableOrView =>
-            describe(u.multipartIdentifier.mkString("."), reg)(spark)
+            val cube = u.multipartIdentifier.mkString(".")
+            (cube, describe(cube, reg)(spark))
           case other => throw new IllegalArgumentException(
             s"DESCRIBE must name a registered cube, got: $other")
         }
@@ -59,7 +66,8 @@ object SqlFrontDoor {
           req <- walk(p)
           m <- RequestModel.from(req, reg)
           pl <- Planner.plan(m, spark, dir)
-        } yield pl.df).fold(e => throw new IllegalArgumentException(e), identity)
+        } yield (req.cube, pl.df))
+          .fold(e => throw new IllegalArgumentException(e), identity)
     }
   }
 

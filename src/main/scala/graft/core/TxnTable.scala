@@ -1675,7 +1675,10 @@ object TxnTable {
     * clustered commit; everything outside the box carries by
     * reference, stats included. The box is planned from the
     * manifest's carried stats (one metadata read, same as the
-    * mutations). Returns how many files were re-clustered. */
+    * mutations). A box that is already clustered — at most `numFiles`
+    * matched files whose key ranges are pairwise disjoint — is left
+    * as it is, with no commit. Returns how many files were
+    * re-clustered. */
   def optimizeRange(s: SparkSession, dir: String, keyCol: String,
       lo: Long, hi: Long, numFiles: Int = 4): Int =
     withOcc(dir, rewrite = true) { planned =>
@@ -1686,7 +1689,9 @@ object TxnTable {
       val (matched, untouched) = live.partition { e =>
         val (l, h) = rangeOf(e); h >= lo && l <= hi
       }
-      if (matched.size <= 1) 0 // a single file is already "clustered"
+      val ranges = matched.map(rangeOf).sortBy(_._1)
+      val disjoint = ranges.zip(ranges.drop(1)).forall { case (a, b) => a._2 < b._1 }
+      if (matched.size <= numFiles && disjoint) 0
       else {
         val clustered = readSubset(s, dir, planned, matched.map(_.path))
           .repartitionByRange(numFiles, col(pKey))

@@ -20,10 +20,17 @@ import graft.semantic.model.Registry
   *                           the thin wire surface of the reference's
   *                           Avatica SQL service (service/.../calcite/
   *                           avatica/MahaAvaticaService.scala): SQL in,
-  *                           rows out, same analyze/plan path as JSON
+  *                           rows out, same analyze/plan path as JSON.
+  *                           Both serve one page capped at the cube's
+  *                           `maxRowsSync` (default Serving.SyncMaxRows,
+  *                           5,000): a larger result answers 400 naming
+  *                           the cap, never a truncated page
   *   GET  /domain            Domain.domainJson (+freshness)
   *   POST /jobs              async submit → {"jobId": …}
-  *   GET  /jobs/{id}         status; completed jobs embed the envelope
+  *   GET  /jobs/{id}         status; completed jobs embed the envelope,
+  *                           up to Serving.AsyncMaxRows (100,000) rows;
+  *                           a larger result answers 400 with its
+  *                           rowCount and runs no Spark job
   *   DELETE /jobs/{id}       cancel (queued: never starts; running:
   *                           Spark job group killed) → 409 if terminal
   *   POST /refresh           ingestion-completion callback →
@@ -36,7 +43,9 @@ import graft.semantic.model.Registry
   *                         |delete|rollback|asOf|lease
   *                           search serves top-k over the published
   *                           generation with the nprobe recall/latency
-  *                           knob (vecId=…[,…]&k=…&nprobe=…)
+  *                           knob (vecId=…[,…]&k=…&nprobe=…); k < 1,
+  *                           nprobe < 1, or queries × k above
+  *                           Serving.SyncMaxRows answers 400
   *                           ANN-index maintenance over the REGISTERED
   *                           generation roots: `balance` runs the
   *                           drift statistic against the live
@@ -128,14 +137,12 @@ final class HttpFrontDoor(s: SparkSession, dir: String, reg: Registry,
         // do; a custom-registry front door must not silently serve
         // /report from the default demo registry (caught by the soak)
         val df = SemanticQueries.runLogged(body, reqId, reg)(s, dir)
-        val env = Serving.jsonEnvelope(df) // materializes the page
         val cube = graft.analyzer.request.parse(body).map(_.cube).getOrElse("")
-        SemanticQueries.requestLogWriter.write(RequestLog.served(
-          s"$reqId-served", cube, start, System.currentTimeMillis()))
-        (200, env, reqId)
+        (200, servePage(reqId, cube, syncCap(cube), start, df), reqId)
       } catch {
         case e: IllegalArgumentException =>
-          // runLogged already wrote the 400 plan-time envelope
+          // runLogged wrote the plan-time envelope of a plan-time 400;
+          // servePage wrote the completion record of an over-cap 400
           (400, s"""{"error":${Domain.jStr(e.getMessage)}}""", reqId)
       }
       }
@@ -146,11 +153,8 @@ final class HttpFrontDoor(s: SparkSession, dir: String, reg: Registry,
       val sql = new String(ex.getRequestBody.readAllBytes(), UTF_8)
       val start = System.currentTimeMillis()
       try {
-        val df = graft.analyzer.SqlFrontDoor.run(sql, reg)(s, dir)
-        val env = Serving.jsonEnvelope(df)
-        SemanticQueries.requestLogWriter.write(RequestLog.served(
-          s"$reqId-served", "sql", start, System.currentTimeMillis()))
-        (200, env, reqId)
+        val (cube, df) = graft.analyzer.SqlFrontDoor.runOnCube(sql, reg)(s, dir)
+        (200, servePage(reqId, "sql", syncCap(cube), start, df), reqId)
       } catch {
         case e: IllegalArgumentException =>
           (400, s"""{"error":${Domain.jStr(e.getMessage)}}""", reqId)
@@ -192,8 +196,15 @@ final class HttpFrontDoor(s: SparkSession, dir: String, reg: Registry,
           (200, """{"status":"cancelled"}""", reqId)
         case Some(JobQueue.Failed(e)) =>
           (200, s"""{"status":"failed","error":${Domain.jStr(e)}}""", reqId)
+        case Some(JobQueue.Completed(n)) if n > Serving.AsyncMaxRows =>
+          // the row count is known from completion: refuse the embed
+          // without running a Spark job
+          (400, s"""{"status":"completed","rowCount":$n,"error":${Domain.jStr(
+            s"result has $n rows, more than the ${Serving.AsyncMaxRows}-row " +
+              "cap on an embedded job result")}}""", reqId)
         case Some(JobQueue.Completed(n)) =>
-          val env = jobs.fetch(path).map(Serving.jsonEnvelope).getOrElse("null")
+          val env = jobs.fetch(path)
+            .map(Serving.jsonEnvelope(_, Serving.AsyncMaxRows)).getOrElse("null")
           (200, s"""{"status":"completed","rowCount":$n,"result":$env}""", reqId)
       }
     })
@@ -345,6 +356,16 @@ final class HttpFrontDoor(s: SparkSession, dir: String, reg: Registry,
                   else {
                     val topK = q.get("k").map(_.toInt).getOrElse(5)
                     val np = q.get("nprobe").map(_.toInt).getOrElse(4)
+                    // the answer is collected on the driver: queries × k
+                    // rows, bounded like a sync page
+                    val nq = if (batch.nonEmpty) batch.size
+                      else if (vec.nonEmpty) 1 else ids.size
+                    if (topK < 1 || np < 1) throw new IllegalArgumentException(
+                      s"search requires k >= 1 and nprobe >= 1 (got k=$topK, nprobe=$np)")
+                    if (nq.toLong * topK > Serving.SyncMaxRows)
+                      throw new IllegalArgumentException(
+                        s"search of $nq queries x k=$topK exceeds the " +
+                          s"${Serving.SyncMaxRows}-row result cap")
                     val res =
                       if (batch.nonEmpty)
                         Similarity.ivfServeVecs(s, path, batch, np, topK)
@@ -619,6 +640,29 @@ final class HttpFrontDoor(s: SparkSession, dir: String, reg: Registry,
     })
     server.start()
     server.getAddress.getPort
+  }
+
+  /** The sync page cap of `cube`: its `maxRowsSync`, else maha's
+    * default. */
+  private def syncCap(cube: String): Int =
+    reg.cube(cube).toOption.flatMap(_.maxRowsSync).getOrElse(Serving.SyncMaxRows)
+
+  /** Serializes a sync page under `cap` and writes the request's one
+    * completion record, `$reqId-served`: a success record, or, for a
+    * page over the cap, a failure record carrying the cap message
+    * (the IllegalArgumentException is rethrown for the 400). */
+  private def servePage(reqId: String, cube: String, cap: Int, start: Long,
+      df: org.apache.spark.sql.DataFrame): String = {
+    val env =
+      try Serving.jsonEnvelope(df, cap)
+      catch { case e: IllegalArgumentException =>
+        SemanticQueries.requestLogWriter.write(RequestLog.failure(
+          s"$reqId-served", cube, e.getMessage, start, System.currentTimeMillis()))
+        throw e
+      }
+    SemanticQueries.requestLogWriter.write(RequestLog.served(
+      s"$reqId-served", cube, start, System.currentTimeMillis()))
+    env
   }
 
   private def leaseJson(dir: String): String =

@@ -10,30 +10,50 @@ import org.apache.spark.sql.types._
   * RowList.scala:707) and ResultSetTransformer (:55 DateTransformer,
   * :83 NumberTransformer).
   *
-  * Serving always operates on a bounded page (the engine paginates
-  * before serving — maha maxRows guards, SURVEY §2.6), so a driver-side
-  * iteration over the page is correct; the unbounded path is
+  * A served JSON page is always bounded, by construction: the
+  * envelope materializes at most `cap + 1` rows and refuses a result
+  * larger than `cap` (maha's max-rows guards, SURVEY §2.6), so the
+  * driver never holds more than one capped page. The unbounded path is
   * `df.write` (distributed sink), never collect.
   */
 object Serving {
+
+  /** maha's synchronous max-rows guard (reference
+    * DruidQueryGenerator.scala:159-166): the page cap of a sync request
+    * on a cube that declares no `maxRowsSync`. */
+  val SyncMaxRows = 5000
+
+  /** maha's asynchronous max-rows guard: the cap on a completed job's
+    * result embedded in a `GET /jobs/{id}` answer. */
+  val AsyncMaxRows = 100000
 
   /** JSON API envelope for one result page:
     * {"fields":[{"fieldName":…,"fieldType":…}],"rows":[[…]],"rowCount":n}
     * — the JsonRowList wire shape: rows are POSITIONAL arrays aligned
     * with the fields list, nulls emitted explicitly (df.toJSON would
     * drop null-valued keys and emit objects, breaking positional
-    * consumers). Streams the page through toLocalIterator. */
-  def jsonEnvelope(page: DataFrame): String = {
+    * consumers).
+    *
+    * Collects `page.limit(cap + 1)`: over a sorted page Catalyst plans
+    * that as a per-partition top-k (`TakeOrderedAndProjectExec`), one
+    * job with no range-sampling job and no sort exchange; an already
+    * paged frame keeps its plan (the redundant outer limit is
+    * eliminated). More than `cap` rows throws
+    * IllegalArgumentException naming the cap: a page is refused, never
+    * truncated silently. */
+  def jsonEnvelope(page: DataFrame, cap: Int = SyncMaxRows): String = {
+    require(cap >= 0 && cap < Int.MaxValue, s"page cap $cap out of range")
+    val got = page.limit(cap + 1).collect()
+    if (got.length > cap) throw new IllegalArgumentException(
+      s"result exceeds the $cap-row page cap; request a page with " +
+        s"rowsPerPage <= $cap")
     val fields = page.schema.fields.map { f =>
       s"""{"fieldName":${q(f.name)},"fieldType":${q(typeName(f.dataType))}}"""
     }.mkString("[", ",", "]")
     val width = page.schema.length
     val rows = new StringBuilder("[")
-    var n = 0L
-    val it = page.toLocalIterator()
-    while (it.hasNext) {
-      val row = it.next()
-      if (n > 0) rows.append(',')
+    for (row <- got) {
+      if (rows.length > 1) rows.append(',')
       rows.append('[')
       var i = 0
       while (i < width) {
@@ -42,10 +62,9 @@ object Serving {
         i += 1
       }
       rows.append(']')
-      n += 1
     }
     rows.append(']')
-    s"""{"fields":$fields,"rows":${rows.result()},"rowCount":$n}"""
+    s"""{"fields":$fields,"rows":${rows.result()},"rowCount":${got.length}}"""
   }
 
   private def jsonVal(v: Any): String = v match {

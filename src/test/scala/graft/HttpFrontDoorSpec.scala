@@ -165,6 +165,90 @@ class HttpFrontDoorSpec extends AnyFunSuite {
     } finally { door.stop(); jobs.shutdown() }
   }
 
+  test("an over-cap page answers 400 naming the cap, with one failure completion record") {
+    val mem = new RequestLog.InMemoryWriter
+    val prev = SemanticQueries.requestLogWriter
+    SemanticQueries.requestLogWriter = mem
+    // maxRowsSync = 2: an async-typed body skips the plan-time
+    // pagination guard, so only the envelope's bound stops its 5 rows
+    val capped = graft.semantic.model.Registry(
+      SemanticQueries.orderCube.copy(maxRowsSync = Some(2)))
+    val jobs = new JobQueue(spark, sf, java.nio.file.Files.createTempDirectory("httpcap"))
+    val door = new HttpFrontDoor(spark, sf, capped, jobs)
+    val port = door.start()
+    try {
+      val fields = """"selectFields": [{"field": "Order Priority"}, {"field": "Order Count"}]"""
+      val over = post(port, "/report",
+        s"""{"cube": "order_stats", "requestType": "async", $fields}""",
+        Map("X-Request-Id" -> "cap-1"))
+      assert(over.statusCode() == 400 && over.body().contains("2-row page cap"), over.body())
+      val done = mem.records.filter(_.requestId == "cap-1-served")
+      assert(done.size == 1 && done.head.status == 400 &&
+        done.head.errorMessage.exists(_.contains("2-row page cap")), done)
+      val page = post(port, "/report",
+        s"""{"cube": "order_stats", "rowsPerPage": 2, $fields}""")
+      assert(page.statusCode() == 200 && page.body().contains("\"rowCount\":2"), page.body())
+    } finally {
+      door.stop(); jobs.shutdown()
+      SemanticQueries.requestLogWriter = prev
+    }
+    // the default sync cap: 8,623 (day, priority) rows at sf0.01
+    val sf01 = sf.replace("sf0.001", "sf0.01")
+    val jobs1 = new JobQueue(spark, sf01,
+      java.nio.file.Files.createTempDirectory("httpcap1"))
+    val door1 = new HttpFrontDoor(spark, sf01, SemanticQueries.registry, jobs1)
+    val port1 = door1.start()
+    try {
+      val r = post(port1, "/sql",
+        "SELECT `Order Date`, `Order Priority`, `Order Count` FROM order_stats")
+      assert(r.statusCode() == 400 &&
+        r.body().contains(s"${graft.serving.Serving.SyncMaxRows}-row page cap"), r.body())
+      // a completed job over the async cap is refused from its row count
+      val big = jobs1.submitTask("over-cap")(
+        _.range(graft.serving.Serving.AsyncMaxRows + 1L).toDF("id"))
+      var st = get(port1, s"/jobs/$big")
+      val deadline = System.currentTimeMillis() + 120000
+      while (st.statusCode() == 200 && !st.body().contains("completed") &&
+          System.currentTimeMillis() < deadline) {
+        Thread.sleep(100)
+        st = get(port1, s"/jobs/$big")
+      }
+      assert(st.statusCode() == 400 &&
+        st.body().contains(s""""rowCount":${graft.serving.Serving.AsyncMaxRows + 1}""") &&
+        st.body().contains(s"${graft.serving.Serving.AsyncMaxRows}-row"), st.body())
+    } finally { door1.stop(); jobs1.shutdown() }
+  }
+
+  test("POST /index search bounds k, nprobe and queries x k") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit}
+    val layout = graft.core.TempDirs.scratchShared("httpsearchcap")
+    (0L until 50L).map { i =>
+      val e = Seq(i.toFloat, (i * 2 + 1).toFloat)
+      (i, e, math.sqrt(e.map(x => x.toDouble * x).sum))
+    }.toDF("vec_id", "embedding", "nrm")
+      .select(lit(1).as("cid"), col("vec_id"), col("embedding"), col("nrm"))
+      .write.partitionBy("cid").mode("overwrite").parquet(layout)
+    val root = graft.core.TempDirs.scratchShared("httpsearchcaproot")
+    graft.operators.Similarity.ivfPublish(root, layout, 4)
+    val jobs = new JobQueue(spark, sf, java.nio.file.Files.createTempDirectory("httpsearch"))
+    val door = new HttpFrontDoor(spark, sf, SemanticQueries.registry, jobs,
+      maintainableIndexes = Map("ix" -> root))
+    val port = door.start()
+    try {
+      def search(q: String) = post(port, s"/index/ix?op=search&$q", "")
+      val k0 = search("vecId=1&k=0")
+      assert(k0.statusCode() == 400 && k0.body().contains("k >= 1"), k0.body())
+      val np0 = search("vecId=1&nprobe=0")
+      assert(np0.statusCode() == 400 && np0.body().contains("nprobe >= 1"), np0.body())
+      val cap = graft.serving.Serving.SyncMaxRows
+      val wide = search(s"vecId=1,2&k=${cap / 2 + 1}")
+      assert(wide.statusCode() == 400 && wide.body().contains(s"$cap-row"), wide.body())
+      val ok = search("vecId=1,2&k=3")
+      assert(ok.statusCode() == 200 && ok.body().contains("\"results\":["), ok.body())
+    } finally { door.stop(); jobs.shutdown() }
+  }
+
   test("POST /refresh: externally landed dim reaches the next served request") {
     // the wire form of Freshness.refresh — the callback an ingestion
     // job fires instead of restarting the server

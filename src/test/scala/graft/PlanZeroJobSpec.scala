@@ -22,41 +22,7 @@ class PlanZeroJobSpec extends AnyFunSuite {
 
   val sf = "/root/testdata/sf0.001"
 
-  /** Every `sem*Json` / `cur*Json` request body SemanticQueries declares. */
-  private val requestJsons: Seq[(String, String)] =
-    SemanticQueries.getClass.getMethods.toSeq
-      .filter(m => m.getParameterCount == 0 &&
-        m.getName.matches("(sem|cur)\\d+Json"))
-      .map(m => m.getName -> m.invoke(SemanticQueries).asInstanceOf[String])
-      .sortBy(_._1)
-
-  /** Jobs started while `body` runs, counted by a job listener and
-    * bracketed by sentinel jobs that flush the asynchronous listener
-    * bus (the CuratorsSpec key-ship protocol). */
-  private def jobsDuring(body: => Unit): Int = {
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
-    def settle(): Unit = {
-      val before = counter.get()
-      // a raw RDD count is exactly one job
-      spark.sparkContext.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 10000000000L
-      while (counter.get() <= before && System.nanoTime() < deadline)
-        Thread.sleep(5)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      settle(); counter.set(0)
-      body
-      settle()
-      counter.get() - 1 // minus the closing sentinel
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private val requestJsons = ServeProbes.requestBodies
 
   private def plan(req: request.ReportingRequest): Planner.Planned =
     RequestModel.from(req, SemanticQueries.registry)
@@ -69,7 +35,7 @@ class PlanZeroJobSpec extends AnyFunSuite {
     val jobs = requestJsons.map { case (name, json) =>
       val req = request.parse(json).fold(e => fail(s"$name: $e"), identity)
       plan(req) // first plan: infers each source table's schema
-      name -> jobsDuring { plan(req); () }
+      name -> ServeProbes.jobsDuring(spark) { plan(req); () }
     }
     assert(jobs.forall(_._2 == 0),
       s"second Planner.plan ran Spark jobs: ${jobs.filter(_._2 != 0)}")
@@ -79,7 +45,7 @@ class PlanZeroJobSpec extends AnyFunSuite {
     def toReq() = SqlFrontDoor.toRequest(spark, SemanticQueries.sql02Text)
       .fold(e => fail(e), identity)
     plan(toReq())
-    val n = jobsDuring { plan(toReq()); () }
+    val n = ServeProbes.jobsDuring(spark) { plan(toReq()); () }
     assert(n == 0, s"second SqlFrontDoor + Planner.plan ran $n Spark jobs")
   }
 }

@@ -39,6 +39,18 @@ class ServingSpec extends AnyFunSuite {
     assert(first.size == 3 && first(1).isInstanceOf[JDouble])
   }
 
+  test("json envelope serializes a page of exactly cap rows in full and refuses cap + 1") {
+    val page = spark.range(0, 7).toDF("id").orderBy(col("id").desc)
+    val env = JsonMethods.parse(Serving.jsonEnvelope(page, cap = 7))
+    val JInt(n) = (env \ "rowCount"): @unchecked
+    val JArray(rows) = (env \ "rows"): @unchecked
+    assert(n == 7 && rows.size == 7)
+    assert(rows.map { case JArray(List(JInt(v))) => v.toInt; case o => fail(s"$o") } ==
+      (6 to 0 by -1).toList, "the top-k keeps the requested order")
+    val over = intercept[IllegalArgumentException](Serving.jsonEnvelope(page, cap = 6))
+    assert(over.getMessage.contains("6-row"), over.getMessage)
+  }
+
   test("json envelope emits explicit nulls positionally") {
     import spark.implicits._
     val df = Seq((1L, Option.empty[String], Option.empty[Double]))

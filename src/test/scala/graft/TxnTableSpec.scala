@@ -206,6 +206,29 @@ class TxnTableSpec extends AnyFunSuite {
       "optimizeRange must not change contents")
   }
 
+  test("optimizeRange leaves an already range-clustered box alone: no rewrite, no commit") {
+    val dir = graft.core.TempDirs.scratchShared("txnoptrangeidem")
+    import spark.implicits._
+    TxnTable.init(spark, dir,
+      (0L until 30000L).toDF("k").withColumn("payload", col("k") * 2)
+        .repartitionByRange(4, col("k")).sortWithinPartitions("k"),
+      numFiles = 0, statsCols = Seq("k"))
+    val v0 = TxnTable.version(dir)
+    val files0 = TxnTable.liveFiles(dir).toSet
+    assert(files0.size == 4, s"fixture must land 4 range files: $files0")
+    (1 to 3).foreach { i =>
+      assert(TxnTable.optimizeRange(spark, dir, "k", 0L, 30000L) == 0,
+        s"call $i re-clustered a clustered box")
+      assert(TxnTable.version(dir) == v0, s"call $i committed a version")
+    }
+    assert(TxnTable.liveFiles(dir).toSet == files0)
+    // more matched files than numFiles still packs into numFiles
+    assert(TxnTable.optimizeRange(spark, dir, "k", 0L, 30000L,
+      numFiles = 2) == 4)
+    assert(TxnTable.version(dir) == v0 + 1 &&
+      TxnTable.read(spark, dir).count() == 30000L)
+  }
+
   test("schema evolution: an upsert can add a column without rewriting history") {
     val dir = graft.core.TempDirs.scratchShared("txntable")
     import spark.implicits._
