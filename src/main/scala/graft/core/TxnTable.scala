@@ -1,8 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 
 /** Copy-on-write table with a versioned manifest — the lakehouse
   * transaction-log pattern in miniature, built for the two mutations a
@@ -61,19 +60,21 @@ import scala.jdk.CollectionConverters._
   * A losing attempt's commit directory is orphaned (referenced by no
   * manifest) and reclaimed by [[vacuum]], like any torn write.
   *
-  * KEY CARRIERS: [[deleteKeys]] takes a `Seq[Long]` — a takedown batch
-  * IS request metadata (thousands of ids) and rides the driver as a
-  * literal predicate. [[upsert]]/[[merge]] take an arbitrary DataFrame
-  * and pick the carrier BY SIZE ([[planKeyedMutation]]): at or below
-  * 10⁴ distinct keys the set collects and ships as a literal (one
-  * job, scan-pushable — the everyday correction batch pays exactly
-  * the small-batch cost); above it the keys NEVER land on the driver:
-  * the rewrite set is planned by joining the update frame against the
-  * manifest's per-file [min,max] ranges (only file PATHS — bounded by
-  * file count, not key count — come back), and matched files are
-  * rewritten with a `left_anti` join against the update keys. Both
-  * carriers keep SQL NULL semantics: a NULL-key row matches nothing
-  * and survives every rewrite.
+  * KEY CARRIERS: all four keyed mutations ([[deleteKeys]], [[upsert]],
+  * [[merge]], [[mergeFrame]]) commit through one method,
+  * [[commitKeyed]], and one carrier chosen BY SIZE
+  * ([[planKeyedMutation]]). A key set of at most 10⁴ distinct keys —
+  * a `deleteKeys` list that short (no job), or a key frame whose one
+  * `limit` probe comes back complete — ships as a literal
+  * (scan-pushable — the everyday takedown or correction batch pays
+  * exactly the small-batch cost). Anything larger takes the frame
+  * carrier: the rewrite set is planned by joining the key frame
+  * against the manifest's per-file [min,max] ranges (only file PATHS
+  * — bounded by file count, not key count — come back), and matched
+  * files are rewritten with a `left_anti` join against the keys, so a
+  * frame's keys never land on the driver and a long list never
+  * becomes an `IN` tree. Both carriers keep SQL NULL semantics: a
+  * NULL-key row matches nothing and survives every rewrite.
   */
 object TxnTable {
 
@@ -1339,7 +1340,7 @@ object TxnTable {
     * Driver-side key list; for a DataFrame of keys see
     * [[matchedEntriesByFrame]]. */
   private def matchedEntries(s: SparkSession, dir: String, keyCol: String,
-      keys: Seq[Long], v: Int): (Seq[FileEntry], Seq[FileEntry]) = {
+      keys: Seq[Long], v: Int): Seq[FileEntry] = {
     val sorted = keys.sorted.toArray
     def anyKeyIn(lo: Long, hi: Long): Boolean = {
       val i = java.util.Arrays.binarySearch(sorted, lo)
@@ -1347,7 +1348,7 @@ object TxnTable {
       from < sorted.length && sorted(from) <= hi
     }
     val (live, rangeOf) = entryRanges(s, dir, keyCol, v)
-    live.partition { e => val (lo, hi) = rangeOf(e); anyKeyIn(lo, hi) }
+    live.filter { e => val (lo, hi) = rangeOf(e); anyKeyIn(lo, hi) }
   }
 
   /** `updates`' key set as a one-column frame `__k` (long, non-null,
@@ -1357,38 +1358,42 @@ object TxnTable {
     updates.select(col(keyCol).cast("long").as("__k"))
       .filter(col("__k").isNotNull).distinct()
 
-  /** Key sets at or below this size are request-metadata-sized: they
-    * ship as a driver literal (one collect, a binary-searched rewrite
-    * plan, a scan-pushable predicate — the cheapest carrier). Above
-    * it the frame carrier takes over and the keys never leave the
-    * cluster. */
-  private val literalKeyMax = 10000
+  /** A driver-side key list as a `__k` frame. */
+  private def literalFrame(s: SparkSession, keys: Seq[Long]): DataFrame =
+    s.createDataset(keys)(Encoders.scalaLong).toDF("__k")
 
-  /** Plan a mutation keyed by the `keys` frame: returns (matched,
-    * untouched, survivorsOf) where `survivorsOf(matchedRows)` filters
-    * out the keyed rows with NULL-correct semantics. THE CARRIER
-    * DECISION lives here: one `limit(max+1).collect()` probe — the
-    * same single job the literal path needs anyway — either yields
-    * the complete key set (≤ max: literal carrier, zero extra jobs,
-    * exactly the pre-round-10 cost for small correction batches) or
-    * proves the set oversized (frame carrier: manifest-range join +
-    * left_anti rewrite; the keys never land on the driver). */
+  /** Key sets at or below this size are request-metadata-sized: they
+    * ship as a driver literal (a binary-searched rewrite plan, a
+    * scan-pushable predicate — the cheapest carrier). Above it the
+    * frame carrier takes over. */
+  private[graft] val literalKeyMax = 10000
+
+  /** The keys of one keyed mutation as its caller holds them: a
+    * driver-side list (`Left` — a takedown batch is request metadata)
+    * or a [[keyFrame]]-shaped `__k` frame (`Right`). */
+  private type KeySet = Either[Seq[Long], DataFrame]
+
+  /** Plan a mutation keyed by `keys`: returns (matched, survivorsOf)
+    * where `survivorsOf(matchedRows)` filters out the keyed rows with
+    * NULL-correct semantics. THE CARRIER DECISION, by size: a key set
+    * of at most [[literalKeyMax]] keys — a list that short, or a frame
+    * whose one `limit(max+1).collect()` probe comes back complete —
+    * ships as a literal (a list runs no job here, a frame only the
+    * probe); anything larger takes the frame carrier (manifest-range
+    * join + left_anti rewrite), so an oversized frame's keys never land
+    * on the driver and an oversized list never becomes an `IN` tree. */
   private def planKeyedMutation(s: SparkSession, dir: String,
-      keyCol: String, keys: DataFrame, planned: Int)
-      : (Seq[FileEntry], Seq[FileEntry], DataFrame => DataFrame) = {
-    val probe = keys.limit(literalKeyMax + 1).collect().map(_.getLong(0))
-    if (probe.isEmpty)
-      (Nil, liveEntries(dir, planned), identity)
-    else if (probe.length <= literalKeyMax) {
-      val lits = probe.toSeq
-      val (m, u) = matchedEntries(s, dir, keyCol, lits, planned)
-      (m, u, df => df.filter(col(keyCol).isNull ||
-        !col(keyCol).isin(lits: _*)))
-    } else {
-      val (m, u) = matchedEntriesByFrame(s, dir, keyCol, keys, planned)
-      (m, u,
-        df => df.join(keys, col(keyCol).cast("long") === col("__k"),
-          "left_anti"))
+      keyCol: String, keys: KeySet, planned: Int)
+      : (Seq[FileEntry], DataFrame => DataFrame) = {
+    val lits = keys.fold(_.distinct,
+      _.limit(literalKeyMax + 1).collect().map(_.getLong(0)).toSeq)
+    if (lits.length <= literalKeyMax)
+      (matchedEntries(s, dir, keyCol, lits, planned),
+        _.filter(col(keyCol).isNull || !col(keyCol).isin(lits: _*)))
+    else {
+      val frame = keys.getOrElse(literalFrame(s, lits))
+      (matchedEntriesByFrame(s, dir, keyCol, frame, planned),
+        _.join(frame, col(keyCol).cast("long") === col("__k"), "left_anti"))
     }
   }
 
@@ -1400,42 +1405,21 @@ object TxnTable {
     * BROADCAST candidate range list (bounded by file count). Only
     * matched file PATHS return to the driver — metadata, O(files). */
   private def matchedEntriesByFrame(s: SparkSession, dir: String,
-      keyCol: String, keys: DataFrame, v: Int)
-      : (Seq[FileEntry], Seq[FileEntry]) = {
+      keyCol: String, keys: DataFrame, v: Int): Seq[FileEntry] = {
     val (live, rangeOf) = entryRanges(s, dir, keyCol, v)
     val ext = keys.agg(min(col("__k")), max(col("__k"))).head()
-    if (ext.isNullAt(0)) return (Nil, live) // empty key set
+    if (ext.isNullAt(0)) return Nil // empty key set
     val (kmin, kmax) = (ext.getLong(0), ext.getLong(1))
-    val cand = live.map(e => (e, rangeOf(e)))
-      .filter { case (_, (lo, hi)) => hi >= kmin && lo <= kmax }
-    if (cand.isEmpty) return (Nil, live)
-    val rangesDf = s.createDataFrame(
-      cand.map { case (e, (lo, hi)) =>
-        org.apache.spark.sql.Row(e.path, lo, hi) }.asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__path",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("__lo",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("__hi",
-          org.apache.spark.sql.types.LongType))))
+    val cand = live.map(e => (e.path, rangeOf(e)))
+      .collect { case (p, (lo, hi)) if hi >= kmin && lo <= kmax => (p, lo, hi) }
+    if (cand.isEmpty) return Nil
+    val rangesDf = s.createDataFrame(cand).toDF("__path", "__lo", "__hi")
     val matchedPaths = keys.join(broadcast(rangesDf),
         col("__k") >= col("__lo") && col("__k") <= col("__hi"))
       .select("__path").distinct()
       .collect().map(_.getString(0)).toSet
-    live.partition(e => matchedPaths(e.path))
+    live.filter(e => matchedPaths(e.path))
   }
-
-  /** Rows of `matched` files that survive a mutation keyed by the
-    * `keys` frame: a `left_anti` join — distributed (no literal IN
-    * tree, no driver key set) and NULL-correct (a NULL-key row equals
-    * nothing, so it survives, matching SQL DELETE semantics).
-    * Visible for testing: specs assert the anti-join plan shape. */
-  private[graft] def survivorsFrame(s: SparkSession, dir: String,
-      matched: Seq[FileEntry], keyCol: String, keys: DataFrame)
-      : DataFrame =
-    s.read.parquet(matched.map(e => s"$dir/${e.path}"): _*)
-      .join(keys, col(keyCol).cast("long") === col("__k"), "left_anti")
 
   /** The stats set later commits should carry: the declared table
     * columns plus this mutation's key column (persisted, so the table
@@ -1446,56 +1430,72 @@ object TxnTable {
     cols
   }
 
+  /** Publish `adds` in place of the `removed` entries as the delta
+    * version after `planned`, behind the [[onBeforeCommit]] seam;
+    * returns how many files were removed. */
+  private def commitDelta(dir: String, planned: Int, adds: Seq[FileEntry],
+      removed: Seq[FileEntry],
+      newCols: Option[org.apache.spark.sql.types.StructType] = None): Int = {
+    onBeforeCommit()
+    writeDelta(dir, planned + 1, adds, removed.map(_.path), newCols)
+    removed.size
+  }
+
+  /** The ONE keyed copy-on-write commit behind [[deleteKeys]],
+    * [[upsert]], [[merge]] and [[mergeFrame]]. Each OCC round enforces
+    * the constraints on `inserts` (LOGICAL space), maps names to the
+    * files' physical ones, plans the rewrite set through the one
+    * carrier decision ([[planKeyedMutation]]), rewrites the matched
+    * files' survivors into at most `numFiles` files, writes `inserts`
+    * into `numFiles`, and publishes both as one delta version — so
+    * deletes, replacements and inserts land together, and readers
+    * never see the gap. `keys` are read off the LOGICAL frames and
+    * evaluated in each round, once the key column has resolved; the
+    * rewrite plan runs in physical space. With no match and no
+    * inserts nothing is committed. Returns the number of files the
+    * winning round rewrote. */
+  private def commitKeyed(s: SparkSession, dir: String, keyCol: String,
+      keys: => KeySet, inserts: Option[DataFrame], numFiles: Int): Int =
+    withOcc(dir) { planned =>
+      inserts.foreach(enforceConstraints(s, dir, _, planned))
+      val cm = colMapAt(dir, planned)
+      val phys = inserts.map(toPhysical(_, cm))
+      val pKey = physicalName(cm, keyCol)
+      val (matched, survivorsOf) =
+        planKeyedMutation(s, dir, pKey, keys, planned)
+      if (matched.isEmpty && phys.isEmpty) 0
+      else {
+        val cols = colsWith(dir, pKey)
+        val survivors =
+          if (matched.isEmpty) Nil
+          else commitFiles(s, dir, survivorsOf(
+            readSubset(s, dir, planned, matched.map(_.path))),
+            math.min(numFiles, matched.size), cols)
+        val inserted = phys.toSeq.flatMap(commitFiles(s, dir, _, numFiles, cols))
+        commitDelta(dir, planned, survivors ++ inserted, matched,
+          phys.map(_.schema))
+      }
+    }
+
   /** Delete every row whose `keyCol` is in `keys`: rewrite only the
     * stat-matched files, carry the rest by reference, commit one new
     * manifest version (retrying with a fresh plan on a concurrent
     * writer's collision). NULL-key rows are never deleted (SQL
     * three-valued semantics). Returns the number of files rewritten
-    * by the winning attempt. */
+    * by the winning attempt; deleting keys no file can hold commits
+    * nothing and returns 0. */
   def deleteKeys(s: SparkSession, dir: String, keyCol: String,
-      keys: Seq[Long], numFiles: Int = 4): Int = withOcc(dir) { planned =>
-    val pKey = physicalName(colMapAt(dir, planned), keyCol)
-    val (matched, untouched) = matchedEntries(s, dir, pKey, keys, planned)
-    if (matched.isEmpty) 0
-    else {
-      val cols = colsWith(dir, pKey)
-      val kept = readSubset(s, dir, planned, matched.map(_.path))
-        .filter(col(pKey).isNull || !col(pKey).isin(keys: _*))
-      val fresh = commitFiles(s, dir, kept,
-        math.min(numFiles, matched.size), cols)
-      onBeforeCommit()
-      writeDelta(dir, planned + 1, fresh, matched.map(_.path))
-      matched.size
-    }
-  }
+      keys: Seq[Long], numFiles: Int = 4): Int =
+    commitKeyed(s, dir, keyCol, Left(keys), None, numFiles)
 
   /** Upsert: rows of `updates` replace same-key rows (delete + insert
-    * in ONE committed version — readers never see the gap). Carrier
-    * by size ([[planKeyedMutation]]): small batches ship literals, a
-    * 10⁷-key correction batch stays distributed end-to-end. */
+    * in ONE committed version — readers never see the gap). Small
+    * batches ship their keys as literals, a 10⁷-key correction batch
+    * stays distributed end-to-end ([[planKeyedMutation]]). */
   def upsert(s: SparkSession, dir: String, keyCol: String,
-      updates: DataFrame, numFiles: Int = 4): Unit = {
-    withOcc(dir) { planned =>
-    enforceConstraints(s, dir, updates, planned) // LOGICAL space
-    // translate to the files' physical names for the write path
-    val cm = colMapAt(dir, planned)
-    val phys = toPhysical(updates, cm)
-    val pKey = physicalName(cm, keyCol)
-    val (matched, untouched, survivorsOf) =
-      planKeyedMutation(s, dir, pKey, keyFrame(phys, pKey), planned)
-    val cols = colsWith(dir, pKey)
-    val survivors =
-      if (matched.isEmpty) Nil
-      else commitFiles(s, dir, survivorsOf(
-        readSubset(s, dir, planned, matched.map(_.path))),
-        math.min(numFiles, matched.size), cols)
-    val inserted = commitFiles(s, dir, phys, numFiles, cols)
-    onBeforeCommit()
-    writeDelta(dir, planned + 1, survivors ++ inserted,
-      matched.map(_.path),
-      newCols = Some(phys.schema))
-    }
-  }
+      updates: DataFrame, numFiles: Int = 4): Unit =
+    commitKeyed(s, dir, keyCol, Right(keyFrame(updates, keyCol)),
+      Some(updates), numFiles)
 
   /** MERGE: deletes and upserts applied together in ONE committed
     * version — the `MERGE INTO` shape (matched update-rows replaced,
@@ -1509,33 +1509,9 @@ object TxnTable {
     * instead of up to twice. Update keys stay distributed (the
     * `deletes` list is request metadata and may ride the driver). */
   def merge(s: SparkSession, dir: String, keyCol: String,
-      updates: DataFrame, deletes: Seq[Long], numFiles: Int = 4): Unit = {
-    withOcc(dir) { planned =>
-      enforceConstraints(s, dir, updates, planned)
-      val delFrame = s.createDataFrame(
-        deletes.map(org.apache.spark.sql.Row(_)).asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("__k",
-            org.apache.spark.sql.types.LongType))))
-      val cm = colMapAt(dir, planned)
-      val phys = toPhysical(updates, cm)
-      val pKey = physicalName(cm, keyCol)
-      val affected = keyFrame(phys, pKey).union(delFrame).distinct()
-      val (matched, untouched, survivorsOf) =
-        planKeyedMutation(s, dir, pKey, affected, planned)
-      val cols = colsWith(dir, pKey)
-      val survivors =
-        if (matched.isEmpty) Nil
-        else commitFiles(s, dir, survivorsOf(
-          readSubset(s, dir, planned, matched.map(_.path))),
-          math.min(numFiles, matched.size), cols)
-      val inserted = commitFiles(s, dir, phys, numFiles, cols)
-      onBeforeCommit()
-      writeDelta(dir, planned + 1, survivors ++ inserted,
-        matched.map(_.path),
-        newCols = Some(phys.schema))
-    }
-  }
+      updates: DataFrame, deletes: Seq[Long], numFiles: Int = 4): Unit =
+    commitKeyed(s, dir, keyCol, Right(keyFrame(updates, keyCol)
+      .union(literalFrame(s, deletes)).distinct()), Some(updates), numFiles)
 
   /** MERGE from ONE `_op`-tagged DataFrame (the Debezium/CDC-feed
     * shape a streaming merge sink already holds): rows whose `opCol`
@@ -1597,32 +1573,11 @@ object TxnTable {
     // table rows), and only the post-compaction winners.
     val updates = compacted.filter(col(opCol).isNull ||
       col(opCol) =!= deleteOp).drop(seqCol.toSeq :+ opCol: _*)
-    try {
-    withOcc(dir) { planned =>
-      enforceConstraints(s, dir, updates, planned)
-      val cm = colMapAt(dir, planned)
-      val phys = toPhysical(updates, cm)
-      val pKey = physicalName(cm, keyCol)
-      // delete + upsert keys together: every affected row leaves its
-      // file in one rewrite pass, then upsert rows re-insert. The key
-      // frame comes off the LOGICAL compacted batch (keyCol is its
-      // spelling there); the rewrite plan runs in physical space.
-      val affected = keyFrame(compacted, keyCol)
-      val (matched, untouched, survivorsOf) =
-        planKeyedMutation(s, dir, pKey, affected, planned)
-      val cols = colsWith(dir, pKey)
-      val survivors =
-        if (matched.isEmpty) Nil
-        else commitFiles(s, dir, survivorsOf(
-          readSubset(s, dir, planned, matched.map(_.path))),
-          math.min(numFiles, matched.size), cols)
-      val inserted = commitFiles(s, dir, phys, numFiles, cols)
-      onBeforeCommit()
-      writeDelta(dir, planned + 1, survivors ++ inserted,
-        matched.map(_.path),
-        newCols = Some(phys.schema))
-    }
-    } finally { if (seqCol.isDefined) { compacted.unpersist(); () } }
+    // delete + upsert keys together: every affected row leaves its
+    // file in one rewrite pass, then upsert rows re-insert
+    try commitKeyed(s, dir, keyCol, Right(keyFrame(compacted, keyCol)),
+      Some(updates), numFiles)
+    finally { if (seqCol.isDefined) { compacted.unpersist(); () } }
   }
 
   /** OPTIMIZE: rewrite the whole live set as one freshly clustered
@@ -1686,7 +1641,7 @@ object TxnTable {
       // the stats channel and the files speak physical
       val pKey = physicalName(colMapAt(dir, planned), keyCol)
       val (live, rangeOf) = entryRanges(s, dir, pKey, planned)
-      val (matched, untouched) = live.partition { e =>
+      val matched = live.filter { e =>
         val (l, h) = rangeOf(e); h >= lo && l <= hi
       }
       val ranges = matched.map(rangeOf).sortBy(_._1)
@@ -1696,11 +1651,8 @@ object TxnTable {
         val clustered = readSubset(s, dir, planned, matched.map(_.path))
           .repartitionByRange(numFiles, col(pKey))
           .sortWithinPartitions(pKey)
-        val fresh = commitFiles(s, dir, clustered, numFiles = 0,
-          statsCols(dir))
-        onBeforeCommit()
-        writeDelta(dir, planned + 1, fresh, matched.map(_.path))
-        matched.size
+        commitDelta(dir, planned, commitFiles(s, dir, clustered,
+          numFiles = 0, statsCols(dir)), matched)
       }
     }
 
@@ -1716,14 +1668,9 @@ object TxnTable {
       numFiles: Int = 1): Int = withOcc(dir, rewrite = true) { planned =>
     val small = liveEntries(dir, planned).filter(_.bytes < minBytes)
     if (small.size <= numFiles) 0 // nothing worth packing
-    else {
-      val packed = commitFiles(s, dir,
-        readSubset(s, dir, planned, small.map(_.path)),
-        numFiles, statsCols(dir))
-      onBeforeCommit()
-      writeDelta(dir, planned + 1, packed, small.map(_.path))
-      small.size
-    }
+    else commitDelta(dir, planned, commitFiles(s, dir,
+      readSubset(s, dir, planned, small.map(_.path)),
+      numFiles, statsCols(dir)), small)
   }
 
   /** Table history — one row per committed version: (version, live

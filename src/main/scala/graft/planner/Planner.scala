@@ -376,7 +376,9 @@ object Planner {
         // non-base dims always have their parent in the (trimmed)
         // chain; a missing one is a bug — fail fast, never guess
         val parentDf = d.parent.map(dimDfs).getOrElse(factSide)
-        val fk = resolveFk(m, fact, d, twoStage)
+        // the FK lives on the fact side for a chain-root dim, in the
+        // parent dim table for a child dim
+        val fk = d.fkInParent
         val cond = parentDf.col(fk) === dimDf.col(d.key)
         // fact-eliminated chains are pure listings: parents inner-join
         // (LOJ would fabricate NULL parent attrs for dangling FKs)
@@ -543,11 +545,6 @@ object Planner {
     val projected = paged.select(m.selects.map(r => col(r.alias)): _*)
     Planned(projected, fact.name, twoStage, dimPageable)
   }
-
-  /** FK column for a chain-root dim lives on the fact side; for child
-    * dims it lives in the parent dim table. */
-  private def resolveFk(m: Model, fact: FactDef, d: DimDef, twoStage: Boolean): String =
-    d.fkInParent
 
   /** Storage→display rendering (static mapping / day grain / local
     * timezone for point-in-time grains). */

@@ -132,12 +132,19 @@ final class HttpFrontDoor(s: SparkSession, dir: String, reg: Registry,
       monitored(reqId, "report") {
       val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
       val start = System.currentTimeMillis()
-      try {
+      val parsed = graft.analyzer.request.parse(body)
+      // an async body skips the sync pagination guard, so it would run
+      // the whole query before the envelope cap refused it: refuse it
+      // before planning, as POST /jobs refuses a sync body
+      if (parsed.exists(_.async))
+        (400, s"""{"error":${Domain.jStr("/report serves sync requests; " +
+          "submit async requests to POST /jobs")}}""", reqId)
+      else try {
         // plan against the INJECTED registry — /sql and /domain already
         // do; a custom-registry front door must not silently serve
         // /report from the default demo registry (caught by the soak)
         val df = SemanticQueries.runLogged(body, reqId, reg)(s, dir)
-        val cube = graft.analyzer.request.parse(body).map(_.cube).getOrElse("")
+        val cube = parsed.map(_.cube).getOrElse("")
         (200, servePage(reqId, cube, syncCap(cube), start, df), reqId)
       } catch {
         case e: IllegalArgumentException =>

@@ -169,54 +169,61 @@ class HttpFrontDoorSpec extends AnyFunSuite {
     val mem = new RequestLog.InMemoryWriter
     val prev = SemanticQueries.requestLogWriter
     SemanticQueries.requestLogWriter = mem
-    // maxRowsSync = 2: an async-typed body skips the plan-time
-    // pagination guard, so only the envelope's bound stops its 5 rows
-    val capped = graft.semantic.model.Registry(
-      SemanticQueries.orderCube.copy(maxRowsSync = Some(2)))
-    val jobs = new JobQueue(spark, sf, java.nio.file.Files.createTempDirectory("httpcap"))
-    val door = new HttpFrontDoor(spark, sf, capped, jobs)
-    val port = door.start()
     try {
-      val fields = """"selectFields": [{"field": "Order Priority"}, {"field": "Order Count"}]"""
-      val over = post(port, "/report",
-        s"""{"cube": "order_stats", "requestType": "async", $fields}""",
-        Map("X-Request-Id" -> "cap-1"))
-      assert(over.statusCode() == 400 && over.body().contains("2-row page cap"), over.body())
-      val done = mem.records.filter(_.requestId == "cap-1-served")
-      assert(done.size == 1 && done.head.status == 400 &&
-        done.head.errorMessage.exists(_.contains("2-row page cap")), done)
-      val page = post(port, "/report",
-        s"""{"cube": "order_stats", "rowsPerPage": 2, $fields}""")
-      assert(page.statusCode() == 200 && page.body().contains("\"rowCount\":2"), page.body())
-    } finally {
-      door.stop(); jobs.shutdown()
-      SemanticQueries.requestLogWriter = prev
-    }
-    // the default sync cap: 8,623 (day, priority) rows at sf0.01
-    val sf01 = sf.replace("sf0.001", "sf0.01")
-    val jobs1 = new JobQueue(spark, sf01,
-      java.nio.file.Files.createTempDirectory("httpcap1"))
-    val door1 = new HttpFrontDoor(spark, sf01, SemanticQueries.registry, jobs1)
-    val port1 = door1.start()
-    try {
-      val r = post(port1, "/sql",
-        "SELECT `Order Date`, `Order Priority`, `Order Count` FROM order_stats")
-      assert(r.statusCode() == 400 &&
-        r.body().contains(s"${graft.serving.Serving.SyncMaxRows}-row page cap"), r.body())
-      // a completed job over the async cap is refused from its row count
-      val big = jobs1.submitTask("over-cap")(
-        _.range(graft.serving.Serving.AsyncMaxRows + 1L).toDF("id"))
-      var st = get(port1, s"/jobs/$big")
-      val deadline = System.currentTimeMillis() + 120000
-      while (st.statusCode() == 200 && !st.body().contains("completed") &&
-          System.currentTimeMillis() < deadline) {
-        Thread.sleep(100)
-        st = get(port1, s"/jobs/$big")
-      }
-      assert(st.statusCode() == 400 &&
-        st.body().contains(s""""rowCount":${graft.serving.Serving.AsyncMaxRows + 1}""") &&
-        st.body().contains(s"${graft.serving.Serving.AsyncMaxRows}-row"), st.body())
-    } finally { door1.stop(); jobs1.shutdown() }
+      // maxRowsSync = 2: a sync body must paginate within it, and an
+      // async-typed body — which skips that guard — is refused at the
+      // door before planning (zero Spark jobs), naming POST /jobs
+      val capped = graft.semantic.model.Registry(
+        SemanticQueries.orderCube.copy(maxRowsSync = Some(2)))
+      val jobs = new JobQueue(spark, sf, java.nio.file.Files.createTempDirectory("httpcap"))
+      val door = new HttpFrontDoor(spark, sf, capped, jobs)
+      val port = door.start()
+      try {
+        val fields = """"selectFields": [{"field": "Order Priority"}, {"field": "Order Count"}]"""
+        var async: HttpResponse[String] = null
+        val asyncJobs = ServeProbes.jobsDuring(spark) {
+          async = post(port, "/report",
+            s"""{"cube": "order_stats", "requestType": "async", $fields}""",
+            Map("X-Request-Id" -> "async-1"))
+        }
+        assert(async.statusCode() == 400 && async.body().contains("POST /jobs"), async.body())
+        assert(asyncJobs == 0, s"an async /report body ran $asyncJobs Spark jobs")
+        assert(!mem.records.exists(_.requestId.startsWith("async-1")),
+          "a refused async body is never planned or served")
+        val page = post(port, "/report",
+          s"""{"cube": "order_stats", "rowsPerPage": 2, $fields}""")
+        assert(page.statusCode() == 200 && page.body().contains("\"rowCount\":2"), page.body())
+      } finally { door.stop(); jobs.shutdown() }
+      // the default sync cap: 8,623 (day, priority) rows at sf0.01
+      val sf01 = sf.replace("sf0.001", "sf0.01")
+      val jobs1 = new JobQueue(spark, sf01,
+        java.nio.file.Files.createTempDirectory("httpcap1"))
+      val door1 = new HttpFrontDoor(spark, sf01, SemanticQueries.registry, jobs1)
+      val port1 = door1.start()
+      try {
+        val cap = s"${graft.serving.Serving.SyncMaxRows}-row page cap"
+        val r = post(port1, "/sql",
+          "SELECT `Order Date`, `Order Priority`, `Order Count` FROM order_stats",
+          Map("X-Request-Id" -> "cap-1"))
+        assert(r.statusCode() == 400 && r.body().contains(cap), r.body())
+        val done = mem.records.filter(_.requestId == "cap-1-served")
+        assert(done.size == 1 && done.head.status == 400 &&
+          done.head.errorMessage.exists(_.contains(cap)), done)
+        // a completed job over the async cap is refused from its row count
+        val big = jobs1.submitTask("over-cap")(
+          _.range(graft.serving.Serving.AsyncMaxRows + 1L).toDF("id"))
+        var st = get(port1, s"/jobs/$big")
+        val deadline = System.currentTimeMillis() + 120000
+        while (st.statusCode() == 200 && !st.body().contains("completed") &&
+            System.currentTimeMillis() < deadline) {
+          Thread.sleep(100)
+          st = get(port1, s"/jobs/$big")
+        }
+        assert(st.statusCode() == 400 &&
+          st.body().contains(s""""rowCount":${graft.serving.Serving.AsyncMaxRows + 1}""") &&
+          st.body().contains(s"${graft.serving.Serving.AsyncMaxRows}-row"), st.body())
+      } finally { door1.stop(); jobs1.shutdown() }
+    } finally SemanticQueries.requestLogWriter = prev
   }
 
   test("POST /index search bounds k, nprobe and queries x k") {

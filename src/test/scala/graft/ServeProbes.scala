@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import graft.operators.SemanticQueries
 
-/** Shared by the specs that pin the served request path's Spark work:
-  * the request bodies and a job counter (a load-independent cost,
-  * unlike latency). */
+/** Shared by the specs that pin the Spark work of the served request
+  * path and of the table mutations: the request bodies, a job counter
+  * (a load-independent cost, unlike latency) and a plan recorder. */
 object ServeProbes {
 
   /** Every `sem*Json` / `cur*Json` request body SemanticQueries
@@ -43,5 +43,23 @@ object ServeProbes {
       settle()
       counter.get() - 1 // minus the closing sentinel
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** The physical plan descriptions of the SQL executions `body`
+    * starts, collected off the listener bus flushed as [[jobsDuring]]
+    * flushes it: what actually ran, not a plan rebuilt beside it. */
+  def plansDuring(spark: SparkSession)(body: => Unit): Seq[String] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case st: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          plans.add(st.physicalPlanDescription); ()
+        case _ => ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { jobsDuring(spark)(body); plans.toArray(Array.empty[String]).toSeq }
+    finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -39,6 +39,15 @@ class TxnTableSpec extends AnyFunSuite {
       s"the refusal must name the upgrade: ${ex.getMessage}")
   }
 
+  /** The plans a keyed mutation ran rewrote its survivors with a LEFT
+    * ANTI join, and none carries a literal IN / INSET key tree. */
+  private def assertAntiJoinOnly(plans: Seq[String]): Unit = {
+    assert(plans.exists(_.contains("LeftAnti")),
+      s"expected an anti-join survivor rewrite:\n${plans.mkString("\n")}")
+    assert(!plans.exists(p => p.contains(" IN (") || p.contains("INSET")),
+      "no literal IN tree at any key scale")
+  }
+
   /** (relative name -> (mtime, bytes)) of every file under `dir`. */
   private def fileStates(dir: String): Map[String, (Long, Seq[Byte])] = {
     val root = java.nio.file.Paths.get(dir)
@@ -935,15 +944,11 @@ class TxnTableSpec extends AnyFunSuite {
     // is ordinary distributed data
     val updates = (0L until 1000000L).toDF("k")
       .withColumn("payload", -col("k"))
-    // plan shape: the survivors frame must rewrite via LEFT ANTI join
-    // — never a literal IN tree
-    val keys = updates.select(col("k").cast("long").as("__k")).distinct()
-    val matched = TxnTable.liveEntries(dir)
-    val plan = TxnTable.survivorsFrame(spark, dir, matched, "k", keys)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("LeftAnti"), s"expected an anti-join plan:\n$plan")
-    assert(!plan.contains(" IN ("), "no literal IN tree at any key scale")
-    TxnTable.upsert(spark, dir, "k", updates, numFiles = 8)
+    // plan shape: the survivors must rewrite via LEFT ANTI join —
+    // never a literal IN tree
+    val plans = ServeProbes.plansDuring(spark) {
+      TxnTable.upsert(spark, dir, "k", updates, numFiles = 8) }
+    assertAntiJoinOnly(plans)
     val after = TxnTable.read(spark, dir)
     assert(after.count() == 2000000L)
     assert(after.filter(col("k") < 1000000L && col("payload") =!= -col("k"))
@@ -956,6 +961,31 @@ class TxnTableSpec extends AnyFunSuite {
       TxnTable.liveFiles(dir).toSet
     assert(carried.nonEmpty,
       "range pruning must carry the unmatched half by reference")
+  }
+
+  test("a deleteKeys list over literalKeyMax takes the anti-join carrier; NULL-key rows survive") {
+    val dir = graft.core.TempDirs.scratchShared("txntable")
+    import spark.implicits._
+    val n = TxnTable.literalKeyMax + 1
+    val src = (0L until 3L * n).map(k => (Option(k), k * 2)) :+
+      ((Option.empty[Long], -1L))
+    TxnTable.init(spark, dir, src.toDF("k", "payload")
+        .repartitionByRange(4, col("k")).sortWithinPartitions("k"),
+      numFiles = 0, statsCols = Seq("k"))
+    // every even key below 2n: one key past the literal carrier's
+    // limit, spread over the lower files — the NULL-key row's included
+    val keys = (0L until 2L * n by 2L)
+    assert(keys.size == n)
+    var rewritten = 0
+    val plans = ServeProbes.plansDuring(spark) {
+      rewritten = TxnTable.deleteKeys(spark, dir, "k", keys) }
+    assert(rewritten > 0 && TxnTable.version(dir) == 2)
+    assertAntiJoinOnly(plans)
+    val gone = keys.toSet
+    val model = src.filter(_._1.forall(k => !gone(k))).toSet
+    val after = TxnTable.read(spark, dir).as[(Option[Long], Long)].collect()
+    assert(after.length == model.size && after.toSet == model,
+      "the result must equal the model's, the NULL-key row included")
   }
 
   test("CHECK constraints reject bad batches atomically; NULL passes; drop lifts") {
@@ -1449,13 +1479,9 @@ class TxnTableSpec extends AnyFunSuite {
       .unionByName(Seq((1500000L, -7L, "upsert"), (2500000L, -8L, "upsert"))
         .toDF("k", "payload", "_op"))
     // plan shape on the survivor rewrite: anti-join, no literal IN
-    val keys = changes.select(col("k").cast("long").as("__k")).distinct()
-    val plan = TxnTable.survivorsFrame(spark, dir,
-      TxnTable.liveEntries(dir), "k", keys)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("LeftAnti"), s"expected an anti-join plan:\n$plan")
-    assert(!plan.contains(" IN ("), "no literal IN tree at any key scale")
-    TxnTable.mergeFrame(spark, dir, "k", changes, numFiles = 8)
+    val plans = ServeProbes.plansDuring(spark) {
+      TxnTable.mergeFrame(spark, dir, "k", changes, numFiles = 8) }
+    assertAntiJoinOnly(plans)
     val after = TxnTable.read(spark, dir)
     assert(after.count() == 2000000L - 1000000L + 1,
       "1M deleted, one replaced in place, one inserted")
