@@ -65,8 +65,9 @@ object Tables {
     * equal size and mtime; a directory by the sorted relative names,
     * sizes, mtimes and file keys of every file below it (partition
     * subdirectories included). Both footer facts of a table, [[tbl]]'s
-    * schema and [[tableRows]], key on it. */
-  private[core] def fileStamp(path: String): Option[String] =
+    * schema and [[tableRows]], key on it, and so does every input file
+    * of a served page ([[graft.serving.PageCache]]). */
+  private[graft] def fileStamp(path: String): Option[String] =
     try {
       val root = Paths.get(path)
       val lines = leafFiles(root).map { case (p, a) =>

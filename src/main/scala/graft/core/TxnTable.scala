@@ -64,8 +64,9 @@ import org.apache.spark.sql.functions._
   * [[merge]], [[mergeFrame]]) commit through one method,
   * [[commitKeyed]], and one carrier chosen BY SIZE
   * ([[planKeyedMutation]]). A key set of at most 10⁴ distinct keys —
-  * a `deleteKeys` list that short (no job), or a key frame whose one
-  * `limit` probe comes back complete — ships as a literal
+  * a `deleteKeys` list that short (no job), or a key frame whose raw
+  * `limit` probe comes back complete (deduped on the driver; a
+  * `distinct` probe runs only past 10⁴ raw keys) — ships as a literal
   * (scan-pushable — the everyday takedown or correction batch pays
   * exactly the small-batch cost). Anything larger takes the frame
   * carrier: the rewrite set is planned by joining the key frame
@@ -1351,12 +1352,14 @@ object TxnTable {
     live.filter { e => val (lo, hi) = rangeOf(e); anyKeyIn(lo, hi) }
   }
 
-  /** `updates`' key set as a one-column frame `__k` (long, non-null,
-    * distinct) — the DISTRIBUTED key carrier: the keys themselves
-    * never leave the cluster. */
+  /** `updates`' keys as a one-column frame `__k` (long, non-null, NOT
+    * deduplicated: [[planKeyedMutation]] dedupes a small probe on the
+    * driver and adds the `distinct` only where the set is large) — the
+    * DISTRIBUTED key carrier: the keys themselves never leave the
+    * cluster. */
   private def keyFrame(updates: DataFrame, keyCol: String): DataFrame =
     updates.select(col(keyCol).cast("long").as("__k"))
-      .filter(col("__k").isNotNull).distinct()
+      .filter(col("__k").isNotNull)
 
   /** A driver-side key list as a `__k` frame. */
   private def literalFrame(s: SparkSession, keys: Seq[Long]): DataFrame =
@@ -1376,22 +1379,31 @@ object TxnTable {
   /** Plan a mutation keyed by `keys`: returns (matched, survivorsOf)
     * where `survivorsOf(matchedRows)` filters out the keyed rows with
     * NULL-correct semantics. THE CARRIER DECISION, by size: a key set
-    * of at most [[literalKeyMax]] keys — a list that short, or a frame
-    * whose one `limit(max+1).collect()` probe comes back complete —
+    * of at most [[literalKeyMax]] distinct keys — a list that short, or
+    * a frame whose `limit(max+1).collect()` probe comes back complete —
     * ships as a literal (a list runs no job here, a frame only the
     * probe); anything larger takes the frame carrier (manifest-range
     * join + left_anti rewrite), so an oversized frame's keys never land
-    * on the driver and an oversized list never becomes an `IN` tree. */
+    * on the driver and an oversized list never becomes an `IN` tree.
+    * The probe reads the raw key column and dedupes on the driver; only
+    * when more than `max` raw keys come back does a second probe run
+    * over the `distinct` frame (a shuffle), so duplicate keys pick the
+    * same carrier as before and a small batch pays no shuffle to learn
+    * that it is small. */
   private def planKeyedMutation(s: SparkSession, dir: String,
       keyCol: String, keys: KeySet, planned: Int)
       : (Seq[FileEntry], DataFrame => DataFrame) = {
-    val lits = keys.fold(_.distinct,
-      _.limit(literalKeyMax + 1).collect().map(_.getLong(0)).toSeq)
+    def probe(f: DataFrame): Seq[Long] =
+      f.limit(literalKeyMax + 1).collect().map(_.getLong(0)).toSeq
+    val lits = keys.fold(_.distinct, { f =>
+      val raw = probe(f)
+      if (raw.length <= literalKeyMax) raw.distinct else probe(f.distinct())
+    })
     if (lits.length <= literalKeyMax)
       (matchedEntries(s, dir, keyCol, lits, planned),
         _.filter(col(keyCol).isNull || !col(keyCol).isin(lits: _*)))
     else {
-      val frame = keys.getOrElse(literalFrame(s, lits))
+      val frame = keys.fold(_ => literalFrame(s, lits), _.distinct())
       (matchedEntriesByFrame(s, dir, keyCol, frame, planned),
         _.join(frame, col(keyCol).cast("long") === col("__k"), "left_anti"))
     }
@@ -1511,7 +1523,7 @@ object TxnTable {
   def merge(s: SparkSession, dir: String, keyCol: String,
       updates: DataFrame, deletes: Seq[Long], numFiles: Int = 4): Unit =
     commitKeyed(s, dir, keyCol, Right(keyFrame(updates, keyCol)
-      .union(literalFrame(s, deletes)).distinct()), Some(updates), numFiles)
+      .union(literalFrame(s, deletes))), Some(updates), numFiles)
 
   /** MERGE from ONE `_op`-tagged DataFrame (the Debezium/CDC-feed
     * shape a streaming merge sink already holds): rows whose `opCol`

@@ -54,13 +54,23 @@ object Freshness {
     * the very next request re-infers and reflects the landed data —
     * including re-broadcasting changed dims. (A file landed WITHOUT the
     * hook changes its identity, so its schema is re-inferred as well.)
+    * Last, it bumps [[generation]], which drops every front door's
+    * page cache ([[graft.serving.PageCache]]).
     * Returns the number of session cache entries dropped in step 2. */
   def refresh(s: SparkSession, dir: String): Int = {
     memo.keySet.removeIf(_._1 == dir)
     val dropped = graft.core.Caches.invalidateMatching(s, dir)
     s.catalog.refreshByPath(dir)
+    refreshes.incrementAndGet()
     dropped
   }
+
+  private val refreshes = new java.util.concurrent.atomic.AtomicLong()
+
+  /** How many [[refresh]] calls have completed in this JVM. A cache of
+    * served answers holds the value it was filled under and drops its
+    * entries when this moves on. */
+  def generation: Long = refreshes.get()
 
   def forFact(s: SparkSession, dir: String, f: FactDef): TableFreshness =
     memo.computeIfAbsent((dir, f.table), _ => compute(s, dir, f))

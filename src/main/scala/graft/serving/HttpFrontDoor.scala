@@ -24,7 +24,18 @@ import graft.semantic.model.Registry
   *                           Both serve one page capped at the cube's
   *                           `maxRowsSync` (default Serving.SyncMaxRows,
   *                           5,000): a larger result answers 400 naming
-  *                           the cap, never a truncated page
+  *                           the cap, never a truncated page.
+  *                           Both answer a repeated page from this
+  *                           door's PageCache with no Spark job: keyed
+  *                           by the canonical analyzed plan, the cap and
+  *                           every input file's identity (size, ns
+  *                           mtime, inode), so a file landed without
+  *                           /refresh, or a new TxnTable version,
+  *                           misses; never cached: nondeterministic or
+  *                           clock-reading plans, leaves other than
+  *                           file scans and local relations (JDBC),
+  *                           and 400s; LRU within 256 pages and 32 MiB;
+  *                           dropped by every Freshness.refresh
   *   GET  /domain            Domain.domainJson (+freshness)
   *   POST /jobs              async submit → {"jobId": …}
   *   GET  /jobs/{id}         status; completed jobs embed the envelope,
@@ -115,6 +126,9 @@ final class HttpFrontDoor(s: SparkSession, dir: String, reg: Registry,
     finally ServiceMonitor.safely(monitor.complete(
       reqId, kind, outcome, System.currentTimeMillis() - t0))
   }
+
+  /** Served /report and /sql pages ([[servePage]]). */
+  private val pages = new PageCache(PageCache.MaxEntries, PageCache.MaxBytes)
 
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4,
@@ -654,19 +668,26 @@ final class HttpFrontDoor(s: SparkSession, dir: String, reg: Registry,
   private def syncCap(cube: String): Int =
     reg.cube(cube).toOption.flatMap(_.maxRowsSync).getOrElse(Serving.SyncMaxRows)
 
-  /** Serializes a sync page under `cap` and writes the request's one
-    * completion record, `$reqId-served`: a success record, or, for a
-    * page over the cap, a failure record carrying the cap message
-    * (the IllegalArgumentException is rethrown for the 400). */
+  /** Serializes a sync page under `cap`, or takes it from [[pages]]
+    * when the same plan over the same files was served before, and
+    * writes the request's one completion record, `$reqId-served`: a
+    * success record, or, for a page over the cap, a failure record
+    * carrying the cap message (the IllegalArgumentException is rethrown
+    * for the 400; a refused page is never cached). */
   private def servePage(reqId: String, cube: String, cap: Int, start: Long,
       df: org.apache.spark.sql.DataFrame): String = {
-    val env =
-      try Serving.jsonEnvelope(df, cap)
-      catch { case e: IllegalArgumentException =>
-        SemanticQueries.requestLogWriter.write(RequestLog.failure(
-          s"$reqId-served", cube, e.getMessage, start, System.currentTimeMillis()))
-        throw e
-      }
+    val key = PageCache.keyOf(df, cap)
+    val env = key.flatMap(pages.get).getOrElse {
+      val fresh =
+        try Serving.jsonEnvelope(df, cap)
+        catch { case e: IllegalArgumentException =>
+          SemanticQueries.requestLogWriter.write(RequestLog.failure(
+            s"$reqId-served", cube, e.getMessage, start, System.currentTimeMillis()))
+          throw e
+        }
+      key.foreach(pages.put(_, fresh))
+      fresh
+    }
     SemanticQueries.requestLogWriter.write(RequestLog.served(
       s"$reqId-served", cube, start, System.currentTimeMillis()))
     env
