@@ -25,17 +25,10 @@ import graft.semantic.model.Registry
   *                           `maxRowsSync` (default Serving.SyncMaxRows,
   *                           5,000): a larger result answers 400 naming
   *                           the cap, never a truncated page.
-  *                           Both answer a repeated page from this
-  *                           door's PageCache with no Spark job: keyed
-  *                           by the canonical analyzed plan, the cap and
-  *                           every input file's identity (size, ns
-  *                           mtime, inode), so a file landed without
-  *                           /refresh, or a new TxnTable version,
-  *                           misses; never cached: nondeterministic or
-  *                           clock-reading plans, leaves other than
-  *                           file scans and local relations (JDBC),
-  *                           and 400s; LRU within 256 pages and 32 MiB;
-  *                           dropped by every Freshness.refresh
+  *                           Both answer a repeated page over unchanged
+  *                           input files from this door's PageCache
+  *                           with no Spark job (key, exclusions and
+  *                           bounds: PageCache)
   *   GET  /domain            Domain.domainJson (+freshness)
   *   POST /jobs              async submit → {"jobId": …}
   *   GET  /jobs/{id}         status; completed jobs embed the envelope,
@@ -129,6 +122,9 @@ final class HttpFrontDoor(s: SparkSession, dir: String, reg: Registry,
 
   /** Served /report and /sql pages ([[servePage]]). */
   private val pages = new PageCache(PageCache.MaxEntries, PageCache.MaxBytes)
+
+  /** The page cache's size and its hit, miss and eviction counts. */
+  private[graft] def pageStats: PageCache.Stats = pages.stats
 
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4,

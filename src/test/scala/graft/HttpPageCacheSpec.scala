@@ -58,18 +58,24 @@ class HttpPageCacheSpec extends AnyFunSuite {
     try f(mem) finally SemanticQueries.requestLogWriter = prev
   }
 
-  /** A one-fact cube over `view` grouping `dim` and summing `metric`. */
+  /** A one-fact cube over `view` grouping `dim` as `group` and summing
+    * `metric` as `total`. */
+  private def cubeDef(name: String, dim: String, metric: org.apache.spark.sql.DataFrame =>
+      org.apache.spark.sql.Column, view: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+      group: String = "Group", total: String = "Total") =
+    CubeDef(name = name,
+      variants = Seq(FactDef(name = s"${name}_base", table = "orders",
+        dimCols = Seq(PubCol(group, dim)),
+        metrics = Seq(PubMetric(total, SumRollup, metric)),
+        cost = 1, view = Some(view))),
+      dims = Nil)
+
   private def cube(name: String, dim: String, metric: org.apache.spark.sql.DataFrame =>
       org.apache.spark.sql.Column, view: (SparkSession, String) => org.apache.spark.sql.DataFrame) =
-    Registry(CubeDef(name = name,
-      variants = Seq(FactDef(name = s"${name}_base", table = "orders",
-        dimCols = Seq(PubCol("Group", dim)),
-        metrics = Seq(PubMetric("Total", SumRollup, metric)),
-        cost = 1, view = Some(view))),
-      dims = Nil))
+    Registry(cubeDef(name, dim, metric, view))
 
-  private def totalReport(name: String) =
-    s"""{"cube":"$name","selectFields":[{"field":"Group"},{"field":"Total"}]}"""
+  private def totalReport(name: String, group: String = "Group", total: String = "Total") =
+    s"""{"cube":"$name","selectFields":[{"field":"$group"},{"field":"$total"}]}"""
 
   test("a repeated /report or /sql body answers byte-identically with no Spark " +
       "job, one -served record and one monitor bracket per request") {
@@ -94,6 +100,32 @@ class HttpPageCacheSpec extends AnyFunSuite {
         assert(mon.started("sql") == 2 && mon.succeeded("sql") == 2)
       }
     }
+  }
+
+  test("two cubes that publish the same expression under different names " +
+      "do not share a page") {
+    // canonicalization erases aliases, so only the key's schema tells them apart
+    val view: (SparkSession, String) => org.apache.spark.sql.DataFrame = Tables.orders
+    val reg = Registry(
+      cubeDef("named_a", "o_orderstatus", _.col("o_totalprice"), view),
+      cubeDef("named_b", "o_orderstatus", _.col("o_totalprice"), view,
+        group = "Status", total = "Revenue"))
+    val jobs = new JobQueue(spark, sf, Files.createTempDirectory("pagecache"))
+    val door = new HttpFrontDoor(spark, sf, reg, jobs)
+    val port = door.start()
+    try {
+      val a = post(port, "/report", totalReport("named_a"))
+      assert(a.statusCode() == 200 && a.body().contains("\"fieldName\":\"Group\""), a.body())
+      val (b, missJobs) = counted(port, "/report", totalReport("named_b", "Status", "Revenue"))
+      assert(b.statusCode() == 200 && b.body().contains("\"fieldName\":\"Status\"") &&
+        b.body().contains("\"fieldName\":\"Revenue\"") && !b.body().contains("Total"),
+        b.body().take(300))
+      assert(missJobs > 0, "a page served under other names was answered from the cache")
+      val (again, hitJobs) = counted(port, "/report", totalReport("named_a"))
+      assert(again.body() == a.body() && hitJobs == 0, s"$hitJobs jobs")
+      val st = door.pageStats
+      assert(st.entries == 2 && st.hits == 1 && st.misses == 2, st)
+    } finally { door.stop(); jobs.shutdown() }
   }
 
   test("a table file replaced without /refresh misses and serves the new answer") {
@@ -208,6 +240,15 @@ class HttpPageCacheSpec extends AnyFunSuite {
     assert(PageCache.keyOf(graft.core.JdbcSource.dim(spark, url, "page_fact"), 10).isEmpty)
     assert(PageCache.keyOf(orders.filter(col("o_orderkey").isin(
       spark.range(3).toDF())), 10).isEmpty, "a range leaf inside a subquery")
+    // a key names its files but holds none of the scan's objects (a file
+    // index and its Hadoop configuration), and tells two copies apart
+    val key = PageCache.keyOf(orders, 10).get
+    assert(key.plan.collectWithSubqueries {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r }.isEmpty,
+      key.plan.treeString)
+    assert(PageCache.keyOf(Tables.orders(spark, sf), 10).contains(key))
+    assert(!PageCache.keyOf(Tables.orders(spark, sf.replace("sf0.001", "sf0.01")), 10)
+      .contains(key))
   }
 
   test("the byte budget and the entry count evict least recently used pages; " +
@@ -221,19 +262,21 @@ class HttpPageCacheSpec extends AnyFunSuite {
     cache.put(keys(2), page)
     assert(cache.get(keys(1)).isEmpty, "over the byte budget, the LRU page goes")
     assert(cache.get(keys(0)).contains(page) && cache.get(keys(2)).contains(page))
-    assert(cache.usage == ((2, 800L)))
+    assert(cache.stats == PageCache.Stats(entries = 2, bytes = 800L, hits = 3,
+      misses = 1, evictions = 1))
     cache.put(keys(3), "y" * 600)
-    assert(cache.get(keys(3)).isEmpty && cache.usage == ((2, 800L)),
-      "a page over the whole budget is never stored")
+    assert(cache.get(keys(3)).isEmpty && cache.stats.entries == 2 &&
+      cache.stats.bytes == 800L, "a page over the whole budget is never stored")
     val few = new PageCache(maxEntries = 2, maxBytes = 1L << 20)
     keys.take(3).foreach(few.put(_, page))
-    assert(few.get(keys(0)).isEmpty && few.usage._1 == 2)
+    assert(few.get(keys(0)).isEmpty && few.stats.entries == 2 && few.stats.evictions == 1)
     // a refresh drops every entry, and a key made before it is not stored
     val stale = keys(3)
     Freshness.refresh(spark, TempDirs.scratch("pagerefresh"))
-    assert(cache.get(keys(0)).isEmpty && cache.usage == ((0, 0L)))
+    assert(cache.get(keys(0)).isEmpty && cache.stats.entries == 0 &&
+      cache.stats.bytes == 0L && cache.stats.evictions == 1, "a refresh evicts nothing")
     cache.put(stale, page)
-    assert(cache.usage == ((0, 0L)))
+    assert(cache.stats.entries == 0)
     val fresh = PageCache.keyOf(region, 4).get
     cache.put(fresh, page)
     assert(cache.get(fresh).contains(page))
